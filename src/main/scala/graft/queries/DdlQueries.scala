@@ -2101,7 +2101,7 @@ object DdlQueries extends QueryModule {
     // Per-partition rollup (Iceberg's `partitions` metadata table): the
     // relation users query for skew/file-size audits. Each INSERT on a
     // hidden-partitioned table writes ONE file per touched tuple
-    // (writePartitionedData's small-files discipline), so n_files per
+    // (partitionShaped's small-files discipline), so n_files per
     // partition is exactly the number of inserts containing that value
     // — stated as a literal in the relational oracle alongside the
     // recomputed per-partition row counts.
@@ -2434,8 +2434,8 @@ object DdlQueries extends QueryModule {
         SnapshotLog.commit(c.filter(col("k") % 2 === 0), root,
           overwrite = true, commitTsMs = 1000L)
         SnapshotLog.createBranch(s, root, "audit", 1)
-        SnapshotLog.commitToBranch(s, root, "audit",
-          c.filter(col("k") % 2 === 1), 2000L)
+        SnapshotLog.commit(c.filter(col("k") % 2 === 1), root, overwrite = false,
+          2000L, branch = Some("audit"))
       }
       // pre-publish states read OUT of the build-once fixture; the
       // publish itself happens here only once (memoized via version count)
@@ -2462,8 +2462,8 @@ object DdlQueries extends QueryModule {
     }),
 
     // WAP WITH DML (r18): the audit step of write-audit-publish usually
-    // FINDS something — deleteWhereMoRBranch deletes the failing rows ON
-    // THE BRANCH (same MoR staging as mainline, snapshot carries
+    // FINDS something — deleteWhereMoR deletes the failing rows ON THE
+    // BRANCH (same MoR staging as mainline, snapshot carries
     // ref=audit, branch ref advances, main untouched), then fast_forward
     // publishes the corrected content. The publish still lands as an
     // APPEND (the branch only added files + delete files over them), so
@@ -2476,12 +2476,12 @@ object DdlQueries extends QueryModule {
         SnapshotLog.commit(c.filter(col("k") % 2 === 0), root,
           overwrite = true, commitTsMs = 1000L)
         SnapshotLog.createBranch(s, root, "audit", 1)
-        SnapshotLog.commitToBranch(s, root, "audit",
-          c.filter(col("k") % 2 === 1), 2000L)
+        SnapshotLog.commit(c.filter(col("k") % 2 === 1), root, overwrite = false,
+          2000L, branch = Some("audit"))
         // the audit: staged rows with a negative balance fail — delete
         // them on the branch before anyone publishes
-        SnapshotLog.deleteWhereMoRBranch(s, root, "audit",
-          col("k") % 2 === 1 && col("bal") < 0, 3000L): Unit
+        SnapshotLog.deleteWhereMoR(s, root, col("k") % 2 === 1 && col("bal") < 0,
+          3000L, branch = Some("audit")): Unit
       }
       def agg(df: DataFrame, stage: String): DataFrame =
         df.agg(count(lit(1)).as("n_rows"),
@@ -2506,8 +2506,8 @@ object DdlQueries extends QueryModule {
     }),
 
     // WAP MERGE (r19): the audit-fix that needs UPSERT semantics —
-    // upsertEqualityMoRBranch stages ONE equality-delete + append
-    // snapshot ON THE BRANCH (ref=audit, upsert.mode=merge-on-read-
+    // upsertEqualityMoR stages ONE equality-delete + append snapshot ON
+    // THE BRANCH (ref=audit, upsert.mode=merge-on-read-
     // equality): corrected rows replace failing ones BY KEY and
     // brand-new rows land, all pre-publish (no publish-then-merge
     // detour); fast_forward then publishes the merged content, still as
@@ -2523,16 +2523,16 @@ object DdlQueries extends QueryModule {
         SnapshotLog.commit(c.filter(col("k") % 2 === 0), root,
           overwrite = true, commitTsMs = 1000L)
         SnapshotLog.createBranch(s, root, "audit", 1)
-        SnapshotLog.commitToBranch(s, root, "audit",
-          c.filter(col("k") % 2 === 1), 2000L)
+        SnapshotLog.commit(c.filter(col("k") % 2 === 1), root, overwrite = false,
+          2000L, branch = Some("audit"))
         // the audit finds fixable rows (k % 10 = 1 → bal + 1000) and
         // MISSING rows (negated keys) — one merge commit on the branch
         val fix = c.filter(col("k") % 10 === 1)
           .select(col("k"), (col("bal") + 1000.0).as("bal"))
         val ins = c.filter(col("k") % 97 === 3)
           .select((-col("k") - 5).as("k"), col("bal"))
-        SnapshotLog.upsertEqualityMoRBranch(s, root, "audit",
-          fix.unionByName(ins), Seq("k"), 3000L): Unit
+        SnapshotLog.upsertEqualityMoR(s, root, fix.unionByName(ins),
+          Seq("k"), 3000L, branch = Some("audit")): Unit
       }
       def agg(df: DataFrame, stage: String): DataFrame =
         df.agg(count(lit(1)).as("n_rows"),

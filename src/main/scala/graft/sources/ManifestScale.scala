@@ -28,8 +28,8 @@ private[sources] object ManifestScale {
           org.apache.spark.sql.types.LongType))).json
       val t0 = System.nanoTime()
       SnapshotLog.commitManifest(SnapshotLog.fsFor(spark, new Path(root)),
-        root, 1, "append", 1000L, schemaJson, files, stats, sizes,
-        rowCounts = rows)
+        root, SnapshotLog.Snapshot(1, "append", 1000L, schemaJson, files,
+          stats, sizes, rows = rows))
       val commitS = (System.nanoTime() - t0) / 1e9
       val t1 = System.nanoTime()
       val snap = SnapshotLog.snapshots(spark, root).last

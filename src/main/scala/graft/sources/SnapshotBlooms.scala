@@ -307,16 +307,18 @@ private[graft] object SnapshotBlooms {
     * jobs over the same files reading DIFFERENT columns; serialized, each
     * job's tail leaves the executors idle while the other waits. Two
     * driver threads let the scheduler back-fill — same bytes, same
-    * sidecars, lower wall. Table props are read ONCE here (each writer
-    * previously re-read them) and passed down. Tables with neither (the
-    * overwhelmingly common commit) pay one props read and return; tables
+    * sidecars, lower wall. Table props are read ONCE (here, unless the
+    * caller already holds them as `propsOpt`) and passed down. Tables with
+    * neither (the overwhelmingly common commit) return at once; tables
     * with one feature run it inline — no thread is spawned unless both
     * fire. Sidecar bytes are unchanged in every case. */
   def writeBothSidecars(spark: SparkSession, root: String,
                         newFiles: Seq[String], schema: StructType,
-                        rowsByFile: Map[String, Long]): Unit = {
-    val props = try SnapshotLog.tableProps(spark, root)
-                catch { case scala.util.control.NonFatal(_) => Map.empty[String, String] }
+                        rowsByFile: Map[String, Long],
+                        propsOpt: Option[Map[String, String]] = None): Unit = {
+    val props = propsOpt.getOrElse(
+      try SnapshotLog.tableProps(spark, root)
+      catch { case scala.util.control.NonFatal(_) => Map.empty[String, String] })
     val doBloom = newFiles.nonEmpty && bloomColumns(props, schema).nonEmpty
     val doNgram = newFiles.nonEmpty &&
       SnapshotNgramBlooms.ngramColumns(props, schema).nonEmpty

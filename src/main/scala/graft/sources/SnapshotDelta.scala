@@ -122,15 +122,13 @@ private[sources] class SnapshotDeltaBatchWrite(root: String,
     val (fids, colIds, maxId) =
       SnapshotLog.fidCarry(Some(cur), schema, allFiles, newCols)
     try {
-      SnapshotLog.commitManifest(fs, root,
-        nextV, operation,
-        nextTs, cur.schemaJson, allFiles,
-        cur.stats ++ newStats, cur.sizes ++ newSizes,
-        Map("write.mode" -> "merge-on-read-delta") ++
+      SnapshotLog.commitManifest(fs, root, cur.copy(version = nextV,
+        operation = operation, commitTsMs = nextTs, files = allFiles,
+        stats = cur.stats ++ newStats, sizes = cur.sizes ++ newSizes,
+        props = Map("write.mode" -> "merge-on-read-delta") ++
           SnapshotLog.takePendingCommitProps(),
-        cur.spec, cur.parts, cur.cols ++ newCols, merged,
-        fids, colIds, maxId, cur.specs, cur.fileSpec, cur.version,
-        cur.rows ++ newRows)
+        cols = cur.cols ++ newCols, dels = merged, rows = cur.rows ++ newRows,
+        fids = fids, colIds = colIds, maxId = maxId, parent = cur.version))
     } catch {
       case e: IllegalStateException =>
         fs.delete(dataDir, true); fs.delete(delDir, true); throw e

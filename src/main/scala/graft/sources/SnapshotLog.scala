@@ -42,6 +42,15 @@ import scala.jdk.CollectionConverters._
   * manifest as an uncommitted attempt (the commit was never acknowledged)
   * and the next commit self-heals by reclaiming its version slot.
   *
+  * ONE commit kernel ([[commitChange]], Iceberg's single snapshot
+  * producer) publishes every data commit — append, overwrite,
+  * partitioned append, merge-on-read delete/update/upsert — and MAIN IS A
+  * BRANCH: each write method takes an optional `branch` and the kernel
+  * keeps the only three ref-dependent decisions (head resolution,
+  * re-apply after the head moved, post-commit step) in one place. ALTER
+  * and the compaction/rewrite paths keep their own retry loops over the
+  * same [[commitManifest]].
+  *
   * At 100 TB the manifest holds file PATHS + footer-derived stats, not
   * data: a commit is one distributed parquet write plus a driver-side
   * footer walk (metadata IO only — the min/max stats come from the parquet
@@ -149,6 +158,16 @@ object SnapshotLog {
     /** True iff this snapshot belongs to a BRANCH (not the main line). */
     def branch: Option[String] = props.get("ref")
     def schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
+
+    /** This snapshot's per-file state restricted to the files whose
+      * normalized path satisfies `keep` — what a rewrite carries over. */
+    def retain(keep: String => Boolean): Snapshot = {
+      def on[V](m: Map[String, V]) = m.view.filterKeys(keep).toMap
+      copy(files = files.filter(f => keep(SnapshotLog.norm(f))),
+        stats = on(stats), sizes = on(sizes), parts = on(parts),
+        cols = on(cols), dels = on(dels), colIds = on(colIds),
+        fileSpec = on(fileSpec), rows = on(rows))
+    }
 
     /** The partition spec data file `f` was WRITTEN under — the spec its
       * recorded tuple aligns with (spec evolution: newer commits may lay
@@ -663,13 +682,6 @@ object SnapshotLog {
     (stats, colsAcc.toMap, rowsAcc.toMap, nullsAcc.toMap)
   }
 
-  /** Commit `df` as the next version. `overwrite` replaces the table
-    * contents; append unions the parent's files with the new ones (data
-    * files are immutable — append never rewrites). `commitTsMs` is caller-
-    * supplied so tests and replays are deterministic; production callers
-    * pass the wall clock. Returns the committed version number. On a lost
-    * commit race the freshly written data directory is deleted before the
-    * conflict is thrown — no orphan files leak. */
   /** Commit-time type gate: every reader path (row Group walk, vectorized
     * batch, footer stats) supports exactly this closed set — rejecting an
     * exotic type HERE turns a confusing first-read failure into an
@@ -823,14 +835,13 @@ object SnapshotLog {
             s"SnapshotLog: column $from is a key of equality delete file $df" +
               " — run rewriteDataFiles to fold the deletes before renaming")
       }
-      commitManifest(fsFor(spark, new Path(root)), root, next, "alter",
-        ts, newSchema.json, cur.files, cur.stats, cur.sizes,
-        Map.empty,
-        cur.spec.map { case (s, t) => (if (s == from) to else s, t) },
-        cur.parts, cur.cols, cur.dels,
-        cur.fids - from + (to -> cur.fids(from)), cur.colIds, cur.maxId,
-        cur.specs.map(_.map { case (s, t) => (if (s == from) to else s, t) }),
-        cur.fileSpec, cur.version, cur.rows)
+      def renamed(sp: Seq[(String, String)]) =
+        sp.map { case (s, t) => (if (s == from) to else s, t) }
+      commitManifest(fsFor(spark, new Path(root)), root, cur.copy(
+        version = next, operation = "alter", commitTsMs = ts,
+        schemaJson = newSchema.json, props = Map.empty,
+        spec = renamed(cur.spec), specs = cur.specs.map(renamed),
+        fids = cur.fids - from + (to -> cur.fids(from)), parent = cur.version))
       next
     }
   }
@@ -864,11 +875,10 @@ object SnapshotLog {
             " — run rewriteDataFiles to fold the deletes before dropping")
       }
       val newSchema = StructType(cur.schema.fields.filterNot(_.name == name))
-      commitManifest(fsFor(spark, new Path(root)), root, next, "alter",
-        ts, newSchema.json, cur.files, cur.stats, cur.sizes,
-        Map.empty, cur.spec, cur.parts, cur.cols, cur.dels,
-        cur.fids - name, cur.colIds, cur.maxId, cur.specs, cur.fileSpec,
-        cur.version, cur.rows)
+      commitManifest(fsFor(spark, new Path(root)), root, cur.copy(
+        version = next, operation = "alter", commitTsMs = ts,
+        schemaJson = newSchema.json, props = Map.empty,
+        fids = cur.fids - name, parent = cur.version))
       next
     }
   }
@@ -925,136 +935,351 @@ object SnapshotLog {
     }
   }
 
+  /** The line of history a data commit lands on. Main is a branch like any
+    * other: its head is the newest mainline snapshot, a named branch's head
+    * is its entry in refs.json, and every ref claims slots in the one
+    * shared version sequence. [[commitChange]] holds the only three
+    * decisions that differ by ref. */
+  private sealed trait Ref
+  private object Ref {
+    case object Main extends Ref
+    final case class Branch(name: String) extends Ref
+    def of(branch: Option[String]): Ref = branch.fold[Ref](Main)(Branch(_))
+  }
+
+  /** ONE log read: (head of `ref`, version slot to claim, newest commit
+    * ts) — the [[headAndNext]] invariant on any ref. Main's head is None
+    * before the first commit; a branch must exist and point at a
+    * retained snapshot. */
+  private def resolveRef(spark: SparkSession, root: String, ref: Ref)
+      : (Option[Snapshot], Int, Long) = {
+    val branchHead = ref match {
+      case Ref.Main => None
+      case Ref.Branch(b) =>
+        val (kind, v) = refsTyped(spark, root).getOrElse(b,
+          throw new NoSuchElementException(s"SnapshotLog: no branch '$b' at $root"))
+        require(kind == "branch", s"SnapshotLog: ref '$b' is a $kind")
+        Some(b -> v)
+    }
+    val snaps = snapshots(spark, root)
+    val head = branchHead match {
+      case None => snaps.filter(_.branch.isEmpty).lastOption
+      case Some((b, v)) => Some(snaps.find(_.version == v).getOrElse(
+        throw new IllegalStateException(
+          s"SnapshotLog: branch '$b' head v$v expired at $root")))
+    }
+    (head, snaps.lastOption.fold(1)(_.version + 1),
+      snaps.lastOption.fold(Long.MinValue)(_.commitTsMs))
+  }
+
+  /** The head a row-level statement stages against, with its entry-time
+    * timestamp guard. */
+  private def dmlHead(spark: SparkSession, root: String, ref: Ref,
+                      commitTsMs: Long): Snapshot = {
+    val cur = resolveRef(spark, root, ref)._1.getOrElse(
+      throw new IllegalArgumentException(s"SnapshotLog: no snapshots at $root"))
+    require(cur.commitTsMs < commitTsMs,
+      s"commitTsMs $commitTsMs must advance past the last snapshot")
+    cur
+  }
+
+  private def tablePropsOrEmpty(spark: SparkSession,
+                                root: String): Map[String, String] =
+    try tableProps(spark, root)
+    catch { case scala.util.control.NonFatal(_) => Map.empty }
+
+  /** New data files of one commit, with everything their single footer
+    * walk yields (per-file maps keyed by normalized path) and the table
+    * schema they were written under. */
+  private final case class Staged(schema: StructType = new StructType(),
+      files: Seq[String] = Nil, sizes: Map[String, Long] = Map.empty,
+      stats: Map[String, Map[String, (Any, Any)]] = Map.empty,
+      cols: Map[String, Seq[String]] = Map.empty,
+      rows: Map[String, Long] = Map.empty,
+      nulls: Map[String, Map[String, Long]] = Map.empty,
+      parts: Map[String, Seq[String]] = Map.empty)
+
+  /** Write `df` into a fresh uuid dir under `<root>/data` (hive-style
+    * when `partitionBy` is set) and lift the written part files in ONE
+    * footer walk: sizes from the listing, stats/columns/row and null
+    * counts from the footers, partition tuples from the directory path.
+    * `dropEmpty` deletes zero-row parts (a task that received no rows
+    * still opened a writer). Returns the dir, for cleanup on refusal. */
+  private def stageData(spark: SparkSession, root: String, df: DataFrame,
+      schema: StructType, tblProps: Map[String, String],
+      partitionBy: Seq[String] = Nil,
+      dropEmpty: Boolean = false): (Path, Staged) = {
+    val dir = new Path(new Path(root, "data"),
+      java.util.UUID.randomUUID().toString.take(12))
+    CommitTimings.time("dataWrite") {
+      val w = df.write.options(SnapshotBlooms.parquetWriterOptions(tblProps, schema))
+      (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*))
+        .parquet(dir.toString)
+    }
+    val fs = fsFor(spark, dir)
+    val listed = scala.collection.mutable.ArrayBuffer[(String, Long)]()
+    val it = fs.listFiles(dir, true)
+    while (it.hasNext) {
+      val st = it.next()
+      val name = st.getPath.getName
+      if (name.startsWith("part-") && name.endsWith(".parquet"))
+        listed += ((st.getPath.toString, st.getLen))
+    }
+    val (stats, cols, rows, nulls) = footerMeta(
+      spark.sessionState.newHadoopConf(), listed.map(_._1).toSeq, schema)
+    val (kept, empty) = listed.sortBy(_._1).toSeq
+      .partition(f => !dropEmpty || rows.getOrElse(norm(f._1), 0L) > 0)
+    empty.foreach(f => fs.delete(new Path(f._1), false))
+    val live = kept.map(f => norm(f._1)).toSet
+    def liveOf[V](m: Map[String, V]) = m.view.filterKeys(live).toMap
+    // each leaf file's partition tuple is its directory path
+    val parts = if (partitionBy.isEmpty) Map.empty[String, Seq[String]]
+      else kept.map { case (f, _) =>
+        val segs = f.split('/')
+        norm(f) -> partitionBy.map(pn => segs.collectFirst {
+          case seg if seg.startsWith(pn + "=") => seg.substring(pn.length + 1)
+        }.getOrElse(SnapshotPartition.NullMarker))
+      }.toMap
+    (dir, Staged(schema, kept.map(_._1), kept.map(f => norm(f._1) -> f._2).toMap,
+      liveOf(stats), liveOf(cols), liveOf(rows), liveOf(nulls), parts))
+  }
+
+  /** `h` plus the staged files (per-file maps merged in). */
+  private def withStaged(h: Snapshot, d: Staged): Snapshot =
+    h.copy(files = h.files ++ d.files, stats = h.stats ++ d.stats,
+      sizes = h.sizes ++ d.sizes, cols = h.cols ++ d.cols,
+      rows = h.rows ++ d.rows, parts = h.parts ++ d.parts)
+
+  /** An append or overwrite: the staged schema conforms onto the head (an
+    * overwrite starts from nothing); `spec` set = laid out under that
+    * hidden-partition spec. */
+  private final case class Append(overwrite: Boolean,
+                                  spec: Seq[(String, String)] = Nil)
+
+  /** A staged change, ready for [[commitChange]] on any ref: new data
+    * files, delete files per existing data file, the manifest operation
+    * and props, and the staged dirs to delete if it never lands. `what`
+    * names it in refusals. Without `append` it is row-level work, valid
+    * only on the head it was staged against; `reapply` adds a check to
+    * the mainline re-apply validation. */
+  private final case class Change(what: String, operation: String,
+      props: Map[String, String], cleanup: Seq[Path],
+      tblProps: Map[String, String] = Map.empty, data: Staged = Staged(),
+      dels: Map[String, Seq[String]] = Map.empty, sortOn: Seq[String] = Nil,
+      append: Option[Append] = None,
+      reapply: (Snapshot, Snapshot) => Unit = (_, _) => ())
+
+  /** Test seam: invoked on a branch commit after staging, before the
+    * commit closure — lets specs interleave a concurrent writer
+    * DETERMINISTICALLY (the race paths are otherwise pure races).
+    * Production value is a no-op. */
+  private[graft] var branchDmlAfterStage: () => Unit = () => ()
+
+  /** Second test seam: invoked after a branch commit's snapshot is
+    * DURABLY COMMITTED but before [[advanceBranchRef]] re-proves the ref —
+    * the narrow window whose loss ORPHANS the committed snapshot
+    * (surfaced via CommitConflictException.orphanVersion). */
+  private[graft] var branchDmlBeforeRefWrite: () => Unit = () => ()
+
+  /** THE commit kernel: every data commit — append, overwrite,
+    * partitioned append, MoR delete/update/upsert — on every ref, staged
+    * ONCE against `base` (the ref's head at entry). Optimistic
+    * concurrency (Iceberg SnapshotProducer): each [[retryingCommit]]
+    * attempt resolves the ref's fresh head, validates, composes the new
+    * snapshot as a copy of the head plus the change, and publishes it; a
+    * lost version race re-runs the attempt, so writers of disjoint work
+    * all land. Refused or out of retries, the staged dirs are deleted —
+    * no orphan files leak. Then the index sidecars of the new files
+    * (AFTER the publish: written first, they would reference a refused
+    * commit's deleted files forever), then the ref's post-commit step.
+    *
+    * What differs by ref:
+    *  - head: the mainline head, or the branch's ref;
+    *  - a head that moved during staging: appends re-apply on either ref
+    *    (uuid-named files cannot overlap anyone's work; an overwrite is
+    *    base-independent). Row-level work re-applies on main after
+    *    [[validateReapply]], and refuses on a branch — branch DML is
+    *    never blind-merged across a concurrent branch writer;
+    *  - post-commit: [[maybeMaintain]] on main; on a branch the CAS
+    *    [[advanceBranchRef]] (the snapshot carries `ref=<branch>`).
+    * Timestamps bump past the newest snapshot, keeping commitTsMs
+    * strictly monotone per table. Returns the committed version. */
+  private def commitChange(spark: SparkSession, root: String, ref: Ref,
+      base: Option[Snapshot], commitTsMs: Long, c: Change): Int = {
+    val fs = fsFor(spark, new Path(root))
+    if (ref != Ref.Main) branchDmlAfterStage()
+    val (committed, head) = try retryingCommit(c.what) { () =>
+      val (head, next, lastTs) = resolveRef(spark, root, ref)
+      c.append match {
+        case Some(a) =>
+          if (!a.overwrite) validateAppend(c.what, c.data.schema, base, head)
+        case None if head.map(_.version) != base.map(_.version) => ref match {
+          case Ref.Main =>
+            validateReapply(c.what, base.get, head.get, c.dels.keySet)
+            c.reapply(base.get, head.get)
+          case Ref.Branch(b) => throw new CommitConflictException(
+            s"SnapshotLog: branch '$b' advanced during the ${c.what} " +
+              "staging — re-run against the new head")
+        }
+        case None => ()
+      }
+      commitManifest(fs, root,
+        compose(head, next, math.max(commitTsMs, lastTs + 1), ref, c))
+      (next, head)
+    } catch {
+      case e: IllegalStateException =>
+        c.cleanup.foreach(fs.delete(_, true)); throw e
+    }
+    val d = c.data
+    if (d.files.nonEmpty) {
+      SnapshotBlooms.writeBothSidecars(spark, root, d.files, d.schema, d.rows,
+        Some(c.tblProps))
+      SnapshotNulls.record(spark, root, d.nulls)
+      if (c.sortOn.nonEmpty) SnapshotSorts.record(spark, root, d.files, c.sortOn)
+    }
+    ref match {
+      case Ref.Main => maybeMaintain(spark, root)
+      case Ref.Branch(b) =>
+        branchDmlBeforeRefWrite()
+        advanceBranchRef(spark, root, b, head.get.version, committed)
+    }
+    committed
+  }
+
+  /** The snapshot change `c` publishes at slot `next` on `head`: a copy of
+    * the head (of nothing, for an overwrite or a first commit) with the
+    * new files added, delete files folded onto their data files, the
+    * field ids carried and, for a partitioned append, the spec history
+    * extended. */
+  private def compose(head: Option[Snapshot], next: Int, ts: Long, ref: Ref,
+                      c: Change): Snapshot = {
+    val parent = if (c.append.exists(_.overwrite)) None else head
+    val h = withStaged(parent.getOrElse(Snapshot(0, "", 0L, "", Seq.empty)), c.data)
+    // an append records the PARENT's column order (see conformedSchema);
+    // row-level work keeps the head's schema verbatim
+    val schema = c.append.fold(h.schema)(_ => conformedSchema(parent, c.data.schema))
+    val (fids, colIds, maxId) = fidCarry(head, schema, h.files, c.data.cols)
+    // PARTITION-SPEC EVOLUTION (Iceberg spec-per-snapshot): an append
+    // under a DIFFERENT spec is legal — the new files lay out and prune
+    // under the new spec, carried files keep pruning under the spec they
+    // were written with (parent files without an entry were written under
+    // the parent's active spec). Other changes keep the head's spec; their
+    // new files carry no tuple and are kept conservatively by pruning.
+    val (spec, specs, fileSpec) = c.append.map(_.spec).filter(_.nonEmpty) match {
+      case Some(sp) =>
+        val prior = parent.fold(Seq.empty[Seq[(String, String)]])(p =>
+          if (p.specs.nonEmpty) p.specs else if (p.spec.nonEmpty) Seq(p.spec)
+          else Seq.empty)
+        val hist = if (prior.contains(sp)) prior else prior :+ sp
+        val pIdx = math.max(hist.indexOf(h.spec), 0)
+        (sp, hist, parent.fold(Map.empty[String, Int])(p => p.files.map(norm)
+          .map(k => k -> p.fileSpec.getOrElse(k, pIdx)).toMap) ++
+          c.data.files.map(f => norm(f) -> hist.indexOf(sp)))
+      case None => (h.spec, h.specs, h.fileSpec)
+    }
+    h.copy(version = next, operation = c.operation, commitTsMs = ts,
+      schemaJson = if (c.append.isEmpty) h.schemaJson else schema.json,
+      props = c.props ++ (ref match {
+        case Ref.Branch(b) => Map("ref" -> b)
+        case Ref.Main => Map.empty
+      }),
+      spec = spec, specs = specs, fileSpec = fileSpec,
+      dels = h.dels ++ c.dels.map { case (f, ds) =>
+        f -> (h.dels.getOrElse(f, Seq.empty) ++ ds) },
+      fids = fids, colIds = colIds, maxId = maxId,
+      parent = head.fold(0)(_.version))
+  }
+
+  /** Append validation, on every attempt. The schema baseline is the head
+    * at ENTRY, before the seconds-long staging: an ALTER landing during
+    * staging or the commit race refuses re-apply instead of being
+    * silently reverted. Appends are ADDITIVE-ONLY evolution (Iceberg:
+    * writers conform to the current schema; renames/drops go through
+    * ALTER): a schema missing a current column — e.g. one built against a
+    * pre-rename schema that serialized entirely AFTER the rename, so the
+    * baseline check can't see it — would narrow or revert the table
+    * schema for every other reader, and one that REDEFINES a shared
+    * column's type would let conformedSchema silently retype the table.
+    * A struct may still gain fields at any depth (old files null-fill,
+    * the supported path), and nullability flags are not a retype. */
+  private def validateAppend(what: String, schema: StructType,
+      base: Option[Snapshot], head: Option[Snapshot]): Unit = {
+    if (head.map(_.schemaJson) != base.map(_.schemaJson))
+      throw new CommitConflictException(
+        s"SnapshotLog: $what cannot re-apply — schema changed concurrently")
+    head.foreach { h =>
+      val missing = h.schema.fieldNames.filterNot(schema.fieldNames.contains)
+      if (missing.nonEmpty) throw new CommitConflictException(
+        s"SnapshotLog: $what schema is missing current column(s) " +
+          missing.mkString(", ") +
+          " — appends may only ADD columns; rename/drop via ALTER, or " +
+          "re-run the append against the current table schema")
+      val retyped = h.schema.fields.flatMap { hf =>
+        schema.find(_.name == hf.name)
+          .filterNot(nf => additiveCompatible(hf.dataType, nf.dataType))
+          .map(nf => s"${hf.name} (table ${hf.dataType.simpleString} vs " +
+            s"append ${nf.dataType.simpleString})")
+      }
+      if (retyped.nonEmpty) throw new CommitConflictException(
+        s"SnapshotLog: $what redefines column type(s) " +
+          retyped.mkString(", ") +
+          " — appends may only ADD columns; rename/drop/retype via " +
+          "ALTER, or re-run the append against the current table schema")
+    }
+  }
+
+  /** Commit `df` as the next version of `branch` (default main).
+    * `overwrite` replaces the ref's contents; append unions the head's
+    * files with the new ones (data files are immutable — append never
+    * rewrites). `commitTsMs` is caller-supplied so tests and replays are
+    * deterministic; production callers pass the wall clock. No hard "ts
+    * must advance" gate: concurrent writers cannot coordinate requested
+    * timestamps, so each attempt bumps its ts past the newest snapshot.
+    * A branch append is the staging step of write-audit-publish: main is
+    * untouched until [[fastForward]]. Returns the committed version. */
   def commit(df: DataFrame, root: String, overwrite: Boolean,
              commitTsMs: Long, numFiles: Int = 2,
-             props: Map[String, String] = Map.empty): Int = {
+             props: Map[String, String] = Map.empty,
+             branch: Option[String] = None): Int = {
     val spark = df.sparkSession
     validateSchema(spark, df.schema)
-    val rootP = new Path(root)
-    val fs = fsFor(spark, rootP)
-    // no hard "ts must advance" gate here: concurrent writers cannot
-    // coordinate requested timestamps, so each attempt bumps its ts past
-    // the head it actually lands on (commitTsMs stays strictly monotone
-    // per table — the time-travel invariant — without serializing writers).
-    // The schema baseline is read at ENTRY, before the seconds-long data
-    // staging: an ALTER landing during staging or the commit race is then
-    // caught by the re-apply guard below instead of silently reverted.
-    val baseSchema = snapshots(spark, root)
-      .filter(_.branch.isEmpty).lastOption.map(_.schemaJson)
-
+    val ref = Ref.of(branch)
+    val base = resolveRef(spark, root, ref)._1
+    val tblProps = tablePropsOrEmpty(spark, root)
     // one immutable data dir per commit; repartition bounds the file count
-    // (a 100 TB commit sizes this to target-file-size, not a constant)
-    val dataDir = new Path(new Path(rootP, "data"),
-      java.util.UUID.randomUUID().toString.take(12))
-    val writeProps = try tableProps(spark, root)
-                     catch { case scala.util.control.NonFatal(_) =>
-                       Map.empty[String, String] }
+    // (a 100 TB commit sizes this to target-file-size, not a constant).
     // SORT-ON-WRITE (Iceberg write.sort-order analog): with
     // `write.sort.order` set, every commit range-partitions across files
     // and sorts within them — ingest-time clustering (linear or z-order,
     // see stageSorted), so zone-map range pruning, top-k skipping, and
     // sort-order reporting all engage WITHOUT a separate compaction pass.
-    val (staged, sortOn) = stageSorted(spark, df, numFiles, writeProps)
-    CommitTimings.time("dataWrite") {
-      staged.write
-        .options(SnapshotBlooms.parquetWriterOptions(writeProps, df.schema))
-        .parquet(dataDir.toString)
-    }
-    val statuses = fs.listStatus(dataDir)
-      .filter(s => s.getPath.getName.startsWith("part-") &&
-        s.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-    val newFiles = statuses.map(_.getPath.toString).toSeq
-    val newSizes = statuses.map(s => norm(s.getPath.toString) -> s.getLen).toMap
-    val (newStats, newCols, newRows, newNulls) =
-      footerMeta(spark.sessionState.newHadoopConf(), newFiles, df.schema)
-    SnapshotBlooms.writeBothSidecars(spark, root, newFiles, df.schema, newRows)
-    SnapshotNulls.record(spark, root, newNulls)
-    if (sortOn.nonEmpty) SnapshotSorts.record(spark, root, newFiles, sortOn)
+    val (shaped, sortOn) = stageSorted(spark, df, numFiles, tblProps)
+    val (dataDir, data) = stageData(spark, root, shaped, df.schema, tblProps)
+    val op = if (overwrite) "overwrite" else "append"
+    commitChange(spark, root, ref, base, commitTsMs, Change(op, op, props,
+      Seq(dataDir), tblProps, data, sortOn = sortOn,
+      append = Some(Append(overwrite))))
+  }
 
-    // Optimistic-concurrency commit (Iceberg SnapshotProducer): the data
-    // files are staged ONCE above; each attempt re-reads the head and
-    // re-composes the manifest on it, so an append racing other appends
-    // always lands — its uuid-named files cannot overlap anyone's work.
-    // An overwrite is base-independent by definition ("table := df") and
-    // re-applies the same way. Retry timestamps bump past the concurrent
-    // winner to keep commitTsMs strictly monotone.
-    val committed = try retryingCommit(
-      if (overwrite) "overwrite" else "append") { () =>
-      val prior = snapshots(spark, root)
-      val next = prior.lastOption.map(_.version + 1).getOrElse(1)
-      // content parent is the MAINLINE head (a branch commit may own the
-      // highest version number; it is not this commit's history line)
-      val mainLast = prior.filter(_.branch.isEmpty).lastOption
-      // the manifest records df's schema: re-applying past a concurrent
-      // ALTER would silently revert it — refuse, the writer must re-run
-      if (!overwrite && mainLast.map(_.schemaJson) != baseSchema)
-        throw new CommitConflictException(
-          "SnapshotLog: append cannot re-apply — schema changed concurrently")
-      // appends are ADDITIVE-ONLY evolution (Iceberg: writers conform to
-      // the current schema; renames/drops go through ALTER). An append
-      // whose schema is missing a current column — e.g. one built against
-      // a pre-rename schema that serialized entirely AFTER the rename, so
-      // the baseline check above can't see it — would narrow or revert
-      // the table schema for every other reader. Refuse instead.
-      mainLast.filter(_ => !overwrite).foreach { h =>
-        val missing = h.schema.fieldNames.filterNot(df.schema.fieldNames.contains)
-        if (missing.nonEmpty) throw new CommitConflictException(
-          "SnapshotLog: append schema is missing current column(s) " +
-            missing.mkString(", ") +
-            " — appends may only ADD columns; rename/drop via ALTER, or " +
-            "re-run the append against the current table schema")
-        // names are not enough: an append that REDEFINES a shared column
-        // with a different dataType would pass both checks above and let
-        // conformedSchema silently retype the table for all readers —
-        // the same silent-revert class this guard exists to prevent.
-        // ADDITIVE nested evolution stays legal (a struct may gain fields
-        // at any depth — old files null-fill, the supported path) and
-        // nullability flags are ignored (not a retype).
-        val retyped = h.schema.fields.flatMap { hf =>
-          df.schema.find(_.name == hf.name)
-            .filterNot(nf => additiveCompatible(hf.dataType, nf.dataType))
-            .map(nf => s"${hf.name} (table ${hf.dataType.simpleString} vs " +
-              s"append ${nf.dataType.simpleString})")
-        }
-        if (retyped.nonEmpty) throw new CommitConflictException(
-          "SnapshotLog: append redefines column type(s) " +
-            retyped.mkString(", ") +
-            " — appends may only ADD columns; rename/drop/retype via " +
-            "ALTER, or re-run the append against the current table schema")
-      }
-      val ts = math.max(commitTsMs,
-        prior.lastOption.map(_.commitTsMs + 1).getOrElse(commitTsMs))
-      val parent = if (overwrite) None else mainLast
-      val files = parent.map(_.files).getOrElse(Seq.empty) ++ newFiles
-      val stats = parent.map(_.stats).getOrElse(Map.empty) ++ newStats
-      val sizes = parent.map(_.sizes).getOrElse(Map.empty) ++ newSizes
-      val cols = parent.map(_.cols).getOrElse(Map.empty) ++ newCols
-      // an append to a hidden-partitioned table keeps the spec and the
-      // parent files' tuples (the new files carry no tuple — kept
-      // conservatively by partition pruning; commitPartitioned is the
-      // layout-preserving append)
-      val schema = conformedSchema(parent, df.schema)
-      val (fids, colIds, maxId) =
-        fidCarry(mainLast, schema, files, newCols)
-      commitManifest(fs, root, next,
-        if (overwrite) "overwrite" else "append",
-        ts, schema.json, files, stats, sizes, props,
-        parent.map(_.spec).getOrElse(Seq.empty),
-        parent.map(_.parts).getOrElse(Map.empty), cols,
-        parent.map(_.dels).getOrElse(Map.empty), fids, colIds, maxId,
-        parent.map(_.specs).getOrElse(Seq.empty),
-        parent.map(_.fileSpec).getOrElse(Map.empty),
-        mainLast.map(_.version).getOrElse(0),
-        parent.map(_.rows).getOrElse(Map.empty) ++ newRows)
-      next
-    } catch {
-      case e: IllegalStateException =>
-        fs.delete(dataDir, true) // out of retries: reclaim unpublished data
-        throw e
+  /** Hive-style shaping for a hidden-partitioned write: derive one `_p_i`
+    * column per spec field and shuffle by the derived tuple so each
+    * partition value is written by ONE task (one file per tuple per
+    * write, not one per task per tuple — the small-files discipline a
+    * 1000-executor write needs). With `sortBy` (cluster-by), rows sort by
+    * (tuple, keys), so FileFormatWriter's required partition-column
+    * ordering is ALREADY satisfied (it inserts no sort of its own — an
+    * unstable re-sort would scramble the keys) and every written file
+    * carries key-sorted rows. Returns (shaped df, `_p_i` names). */
+  private def partitionShaped(df: DataFrame, spec: Seq[(String, String)],
+      sortBy: Seq[String]): (DataFrame, Seq[String]) = {
+    import org.apache.spark.sql.functions.col
+    val pNames = spec.indices.map(i => s"_p_$i")
+    val pCols = spec.zipWithIndex.map { case ((src, tr), i) =>
+      SnapshotPartition.transformCol(src, tr, df.schema(src).dataType).as(pNames(i))
     }
-    maybeMaintain(spark, root)
-    committed
+    val shaped = df.select(col("*") +: pCols: _*).repartition(pNames.map(col): _*)
+    (if (sortBy.isEmpty) shaped
+     else shaped.sortWithinPartitions((pNames ++ sortBy).map(col): _*), pNames)
   }
 
   /** Commit with HIDDEN PARTITIONING ([[SnapshotPartition]] — Iceberg's
@@ -1065,82 +1290,28 @@ object SnapshotLog {
     * only in the directory layout — so every existing read path works
     * unchanged, and the DSv2 planner additionally converts predicates on
     * the source columns into partition-tuple pruning (the case stats can't
-    * cover: an equality probe on a hash-distributed key). Appends must
-    * reuse the table's existing spec — Iceberg's spec-per-snapshot
-    * evolution is out of scope. */
-  /** Layout-preserving partitioned write: shuffle by the derived tuple so
-    * each partition value is written by ONE task (one file per tuple per
-    * write, not one per task per tuple — the small-files discipline a
-    * 1000-executor write needs), then walk the directory layout to
-    * recover each leaf file's tuple. Returns (file, size, tuple) sorted
-    * by path. */
-  private def writePartitionedData(spark: SparkSession, df: DataFrame,
-      dataDir: Path, pCols: Seq[org.apache.spark.sql.Column],
-      spec: Seq[(String, String)],
-      sortBy: Seq[String] = Nil): Seq[(String, Long, Seq[String])] = {
-    val fs = fsFor(spark, dataDir)
-    val pNames = spec.indices.map(i => s"_p_$i")
-    val shaped0 = df.select(org.apache.spark.sql.functions.col("*") +: pCols: _*)
-      .repartition(pNames.map(org.apache.spark.sql.functions.col): _*)
-    // cluster-by: sort by (partition cols, keys) so FileFormatWriter's
-    // required partition-column ordering is ALREADY satisfied (it inserts
-    // no sort of its own — an unstable re-sort would scramble the keys)
-    // and every written file carries key-sorted rows
-    val shaped =
-      if (sortBy.isEmpty) shaped0
-      else shaped0.sortWithinPartitions(
-        (pNames ++ sortBy).map(org.apache.spark.sql.functions.col): _*)
-    shaped.write.partitionBy(pNames: _*).parquet(dataDir.toString)
-    // recursive walk: each leaf file's partition tuple is its directory path
-    val found = scala.collection.mutable.ArrayBuffer[(String, Long, Seq[String])]()
-    val it = fs.listFiles(dataDir, true)
-    while (it.hasNext) {
-      val s = it.next()
-      val name = s.getPath.getName
-      if (name.startsWith("part-") && name.endsWith(".parquet")) {
-        val rel = s.getPath.toString.stripPrefix(dataDir.toString).split('/')
-        val tuple = pNames.map { pn =>
-          rel.collectFirst { case seg if seg.startsWith(pn + "=") =>
-            seg.substring(pn.length + 1)
-          }.getOrElse(SnapshotPartition.NullMarker)
-        }
-        found += ((s.getPath.toString, s.getLen, tuple.toSeq))
-      }
-    }
-    found.sortBy(_._1).toSeq
-  }
-
+    * cover: an equality probe on a hash-distributed key). An append under
+    * a different spec evolves the spec (see [[compose]]). Otherwise the
+    * same commit as [[commit]]. */
   def commitPartitioned(df: DataFrame, root: String, spec: Seq[(String, String)],
                         overwrite: Boolean, commitTsMs: Long,
-                        props: Map[String, String] = Map.empty): Int = {
+                        props: Map[String, String] = Map.empty,
+                        branch: Option[String] = None): Int = {
     require(spec.nonEmpty, "commitPartitioned: empty spec — use commit()")
     val spark = df.sparkSession
     validateSchema(spark, df.schema)
-    val rootP = new Path(root)
-    val fs = fsFor(spark, rootP)
     spec.foreach { case (src, _) =>
       require(df.schema.fieldNames.contains(src),
         s"commitPartitioned: spec column $src not in ${df.schema.fieldNames.mkString(",")}")
     }
-    // schema baseline at entry (see commit(): a concurrent ALTER landing
-    // during staging must refuse re-apply, not silently revert)
-    val baseSchema = snapshots(spark, root)
-      .filter(_.branch.isEmpty).lastOption.map(_.schemaJson)
-
-    val dataDir = new Path(new Path(rootP, "data"),
-      java.util.UUID.randomUUID().toString.take(12))
-    val pCols = spec.zipWithIndex.map { case ((src, tr), i) =>
-      SnapshotPartition.transformCol(src, tr,
-        df.schema(src).dataType).as(s"_p_$i")
-    }
+    val ref = Ref.of(branch)
+    val base = resolveRef(spark, root, ref)._1
     // SORT-ON-WRITE under a partition spec (see commit()): the order is
     // imposed WITHIN each partition tuple — every tuple's file comes out
     // key-sorted, so zone maps tighten and SupportsReportOrdering can
     // prove co-sorted SPJ joins on freshly ingested data
-    val partProps = try tableProps(spark, root)
-                    catch { case scala.util.control.NonFatal(_) =>
-                      Map.empty[String, String] }
-    val sortCols = partProps.get("write.sort.order").toSeq
+    val tblProps = tablePropsOrEmpty(spark, root)
+    val sortCols = tblProps.get("write.sort.order").toSeq
       // a zorder(...) order under a partition SPEC is unsupported, like
       // rewriteDataFiles' zorderBy refusal: the partition-tuple layout
       // already clusters — within-tuple order stays linear
@@ -1150,81 +1321,13 @@ object SnapshotLog {
       if (sortCols.nonEmpty && sortCols.forall(df.schema.fieldNames.contains))
         sortCols
       else Seq.empty
-    val sortedFound =
-      writePartitionedData(spark, df, dataDir, pCols, spec, sortOn)
-    val newFiles = sortedFound.map(_._1)
-    val newSizes = sortedFound.map(f => norm(f._1) -> f._2).toMap
-    val newParts = sortedFound.map(f => norm(f._1) -> f._3).toMap
-    val (newStats, newCols, newRows, newNulls) =
-      footerMeta(spark.sessionState.newHadoopConf(), newFiles, df.schema)
-    SnapshotBlooms.writeBothSidecars(spark, root, newFiles, df.schema, newRows)
-    SnapshotNulls.record(spark, root, newNulls)
-    if (sortOn.nonEmpty) SnapshotSorts.record(spark, root, newFiles, sortOn)
-
-    val committed = try retryingCommit("commitPartitioned") { () =>
-      val prior = snapshots(spark, root)
-      val next = prior.lastOption.map(_.version + 1).getOrElse(1)
-      val mainLast = prior.filter(_.branch.isEmpty).lastOption
-      val ts = math.max(commitTsMs,
-        prior.lastOption.map(_.commitTsMs + 1).getOrElse(commitTsMs))
-      val parent = if (overwrite) None else mainLast
-      if (!overwrite && mainLast.map(_.schemaJson) != baseSchema)
-        throw new CommitConflictException(
-          "SnapshotLog: commitPartitioned cannot re-apply — schema changed concurrently")
-      // additive-only, like commit(): a partitioned append must not
-      // narrow or rename-revert the current schema
-      mainLast.filter(_ => !overwrite).foreach { h =>
-        val missing = h.schema.fieldNames.filterNot(df.schema.fieldNames.contains)
-        if (missing.nonEmpty) throw new CommitConflictException(
-          "SnapshotLog: partitioned append schema is missing current " +
-            s"column(s) ${missing.mkString(", ")} — appends may only ADD columns")
-      }
-      // PARTITION-SPEC EVOLUTION (Iceberg spec-per-snapshot): an append
-      // under a DIFFERENT spec is legal — the new files lay out and prune
-      // under the new spec, carried files keep pruning under the spec they
-      // were written with. The manifest's spec history makes both coexist.
-      val parentSpecs: Seq[Seq[(String, String)]] = parent match {
-        case Some(p) if p.specs.nonEmpty => p.specs
-        case Some(p) if p.spec.nonEmpty => Seq(p.spec)
-        case _ => Seq.empty
-      }
-      val specsHist =
-        if (parentSpecs.contains(spec)) parentSpecs else parentSpecs :+ spec
-      val specIdx = specsHist.indexOf(spec)
-      // backfill: parent files without an explicit entry were written under
-      // the parent's active spec
-      val parentFileSpec: Map[String, Int] = parent.map { p =>
-        val pIdx = specsHist.indexOf(p.spec)
-        p.files.map(norm).map(k =>
-          k -> p.fileSpec.getOrElse(k, math.max(pIdx, 0))).toMap
-      }.getOrElse(Map.empty)
-      val allFiles = parent.map(_.files).getOrElse(Seq.empty) ++ newFiles
-      val schema = conformedSchema(parent, df.schema)
-      val (fids, colIds, maxId) =
-        fidCarry(mainLast, schema, allFiles, newCols)
-      commitManifest(fs, root, next,
-        if (overwrite) "overwrite" else "append",
-        ts, schema.json, allFiles,
-        parent.map(_.stats).getOrElse(Map.empty) ++ newStats,
-        parent.map(_.sizes).getOrElse(Map.empty) ++ newSizes,
-        props, spec,
-        parent.map(_.parts).getOrElse(Map.empty) ++ newParts,
-        parent.map(_.cols).getOrElse(Map.empty) ++ newCols,
-        parent.map(_.dels).getOrElse(Map.empty), fids, colIds, maxId,
-        specsHist,
-        parentFileSpec ++ newFiles.map(f => norm(f) -> specIdx),
-        mainLast.map(_.version).getOrElse(0),
-        parent.map(_.rows).getOrElse(Map.empty) ++ newRows)
-      next
-    } catch {
-      case e: IllegalStateException =>
-        fs.delete(dataDir, true)
-        throw e
-    }
-    // hidden-partitioned tables get the same commit-time maintenance as
-    // flat ones (rewriteDataFiles preserves partition layout)
-    maybeMaintain(spark, root)
-    committed
+    val (shaped, pNames) = partitionShaped(df, spec, sortOn)
+    val (dataDir, data) =
+      stageData(spark, root, shaped, df.schema, tblProps, pNames)
+    val op = if (overwrite) "overwrite" else "append"
+    commitChange(spark, root, ref, base, commitTsMs, Change(s"partitioned $op",
+      op, props, Seq(dataDir), tblProps, data, sortOn = sortOn,
+      append = Some(Append(overwrite, spec))))
   }
 
   /** Create an EMPTY table: a v1 "create" manifest carrying only the
@@ -1237,9 +1340,8 @@ object SnapshotLog {
                   spec: Seq[(String, String)] = Seq.empty): Int = {
     require(snapshots(spark, root).isEmpty,
       s"SnapshotLog: table already exists at $root")
-    commitManifest(fsFor(spark, new Path(root)), root, 1, "create",
-      commitTsMs, schema.json, Seq.empty, Map.empty, Map.empty,
-      Map.empty, spec, Map.empty)
+    commitManifest(fsFor(spark, new Path(root)), root,
+      Snapshot(1, "create", commitTsMs, schema.json, Seq.empty, spec = spec))
     1
   }
 
@@ -1267,10 +1369,10 @@ object SnapshotLog {
       }
       val (fids, colIds, maxId) =
         fidCarry(Some(cur), newSchema, cur.files, Map.empty)
-      commitManifest(fsFor(spark, new Path(root)), root, next, "alter",
-        ts, newSchema.json, cur.files, cur.stats, cur.sizes,
-        Map.empty, cur.spec, cur.parts, cur.cols, cur.dels, fids, colIds, maxId,
-        cur.specs, cur.fileSpec, cur.version, cur.rows)
+      commitManifest(fsFor(spark, new Path(root)), root, cur.copy(
+        version = next, operation = "alter", commitTsMs = ts,
+        schemaJson = newSchema.json, props = Map.empty,
+        fids = fids, colIds = colIds, maxId = maxId, parent = cur.version))
       next
     }
   }
@@ -1321,10 +1423,10 @@ object SnapshotLog {
           "commitPartitioned it into a new table.")
     }
     SnapshotNulls.record(spark, root, nulls)
-    commitManifest(fsFor(spark, new Path(root)), root, 1, "import",
-      commitTsMs, schema.json, files, stats,
-      statuses.map(s => norm(s.getPath.toString) -> s.getLen).toMap,
-      cols = cols, rowCounts = rows)
+    commitManifest(fsFor(spark, new Path(root)), root,
+      Snapshot(1, "import", commitTsMs, schema.json, files, stats,
+        statuses.map(s => norm(s.getPath.toString) -> s.getLen).toMap,
+        cols = cols, rows = rows))
     1
   }
 
@@ -1771,63 +1873,6 @@ object SnapshotLog {
   def dropBranch(spark: SparkSession, root: String, name: String): Unit =
     writeRefs(spark, root, refsTyped(spark, root) - name)
 
-  /** Append `df` to a BRANCH: content builds on the branch head, the new
-    * snapshot records the head as parent and `ref=<branch>` in its props,
-    * and the branch ref advances. Main is untouched. */
-  def commitToBranch(spark: SparkSession, root: String, branch: String,
-                     df: DataFrame, commitTsMs: Long,
-                     numFiles: Int = 2): Int = {
-    validateSchema(spark, df.schema)
-    val typed = refsTyped(spark, root)
-    val (kind, headV) = typed.getOrElse(branch,
-      throw new NoSuchElementException(
-        s"SnapshotLog: no branch '$branch' at $root"))
-    require(kind == "branch", s"SnapshotLog: ref '$branch' is a $kind")
-    val snaps = snapshots(spark, root)
-    val head = snaps.find(_.version == headV).getOrElse(
-      throw new IllegalStateException(
-        s"SnapshotLog: branch '$branch' head v$headV expired at $root"))
-    val next = snaps.last.version + 1
-    require(snaps.forall(_.commitTsMs < commitTsMs),
-      s"commitTsMs $commitTsMs must advance past the last snapshot")
-    val fs = fsFor(spark, new Path(root))
-    val dataDir = new Path(new Path(root, "data"),
-      java.util.UUID.randomUUID().toString.take(12))
-    // branch commits honor write.sort.order like mainline commits (see
-    // commit()/stageSorted, linear AND z-order): audited-then-published
-    // data arrives already clustered
-    val branchProps = try tableProps(spark, root)
-                      catch { case scala.util.control.NonFatal(_) =>
-                        Map.empty[String, String] }
-    val (staged, sortOn) = stageSorted(spark, df, numFiles, branchProps)
-    staged.write.parquet(dataDir.toString)
-    val statuses = fs.listStatus(dataDir)
-      .filter(s => s.getPath.getName.startsWith("part-") &&
-        s.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-    val newFiles = statuses.map(_.getPath.toString).toSeq
-    val newSizes = statuses.map(s => norm(s.getPath.toString) -> s.getLen).toMap
-    val (newStats, newCols, newRows, newNulls) =
-      footerMeta(spark.sessionState.newHadoopConf(), newFiles, df.schema)
-    SnapshotBlooms.writeBothSidecars(spark, root, newFiles, df.schema, newRows)
-    SnapshotNulls.record(spark, root, newNulls)
-    if (sortOn.nonEmpty) SnapshotSorts.record(spark, root, newFiles, sortOn)
-    val allFiles = head.files ++ newFiles
-    val (fids, colIds, maxId) = fidCarry(Some(head), df.schema, allFiles, newCols)
-    try {
-      commitManifest(fs, root, next, "append", commitTsMs, df.schema.json,
-        allFiles, head.stats ++ newStats, head.sizes ++ newSizes,
-        Map("ref" -> branch), head.spec, head.parts, head.cols ++ newCols,
-        head.dels, fids, colIds, maxId, head.specs, head.fileSpec,
-        head.version, head.rows ++ newRows)
-    } catch {
-      case e: IllegalStateException => fs.delete(dataDir, true); throw e
-    }
-    writeRefs(spark, root,
-      refsTyped(spark, root) + (branch -> (("branch", next))))
-    next
-  }
-
   /** Publish a branch to MAIN (Iceberg's fast_forward): one mainline
     * snapshot adopting the branch head's exact content. When the branch
     * forked from the CURRENT main head and only appended, the publish is
@@ -1858,11 +1903,9 @@ object SnapshotLog {
     val next = snaps.last.version + 1
     require(snaps.forall(_.commitTsMs < commitTsMs),
       s"commitTsMs $commitTsMs must advance past the last snapshot")
-    commitManifest(fsFor(spark, new Path(root)), root, next, op, commitTsMs,
-      head.schemaJson, head.files, head.stats, head.sizes,
-      Map("published.from" -> branch), head.spec, head.parts, head.cols,
-      head.dels, head.fids, head.colIds, head.maxId, head.specs,
-      head.fileSpec, mainHead.version, head.rows)
+    commitManifest(fsFor(spark, new Path(root)), root, head.copy(
+      version = next, operation = op, commitTsMs = commitTsMs,
+      props = Map("published.from" -> branch), parent = mainHead.version))
     next
   }
 
@@ -1937,11 +1980,9 @@ object SnapshotLog {
     val next = snaps.last.version + 1
     require(snaps.forall(_.commitTsMs < commitTsMs),
       s"commitTsMs $commitTsMs must advance past the last snapshot")
-    commitManifest(fsFor(spark, new Path(root)), root, next, op, commitTsMs,
-      target.schemaJson, target.files, target.stats, target.sizes,
-      props, target.spec, target.parts, target.cols,
-      target.dels, target.fids, target.colIds, target.maxId, target.specs,
-      target.fileSpec, mainHead.version, target.rows)
+    commitManifest(fsFor(spark, new Path(root)), root, target.copy(
+      version = next, operation = op, commitTsMs = commitTsMs,
+      props = props, parent = mainHead.version))
     next
   }
 
@@ -1952,26 +1993,16 @@ object SnapshotLog {
     math.max(System.currentTimeMillis(), last + 1)
   }
 
-  /** Serialize and exclusively publish a manifest (shared by commit /
-    * mergeCommit / rewriteDataFiles). Throws IllegalStateException on a
-    * commit conflict. */
-  private[sources] def commitManifest(fs: FileSystem, root: String, version: Int,
-                             operation: String, commitTsMs: Long,
-                             schemaJson: String, files: Seq[String],
-                             stats: Map[String, Map[String, (Any, Any)]],
-                             sizes: Map[String, Long],
-                             props: Map[String, String] = Map.empty,
-                             spec: Seq[(String, String)] = Seq.empty,
-                             parts: Map[String, Seq[String]] = Map.empty,
-                             cols: Map[String, Seq[String]] = Map.empty,
-                             dels: Map[String, Seq[String]] = Map.empty,
-                             fids: Map[String, Int] = Map.empty,
-                             colIds: Map[String, Seq[Int]] = Map.empty,
-                             maxId: Int = 0,
-                             specs: Seq[Seq[(String, String)]] = Seq.empty,
-                             fileSpec: Map[String, Int] = Map.empty,
-                             parent: Int = -1,
-                             rowCounts: Map[String, Long] = Map.empty): Unit = CommitTimings.time("commitManifest") {
+  /** Serialize and exclusively publish snapshot `s` as manifest
+    * `s.version` — every commit path composes `s`, usually as a copy of
+    * the head it builds on (`s.shardPaths` is ignored: shard reuse reads
+    * the parent manifest). Throws IllegalStateException on a commit
+    * conflict. */
+  private[sources] def commitManifest(fs: FileSystem, root: String,
+      s: Snapshot): Unit = CommitTimings.time("commitManifest") {
+    import s.{version, operation, commitTsMs, schemaJson, files, stats, sizes,
+      props, spec, parts, cols, dels, fids, colIds, maxId, specs, fileSpec, parent}
+    val rowCounts = s.rows
     // ---- MANIFEST-LIST SHARDING (r14; Iceberg's two-level manifest) ----
     // Per-file entries above the threshold live in immutable uuid-named
     // shard files reused across versions: an append's manifest is then
@@ -2317,16 +2348,6 @@ object SnapshotLog {
         " — re-run the statement against the new table state")
   }
 
-  /** The per-statement delete-file DELTA: what `merged` adds over
-    * `base.dels` (staged delete parquets are fresh uuid paths, so list
-    * difference is exact). Re-application folds this onto ANY head that
-    * passes [[validateReapply]]. */
-  private def delsDelta(base: Snapshot,
-      merged: Map[String, Seq[String]]): Map[String, Seq[String]] =
-    merged.map { case (f, ds) =>
-      f -> ds.filterNot(base.dels.getOrElse(f, Seq.empty).contains)
-    }.filter(_._2.nonEmpty)
-
   /** Exclusive-claim publish. On file:// the payload is written to a
     * sibling temp file and HARD-LINKED into place: link(2) is atomic
     * O_EXCL (POSIX rename overwrites silently, so rename cannot detect
@@ -2465,13 +2486,11 @@ object SnapshotLog {
     * the SAME read (the DSv2 row-level/delta writers need the ts too). */
   private[sources] def headNextTs(spark: SparkSession,
                                   root: String): (Snapshot, Int, Long) = {
-    val snaps = snapshots(spark, root)
-    require(snaps.nonEmpty, s"SnapshotLog: no snapshots at $root")
-    val main = snaps.filter(_.branch.isEmpty).lastOption.getOrElse(
-      throw new NoSuchElementException(
-        s"SnapshotLog: only branch snapshots at $root"))
-    (main, snaps.last.version + 1,
-      math.max(System.currentTimeMillis(), snaps.last.commitTsMs + 1))
+    val (main, next, lastTs) = resolveRef(spark, root, Ref.Main)
+    require(next > 1, s"SnapshotLog: no snapshots at $root")
+    (main.getOrElse(throw new NoSuchElementException(
+        s"SnapshotLog: only branch snapshots at $root")),
+      next, math.max(System.currentTimeMillis(), lastTs + 1))
   }
 
   /** Read a snapshot: the latest, a pinned version, or AS-OF a timestamp
@@ -2904,21 +2923,6 @@ object SnapshotLog {
     out.select(cols.map(col): _*)
   }
 
-  /** MERGE-ON-READ delete (Iceberg positional delete files): instead of
-    * rewriting every touched data file (copy-on-write — O(file size) per
-    * mutation), write one small parquet of (file_path, pos) coordinates
-    * for the matching rows and commit a metadata-only "delete" snapshot
-    * mapping each affected data file to its delete files. Readers
-    * anti-join / ordinal-skip at scan time; `rewriteDataFiles` folds the
-    * deletes back into plain data files. This is THE trickle-delete
-    * answer at 100 TB: a 10-row delete against a 10 GB file costs a
-    * kilobyte-scale write, not a 10 GB rewrite.
-    *
-    * The matching scan goes through the DSv2 source, so manifest-stats
-    * pruning bounds it to files that can hold a matching row, and already-
-    * deleted ordinals are excluded (stacked deletes never double-count).
-    * Returns the new version, or the current version when nothing
-    * matched. */
   /** Write positional-delete parquet(s) from `matched` (a frame exposing
     * `_file`/`_pos`), range-partitioned by (file_path, pos) and sorted
     * within each partition so readers filter in one pass. A trickle
@@ -2929,11 +2933,11 @@ object SnapshotLog {
     * coordinates (range partitioning keeps one file's ordinals in at
     * most a couple of parts), so reader-side delete loading stays
     * proportional to the file's own residue, not the statement size.
-    * Returns (delete dir, delete files, merged per-data-file dels map),
-    * or None when nothing matched (dir already cleaned up). */
+    * Returns (delete dir, delete files per affected data file), or None
+    * when nothing matched (dir already cleaned up). */
   private def stageDeleteFiles(spark: SparkSession, root: String,
-      cur: Snapshot, matched: DataFrame)
-      : Option[(Path, Seq[String], Map[String, Seq[String]])] = {
+      matched: DataFrame)
+      : Option[(Path, Map[String, Seq[String]])] = {
     import org.apache.spark.sql.functions.{col, regexp_replace}
     val fs = fsFor(spark, new Path(root))
     val delDir = new Path(new Path(root, "deletes"),
@@ -2963,11 +2967,8 @@ object SnapshotLog {
       // empty range partitions wrote empty parts: reclaim them
       delFiles.filterNot(d => referenced.contains(norm(d)))
         .foreach(d => fs.delete(new Path(d), false))
-      val live = delFiles.filter(d => referenced.contains(norm(d)))
-      val byData = pairs.groupBy(_._1).view
-        .mapValues(_.map(p => byNorm(norm(p._2))).toSeq.distinct.sorted).toMap
-      Some((delDir, live, cur.dels ++ byData.map { case (f, ds) =>
-        f -> (cur.dels.getOrElse(f, Seq.empty) ++ ds) }))
+      Some((delDir, pairs.groupBy(_._1).view
+        .mapValues(_.map(p => byNorm(norm(p._2))).toSeq.distinct.sorted).toMap))
     }
   }
 
@@ -2984,8 +2985,7 @@ object SnapshotLog {
     * exactly one partition), only (data file, dv path) pairs reach the
     * driver. Same return shape as [[stageDeleteFiles]]. */
   private def stageDeleteVectors(spark: SparkSession, root: String,
-      cur: Snapshot, matched: DataFrame)
-      : Option[(Path, Seq[String], Map[String, Seq[String]])] = {
+      matched: DataFrame): Option[(Path, Map[String, Seq[String]])] = {
     import org.apache.spark.sql.functions.{col, regexp_replace}
     val fs = fsFor(spark, new Path(root))
     val delDir = new Path(new Path(root, "deletes"),
@@ -3020,366 +3020,56 @@ object SnapshotLog {
         }
       }.collect()
     if (pairs.isEmpty) { fs.delete(delDir, true); None }
-    else {
-      val byData = pairs.groupBy(_._1).view
-        .mapValues(_.map(_._2).toSeq.sorted).toMap
-      Some((delDir, pairs.map(_._2).toSeq.sorted,
-        cur.dels ++ byData.map { case (f, ds) =>
-          f -> (cur.dels.getOrElse(f, Seq.empty) ++ ds) }))
-    }
+    else Some((delDir,
+      pairs.groupBy(_._1).view.mapValues(_.map(_._2).toSeq.sorted).toMap))
   }
 
+  /** Stage the delete coordinates of `matched` in the flavor the table
+    * asks for: `.dv` vectors under `write.delete.vector=true`, else
+    * positional delete parquet. */
+  private def stageDeletes(spark: SparkSession, root: String,
+      matched: DataFrame, tblProps: Map[String, String])
+      : Option[(Path, Map[String, Seq[String]])] =
+    if (tblProps.get("write.delete.vector").contains("true"))
+      stageDeleteVectors(spark, root, matched)
+    else stageDeleteFiles(spark, root, matched)
+
+  /** MERGE-ON-READ delete (Iceberg positional delete files): instead of
+    * rewriting every touched data file (copy-on-write — O(file size) per
+    * mutation), write one small parquet of (file_path, pos) coordinates
+    * for the matching rows and commit a metadata-only "delete" snapshot
+    * mapping each affected data file to its delete files. Readers
+    * anti-join / ordinal-skip at scan time; `rewriteDataFiles` folds the
+    * deletes back into plain data files. This is THE trickle-delete
+    * answer at 100 TB: a 10-row delete against a 10 GB file costs a
+    * kilobyte-scale write, not a 10 GB rewrite.
+    *
+    * The matching scan goes through the DSv2 source, so manifest-stats
+    * pruning bounds it to files that can hold a matching row, and already-
+    * deleted ordinals are excluded (stacked deletes never double-count).
+    * With `branch` the statement runs on that branch instead of main —
+    * the audit step of write-audit-publish (see [[commitChange]] for how
+    * the two refs differ). Returns the new version, or the head version
+    * when nothing matched. */
   def deleteWhereMoR(spark: SparkSession, root: String,
                      cond: org.apache.spark.sql.Column,
-                     commitTsMs: Long): Int = {
+                     commitTsMs: Long, branch: Option[String] = None): Int = {
     import org.apache.spark.sql.functions.{coalesce, lit}
-    val cur = pick(spark, root, None, None)
-    require(cur.commitTsMs < commitTsMs,
-      s"commitTsMs $commitTsMs must advance past the last snapshot")
+    val ref = Ref.of(branch)
+    val cur = dmlHead(spark, root, ref, commitTsMs)
     if (cur.files.isEmpty) return cur.version
-    val fs = fsFor(spark, new Path(root))
     // (file, ordinal) coordinates of the doomed rows, via the pruning
-    // DSv2 scan pinned at the current version
+    // DSv2 scan pinned at the head
     val matched = spark.read.format("snapshotlog")
       .option("asOfVersion", cur.version).load(root)
       .filter(coalesce(cond, lit(false)))
-    val useDv = (try tableProps(spark, root)
-      catch { case scala.util.control.NonFatal(_) => Map.empty[String, String] })
-      .get("write.delete.vector").contains("true")
-    (if (useDv) stageDeleteVectors(spark, root, cur, matched)
-     else stageDeleteFiles(spark, root, cur, matched)) match {
+    val tblProps = tablePropsOrEmpty(spark, root)
+    stageDeletes(spark, root, matched, tblProps) match {
       case None => cur.version
-      case Some((delDir, _, merged)) =>
-        val delta = delsDelta(cur, merged)
-        // optimistic re-apply: a concurrent append merges (delete files
-        // fold onto the fresh head); overlapping row-level work refuses
-        val committed = try retryingCommit("deleteWhereMoR") { () =>
-          val (head, nextV) = headAndNext(spark, root)
-          val ts = if (head.version == cur.version) commitTsMs else {
-            validateReapply("deleteWhereMoR", cur, head, delta.keySet)
-            math.max(commitTsMs, head.commitTsMs + 1)
-          }
-          val mergedNow = head.dels ++ delta.map { case (f, ds) =>
-            f -> (head.dels.getOrElse(f, Seq.empty) ++ ds) }
-          commitManifest(fs, root, nextV, "delete", ts,
-            head.schemaJson, head.files, head.stats, head.sizes,
-            Map("delete.mode" -> "merge-on-read"),
-            head.spec, head.parts, head.cols, mergedNow,
-            head.fids, head.colIds, head.maxId, head.specs, head.fileSpec,
-            head.version, head.rows)
-          nextV
-        } catch {
-          case e: IllegalStateException => fs.delete(delDir, true); throw e
-        }
-        locally { maybeMaintain(spark, root); committed }
-    }
-  }
-
-  /** MoR DELETE on a BRANCH — the missing half of write-audit-publish:
-    * stage data on the branch ([[commitToBranch]]), AUDIT it, delete the
-    * rows that fail the audit ON THE BRANCH with this, then
-    * [[fastForward]] publishes the corrected content. Same staging
-    * machinery as [[deleteWhereMoR]] (positional parquet or `.dv`
-    * vectors per `write.delete.vector`), pinned at the branch head; the
-    * new snapshot carries `ref=<branch>` and the branch ref advances —
-    * main is untouched until publish. A branch head that moved during
-    * staging REFUSES (no silent re-apply across a concurrent branch
-    * writer — row-level work is never blind-merged). */
-  def deleteWhereMoRBranch(spark: SparkSession, root: String, branch: String,
-                           cond: org.apache.spark.sql.Column,
-                           commitTsMs: Long): Int = {
-    import org.apache.spark.sql.functions.{coalesce, lit}
-    val typed = refsTyped(spark, root)
-    val (kind, headV) = typed.getOrElse(branch,
-      throw new NoSuchElementException(
-        s"SnapshotLog: no branch '$branch' at $root"))
-    require(kind == "branch", s"SnapshotLog: ref '$branch' is a $kind")
-    val snaps = snapshots(spark, root)
-    val cur = snaps.find(_.version == headV).getOrElse(
-      throw new IllegalStateException(
-        s"SnapshotLog: branch '$branch' head v$headV expired at $root"))
-    if (cur.files.isEmpty) return cur.version
-    require(snaps.forall(_.commitTsMs < commitTsMs),
-      s"commitTsMs $commitTsMs must advance past the last snapshot")
-    val fs = fsFor(spark, new Path(root))
-    val matched = spark.read.format("snapshotlog")
-      .option("asOfVersion", cur.version).load(root)
-      .filter(coalesce(cond, lit(false)))
-    val useDv = (try tableProps(spark, root)
-      catch { case scala.util.control.NonFatal(_) => Map.empty[String, String] })
-      .get("write.delete.vector").contains("true")
-    (if (useDv) stageDeleteVectors(spark, root, cur, matched)
-     else stageDeleteFiles(spark, root, cur, matched)) match {
-      case None => cur.version
-      case Some((delDir, _, merged)) =>
-        branchDmlAfterStage()
-        val committed = try retryingCommit("deleteWhereMoRBranch") { () =>
-          // the version counter is GLOBAL (branch commits share the log's
-          // numbering) — allocate under the retry loop so mainline racers
-          // only cost a re-allocation, never a content conflict
-          val snapsNow = snapshots(spark, root)
-          if (!refsTyped(spark, root).get(branch).exists(_._2 == headV))
-            throw new CommitConflictException(
-              s"SnapshotLog: branch '$branch' advanced during the delete " +
-                "staging — re-run against the new head")
-          val next = snapsNow.last.version + 1
-          val ts = math.max(commitTsMs, snapsNow.last.commitTsMs + 1)
-          commitManifest(fs, root, next, "delete", ts, cur.schemaJson,
-            cur.files, cur.stats, cur.sizes,
-            Map("ref" -> branch, "delete.mode" -> "merge-on-read"),
-            cur.spec, cur.parts, cur.cols, merged, cur.fids, cur.colIds,
-            cur.maxId, cur.specs, cur.fileSpec, cur.version, cur.rows)
-          next
-        } catch {
-          case e: IllegalStateException => fs.delete(delDir, true); throw e
-        }
-        branchDmlBeforeRefWrite()
-        advanceBranchRef(spark, root, branch, headV, committed)
-        committed
-    }
-  }
-
-  /** MoR UPDATE on a BRANCH — the audit-FIX half of WAP DML (the
-    * audit-delete half is [[deleteWhereMoRBranch]]): rewrite the failing
-    * rows' values ON THE BRANCH (delete coordinates + re-inserted
-    * updated rows, exactly [[updateWhereMoR]]'s shape), pinned at the
-    * branch head; the snapshot carries `ref=<branch>`, the branch ref
-    * advances, main is untouched until [[fastForward]]. A branch head
-    * that moved during staging refuses. */
-  def updateWhereMoRBranch(spark: SparkSession, root: String, branch: String,
-                           cond: org.apache.spark.sql.Column,
-                           set: Map[String, org.apache.spark.sql.Column],
-                           commitTsMs: Long, numFiles: Int = 2): Int = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val typed = refsTyped(spark, root)
-    val (kind, headV) = typed.getOrElse(branch,
-      throw new NoSuchElementException(
-        s"SnapshotLog: no branch '$branch' at $root"))
-    require(kind == "branch", s"SnapshotLog: ref '$branch' is a $kind")
-    val snaps = snapshots(spark, root)
-    val cur = snaps.find(_.version == headV).getOrElse(
-      throw new IllegalStateException(
-        s"SnapshotLog: branch '$branch' head v$headV expired at $root"))
-    if (cur.files.isEmpty) return cur.version
-    require(snaps.forall(_.commitTsMs < commitTsMs),
-      s"commitTsMs $commitTsMs must advance past the last snapshot")
-    val bad = set.keySet -- cur.schema.fieldNames.toSet
-    require(bad.isEmpty,
-      s"updateWhereMoRBranch: unknown column(s) ${bad.mkString(",")}")
-    val fs = fsFor(spark, new Path(root))
-    val matched = spark.read.format("snapshotlog")
-      .option("asOfVersion", cur.version).load(root)
-      .select(col("_file"), col("_pos"), col("*"))
-      .filter(coalesce(cond, lit(false)))
-      .localCheckpoint()
-    val useDv = (try tableProps(spark, root)
-      catch { case scala.util.control.NonFatal(_) => Map.empty[String, String] })
-      .get("write.delete.vector").contains("true")
-    (if (useDv) stageDeleteVectors(spark, root, cur, matched)
-     else stageDeleteFiles(spark, root, cur, matched)) match {
-      case None => cur.version
-      case Some((delDir, _, merged)) =>
-        val dataDir = new Path(new Path(root, "data"),
-          java.util.UUID.randomUUID().toString.take(12))
-        matched
-          .select(cur.schema.fields.map(f =>
-            set.getOrElse(f.name, col(f.name)).as(f.name)).toSeq: _*)
-          .repartition(math.max(1, numFiles)).write.parquet(dataDir.toString)
-        val statuses = fs.listStatus(dataDir)
-          .filter(s => s.getPath.getName.startsWith("part-") &&
-            s.getPath.getName.endsWith(".parquet"))
-          .sortBy(_.getPath.getName)
-        val rowCounts = footerRowCounts(spark.sessionState.newHadoopConf(),
-          statuses.map(_.getPath.toString).toSeq)
-        val newFiles = statuses.map(_.getPath.toString).toSeq
-          .filter(f => rowCounts(norm(f)) > 0)
-        statuses.map(_.getPath.toString).filterNot(newFiles.contains)
-          .foreach(f => fs.delete(new Path(f), false))
-        val newSizes = statuses
-          .filter(s => newFiles.contains(s.getPath.toString))
-          .map(s => norm(s.getPath.toString) -> s.getLen).toMap
-        val (newStats, newCols, newRows, newNulls) =
-          footerMeta(spark.sessionState.newHadoopConf(), newFiles, cur.schema)
-        branchDmlAfterStage()
-        val committed = try retryingCommit("updateWhereMoRBranch") { () =>
-          val snapsNow = snapshots(spark, root)
-          if (!refsTyped(spark, root).get(branch).exists(_._2 == headV))
-            throw new CommitConflictException(
-              s"SnapshotLog: branch '$branch' advanced during the update " +
-                "staging — re-run against the new head")
-          val next = snapsNow.last.version + 1
-          val ts = math.max(commitTsMs, snapsNow.last.commitTsMs + 1)
-          val allFiles = cur.files ++ newFiles
-          val (fids, colIds, maxId) =
-            fidCarry(Some(cur), cur.schema, allFiles, newCols)
-          commitManifest(fs, root, next, "update", ts, cur.schemaJson,
-            allFiles, cur.stats ++ newStats, cur.sizes ++ newSizes,
-            Map("ref" -> branch, "update.mode" -> "merge-on-read"),
-            cur.spec, cur.parts, cur.cols ++ newCols, merged, fids, colIds,
-            maxId, cur.specs, cur.fileSpec, cur.version,
-            cur.rows ++ newRows)
-          next
-        } catch {
-          case e: IllegalStateException =>
-            fs.delete(delDir, true); fs.delete(dataDir, true); throw e
-        }
-        // index sidecars AFTER the commit succeeds: on refusal the data
-        // files above are deleted, and sidecar entries written first would
-        // reference them forever (expireSidecars only reclaims files that
-        // appear in dead snapshots). A scan between commit and these
-        // writes merely keeps the new files (conservative).
-        SnapshotBlooms.writeBothSidecars(spark, root, newFiles, cur.schema, newRows)
-        SnapshotNulls.record(spark, root, newNulls)
-        branchDmlBeforeRefWrite()
-        advanceBranchRef(spark, root, branch, headV, committed)
-        committed
-    }
-  }
-
-  /** Test seam for branch DML: invoked after row/delete staging, before
-    * the commit closure — lets specs interleave a concurrent branch
-    * writer DETERMINISTICALLY (the refusal paths are otherwise pure
-    * races). Production value is a no-op. */
-  private[graft] var branchDmlAfterStage: () => Unit = () => ()
-
-  /** Second test seam: invoked after the branch DML's snapshot is
-    * DURABLY COMMITTED but before [[advanceBranchRef]] re-proves the ref —
-    * the narrow window whose loss ORPHANS the committed snapshot
-    * (surfaced via CommitConflictException.orphanVersion). */
-  private[graft] var branchDmlBeforeRefWrite: () => Unit = () => ()
-
-  /** Resolve `branch` to (head snapshot, all snapshots), with the usual
-    * misuse refusals — shared by the branch DML entry points. */
-  private def branchHeadFor(spark: SparkSession, root: String,
-                            branch: String, commitTsMs: Long)
-      : (Snapshot, Seq[Snapshot]) = {
-    val typed = refsTyped(spark, root)
-    val (kind, headV) = typed.getOrElse(branch,
-      throw new NoSuchElementException(
-        s"SnapshotLog: no branch '$branch' at $root"))
-    require(kind == "branch", s"SnapshotLog: ref '$branch' is a $kind")
-    val snaps = snapshots(spark, root)
-    val cur = snaps.find(_.version == headV).getOrElse(
-      throw new IllegalStateException(
-        s"SnapshotLog: branch '$branch' head v$headV expired at $root"))
-    require(snaps.forall(_.commitTsMs < commitTsMs),
-      s"commitTsMs $commitTsMs must advance past the last snapshot")
-    (cur, snaps)
-  }
-
-  /** ATOMIC MoR UPSERT (MERGE) on a BRANCH — the WAP merge that completes
-    * branch DML parity with mainline (reference: Iceberg MERGE INTO,
-    * bodo/io/iceberg/merge_into.py, composed with write-audit-publish):
-    * ONE branch snapshot that EQUALITY-DELETES the batch's keys from the
-    * files at the branch head and appends the batch rows — the audit-fix
-    * that needs upsert semantics no longer has to publish-then-merge.
-    * Same staging as [[upsertEqualityMoR]] (range-partitioned equality
-    * delete parquet scoped per (data file, delete file) pair), pinned at
-    * the branch head; the snapshot carries `ref=<branch>`, the branch ref
-    * advances, main is untouched until [[fastForward]]. A branch head
-    * that moved during staging REFUSES (checked in the commit closure AND
-    * re-proved at ref-write time — row-level work is never blind-merged
-    * across a concurrent branch writer). */
-  def upsertEqualityMoRBranch(spark: SparkSession, root: String,
-                              branch: String, batch: DataFrame,
-                              keyCols: Seq[String], commitTsMs: Long,
-                              numFiles: Int = 1): Int = {
-    import org.apache.spark.sql.functions.col
-    val (cur, _) = branchHeadFor(spark, root, branch, commitTsMs)
-    if (cur.files.isEmpty)
-      return commitToBranch(spark, root, branch, batch, commitTsMs,
-        math.max(1, numFiles))
-    val headV = cur.version
-    val schema = cur.schema
-    val conformed = batch.select(schema.fields.map(f =>
-      col(f.name).cast(f.dataType).as(f.name)).toSeq: _*).localCheckpoint()
-    val fs = fsFor(spark, new Path(root))
-    val staged = stageEqualityDelete(spark, root, cur,
-      conformed.select(keyCols.map(col): _*))
-    val merged = staged.map(_._2).getOrElse(cur.dels)
-    val dataDir = new Path(new Path(root, "data"),
-      java.util.UUID.randomUUID().toString.take(12))
-    conformed.repartition(math.max(1, numFiles)).write.parquet(dataDir.toString)
-    val statuses = fs.listStatus(dataDir)
-      .filter(st => st.getPath.getName.startsWith("part-") &&
-        st.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-    val rowCounts = footerRowCounts(spark.sessionState.newHadoopConf(),
-      statuses.map(_.getPath.toString).toSeq)
-    val newFiles = statuses.map(_.getPath.toString).toSeq
-      .filter(f => rowCounts(norm(f)) > 0)
-    statuses.map(_.getPath.toString).filterNot(newFiles.contains)
-      .foreach(f => fs.delete(new Path(f), false))
-    val newSizes = statuses
-      .filter(st => newFiles.contains(st.getPath.toString))
-      .map(st => norm(st.getPath.toString) -> st.getLen).toMap
-    val (newStats, newCols, newRows, newNulls) =
-      footerMeta(spark.sessionState.newHadoopConf(), newFiles, schema)
-    branchDmlAfterStage()
-    val committed = try retryingCommit("upsertEqualityMoRBranch") { () =>
-      val snapsNow = snapshots(spark, root)
-      if (!refsTyped(spark, root).get(branch).exists(_._2 == headV))
-        throw new CommitConflictException(
-          s"SnapshotLog: branch '$branch' advanced during the merge " +
-            "staging — re-run against the new head")
-      val next = snapsNow.last.version + 1
-      val ts = math.max(commitTsMs, snapsNow.last.commitTsMs + 1)
-      val allFiles = cur.files ++ newFiles
-      val (fids, colIds, maxId) = fidCarry(Some(cur), schema, allFiles, newCols)
-      commitManifest(fs, root, next, "upsert", ts, cur.schemaJson, allFiles,
-        cur.stats ++ newStats, cur.sizes ++ newSizes,
-        Map("ref" -> branch, "upsert.mode" -> "merge-on-read-equality"),
-        cur.spec, cur.parts, cur.cols ++ newCols, merged, fids, colIds,
-        maxId, cur.specs, cur.fileSpec, cur.version, cur.rows ++ newRows)
-      next
-    } catch {
-      case e: IllegalStateException =>
-        staged.foreach { case (dd, _) => fs.delete(dd, true) }
-        fs.delete(dataDir, true); throw e
-    }
-    // null sidecar AFTER the commit (same orphan-avoidance as mainline)
-    SnapshotNulls.record(spark, root, newNulls)
-    branchDmlBeforeRefWrite()
-    advanceBranchRef(spark, root, branch, headV, committed)
-    committed
-  }
-
-  /** Equality DELETE on a BRANCH — [[deleteEqualityMoR]]'s branch twin
-    * (delete-by-key-set during audit, e.g. "drop these ids before
-    * publish"): stages the same range-partitioned equality delete parquet
-    * against the branch head, commits with `ref=<branch>`, refuses if the
-    * branch moved. */
-  def deleteEqualityMoRBranch(spark: SparkSession, root: String,
-                              branch: String, keys: DataFrame,
-                              commitTsMs: Long): Int = {
-    val (cur, _) = branchHeadFor(spark, root, branch, commitTsMs)
-    if (cur.files.isEmpty) return cur.version
-    val headV = cur.version
-    val fs = fsFor(spark, new Path(root))
-    stageEqualityDelete(spark, root, cur, keys) match {
-      case None => cur.version
-      case Some((delDir, merged)) =>
-        branchDmlAfterStage()
-        val committed = try retryingCommit("deleteEqualityMoRBranch") { () =>
-          val snapsNow = snapshots(spark, root)
-          if (!refsTyped(spark, root).get(branch).exists(_._2 == headV))
-            throw new CommitConflictException(
-              s"SnapshotLog: branch '$branch' advanced during the delete " +
-                "staging — re-run against the new head")
-          val next = snapsNow.last.version + 1
-          val ts = math.max(commitTsMs, snapsNow.last.commitTsMs + 1)
-          commitManifest(fs, root, next, "delete", ts, cur.schemaJson,
-            cur.files, cur.stats, cur.sizes,
-            Map("ref" -> branch, "delete.mode" -> "merge-on-read-equality"),
-            cur.spec, cur.parts, cur.cols, merged, cur.fids, cur.colIds,
-            cur.maxId, cur.specs, cur.fileSpec, cur.version, cur.rows)
-          next
-        } catch {
-          case e: IllegalStateException => fs.delete(delDir, true); throw e
-        }
-        branchDmlBeforeRefWrite()
-        advanceBranchRef(spark, root, branch, headV, committed)
-        committed
+      case Some((delDir, dels)) =>
+        commitChange(spark, root, ref, Some(cur), commitTsMs, Change("delete",
+          "delete", Map("delete.mode" -> "merge-on-read"), Seq(delDir),
+          dels = dels))
     }
   }
 
@@ -3397,9 +3087,7 @@ object SnapshotLog {
     * second call finds full coverage and builds nothing. */
   def rebuildFileIndexes(spark: SparkSession, root: String): (Int, Int) = {
     val snap = pick(spark, root, None, None)
-    val props = try tableProps(spark, root)
-                catch { case scala.util.control.NonFatal(_) =>
-                  Map.empty[String, String] }
+    val props = tablePropsOrEmpty(spark, root)
     val schema = snap.schema
     def backfillable(colNames: Seq[String],
                      covered: (String, String) => Boolean): Seq[String] =
@@ -3442,20 +3130,10 @@ object SnapshotLog {
     (bFiles.size, nFiles.size)
   }
 
-  /** EQUALITY delete (Iceberg equality delete files — the CDC flavor):
-    * delete every row whose KEY COLUMNS match any row of `keys`, without
-    * knowing positions — the shape a change stream provides. The delete
-    * file stores the key VALUES (its parquet schema IS the key list;
-    * readers distinguish it from positional files by that schema), and
-    * the manifest scopes it to the data files present NOW — files
-    * appended later are unaffected (Iceberg's sequence-number rule,
-    * expressed through manifest versioning). Scoping is stats-pruned:
-    * files whose manifest min/max provably exclude every key carry no
-    * delete reference and pay nothing at read time. */
   /** Stage one equality-delete parquet for `keys` against snapshot `cur`:
-    * returns (delete dir, merged dels map scoped to the stats-affected
-    * CURRENT files), or None when the key set is empty or provably
-    * touches nothing (dir cleaned up). */
+    * returns (delete dir, delete files per stats-affected CURRENT file),
+    * or None when the key set is empty or provably touches nothing (dir
+    * cleaned up). */
   private def stageEqualityDelete(spark: SparkSession, root: String,
       cur: Snapshot, keys: DataFrame)
       : Option[(Path, Map[String, Seq[String]])] = {
@@ -3515,40 +3193,33 @@ object SnapshotLog {
       if (mine.isEmpty) None else Some(norm(f) -> mine)
     }.toMap
     if (pairs.isEmpty) { fs.delete(delDir, true); None }
-    else Some((delDir, cur.dels ++ pairs.map { case (f, ds) =>
-      f -> (cur.dels.getOrElse(f, Seq.empty) ++ ds) }))
+    else Some((delDir, pairs))
   }
 
+  /** EQUALITY delete (Iceberg equality delete files — the CDC flavor):
+    * delete every row whose KEY COLUMNS match any row of `keys`, without
+    * knowing positions — the shape a change stream provides. The delete
+    * file stores the key VALUES (its parquet schema IS the key list;
+    * readers distinguish it from positional files by that schema), and
+    * the manifest scopes it to the data files present NOW — files
+    * appended later are unaffected (Iceberg's sequence-number rule,
+    * expressed through manifest versioning). Scoping is stats-pruned:
+    * files whose manifest min/max provably exclude every key carry no
+    * delete reference and pay nothing at read time. `branch` as in
+    * [[deleteWhereMoR]]. */
   def deleteEqualityMoR(spark: SparkSession, root: String,
-                        keys: DataFrame, commitTsMs: Long): Int = {
-    val cur = pick(spark, root, None, None)
-    require(cur.commitTsMs < commitTsMs,
-      s"commitTsMs $commitTsMs must advance past the last snapshot")
+                        keys: DataFrame, commitTsMs: Long,
+                        branch: Option[String] = None): Int = {
+    val ref = Ref.of(branch)
+    val cur = dmlHead(spark, root, ref, commitTsMs)
     if (cur.files.isEmpty) return cur.version
-    val fs = fsFor(spark, new Path(root))
     stageEqualityDelete(spark, root, cur, keys) match {
       case None => cur.version
-      case Some((delDir, merged)) =>
-        val delta = delsDelta(cur, merged)
-        val committed = try retryingCommit("deleteEqualityMoR") { () =>
-          val (head, nextV) = headAndNext(spark, root)
-          val ts = if (head.version == cur.version) commitTsMs else {
-            validateReapply("deleteEqualityMoR", cur, head, delta.keySet)
-            math.max(commitTsMs, head.commitTsMs + 1)
-          }
-          val mergedNow = head.dels ++ delta.map { case (f, ds) =>
-            f -> (head.dels.getOrElse(f, Seq.empty) ++ ds) }
-          commitManifest(fs, root, nextV, "delete", ts,
-            head.schemaJson, head.files, head.stats, head.sizes,
-            Map("delete.mode" -> "merge-on-read-equality"),
-            head.spec, head.parts, head.cols, mergedNow,
-            head.fids, head.colIds, head.maxId, head.specs, head.fileSpec,
-            head.version, head.rows)
-          nextV
-        } catch {
-          case e: IllegalStateException => fs.delete(delDir, true); throw e
-        }
-        locally { maybeMaintain(spark, root); committed }
+      case Some((delDir, dels)) =>
+        commitChange(spark, root, ref, Some(cur), commitTsMs, Change(
+          "equality delete", "delete",
+          Map("delete.mode" -> "merge-on-read-equality"), Seq(delDir),
+          dels = dels))
     }
   }
 
@@ -3558,50 +3229,36 @@ object SnapshotLog {
     * new images live in the appended fragment — which is NOT in the
     * delete's scope, so the new rows survive by construction. Cost ∝
     * batch size; compaction folds the residue. The upsert stream's
-    * steady-state is exactly this, once per micro-batch. */
+    * steady-state is exactly this, once per micro-batch. On a `branch`
+    * it is the audit-fix MERGE of write-audit-publish (reference:
+    * Iceberg MERGE INTO, bodo/io/iceberg/merge_into.py). An empty head
+    * makes it a plain [[commit]]. */
   def upsertEqualityMoR(spark: SparkSession, root: String, batch: DataFrame,
                         keyCols: Seq[String], commitTsMs: Long,
                         numFiles: Int = 1,
-                        props: Map[String, String] = Map.empty): Int = {
+                        props: Map[String, String] = Map.empty,
+                        branch: Option[String] = None): Int = {
     import org.apache.spark.sql.functions.col
-    val prior = snapshots(spark, root)
-    // Build on the MAINLINE head, like every other DML entry point via
-    // pick(): if the latest snapshot is a branch commit (e.g. mid
-    // write-audit-publish), upserting on top of it would silently publish
-    // unaudited branch data into main.
-    val mainline = prior.filter(_.branch.isEmpty)
-    if (mainline.isEmpty || mainline.last.files.isEmpty)
-      return commit(batch, root, overwrite = mainline.isEmpty,
-        commitTsMs, math.max(1, numFiles), props)
-    val cur = mainline.last
+    val ref = Ref.of(branch)
+    // the ref's own head: on main never an unpublished branch commit, so
+    // an upsert cannot silently publish unaudited branch data
+    val head = resolveRef(spark, root, ref)._1
+    if (head.forall(_.files.isEmpty))
+      return commit(batch, root, overwrite = head.isEmpty,
+        commitTsMs, math.max(1, numFiles), props, branch)
+    val cur = head.get
     require(cur.commitTsMs < commitTsMs,
       s"commitTsMs $commitTsMs must advance past the last snapshot")
     val schema = cur.schema
     val conformed = batch.select(schema.fields.map(f =>
       col(f.name).cast(f.dataType).as(f.name)).toSeq: _*).localCheckpoint()
-    val fs = fsFor(spark, new Path(root))
     val staged = stageEqualityDelete(spark, root, cur,
       conformed.select(keyCols.map(col): _*))
-    val merged = staged.map(_._2).getOrElse(cur.dels)
+    val tblProps = tablePropsOrEmpty(spark, root)
     // append the new images
-    val dataDir = new Path(new Path(root, "data"),
-      java.util.UUID.randomUUID().toString.take(12))
-    conformed.repartition(math.max(1, numFiles)).write.parquet(dataDir.toString)
-    val statuses = fs.listStatus(dataDir)
-      .filter(s => s.getPath.getName.startsWith("part-") &&
-        s.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-    val rows = footerRowCounts(spark.sessionState.newHadoopConf(),
-      statuses.map(_.getPath.toString).toSeq)
-    val newFiles = statuses.map(_.getPath.toString).toSeq
-      .filter(f => rows(norm(f)) > 0)
-    statuses.map(_.getPath.toString).filterNot(newFiles.contains)
-      .foreach(f => fs.delete(new Path(f), false))
-    val newSizes = statuses.filter(s => newFiles.contains(s.getPath.toString))
-      .map(s => norm(s.getPath.toString) -> s.getLen).toMap
-    val (newStats, newCols, newRows, newNulls) =
-      footerMeta(spark.sessionState.newHadoopConf(), newFiles, schema)
-    val delta = delsDelta(cur, merged)
+    val (dataDir, data) = stageData(spark, root,
+      conformed.repartition(math.max(1, numFiles)), schema, tblProps,
+      dropEmpty = true)
     // the batch's key bounds, for validateAddedFiles on re-apply (the
     // staged key set may be empty when no current file overlaps — the
     // concurrent-insert-of-a-new-key case the bounds check exists for).
@@ -3619,34 +3276,12 @@ object SnapshotLog {
         }
       }.toMap
     }
-    val committed = try retryingCommit("upsertEqualityMoR") { () =>
-      val (head, nextV) = headAndNext(spark, root)
-      val ts = if (head.version == cur.version) commitTsMs else {
-        validateReapply("upsertEqualityMoR", cur, head, delta.keySet)
-        validateAddedFiles("upsertEqualityMoR", cur, head, keyCols, keyBounds)
-        math.max(commitTsMs, head.commitTsMs + 1)
-      }
-      val mergedNow = head.dels ++ delta.map { case (f, ds) =>
-        f -> (head.dels.getOrElse(f, Seq.empty) ++ ds) }
-      val allFiles = head.files ++ newFiles
-      val (fids, colIds, maxId) = fidCarry(Some(head), schema, allFiles, newCols)
-      commitManifest(fs, root, nextV, "upsert", ts,
-        head.schemaJson, allFiles,
-        head.stats ++ newStats, head.sizes ++ newSizes,
-        props ++ Map("upsert.mode" -> "merge-on-read-equality"),
-        head.spec, head.parts, head.cols ++ newCols, mergedNow,
-        fids, colIds, maxId, head.specs, head.fileSpec, head.version,
-        head.rows ++ newRows)
-      nextV
-    } catch {
-      case e: IllegalStateException =>
-        staged.foreach { case (d, _) => fs.delete(d, true) }
-        fs.delete(dataDir, true); throw e
-    }
-    // null-count sidecar AFTER the commit: a refused commit deletes the
-    // data files, and a record written first would orphan forever
-    SnapshotNulls.record(spark, root, newNulls)
-    locally { maybeMaintain(spark, root); committed }
+    commitChange(spark, root, ref, Some(cur), commitTsMs, Change("merge",
+      "upsert", props ++ Map("upsert.mode" -> "merge-on-read-equality"),
+      staged.map(_._1).toSeq :+ dataDir, tblProps, data,
+      staged.fold(Map.empty[String, Seq[String]])(_._2),
+      reapply = (base, fresh) =>
+        validateAddedFiles("merge", base, fresh, keyCols, keyBounds)))
   }
 
   /** Canonical form for cross-engine stat comparison (mirrors the
@@ -3669,19 +3304,19 @@ object SnapshotLog {
     * answer at 100 TB, where copy-on-write rewrites a whole file per
     * statement (Iceberg's merge-on-read UPDATE semantics; compaction
     * folds both the delete files and the update fragments). `set` maps
-    * column name -> replacement expression over the current row. */
+    * column name -> replacement expression over the current row. On a
+    * `branch` it is the audit-fix half of write-audit-publish. */
   def updateWhereMoR(spark: SparkSession, root: String,
                      cond: org.apache.spark.sql.Column,
                      set: Map[String, org.apache.spark.sql.Column],
-                     commitTsMs: Long, numFiles: Int = 1): Int = {
+                     commitTsMs: Long, numFiles: Int = 1,
+                     branch: Option[String] = None): Int = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val cur = pick(spark, root, None, None)
-    require(cur.commitTsMs < commitTsMs,
-      s"commitTsMs $commitTsMs must advance past the last snapshot")
+    val ref = Ref.of(branch)
+    val cur = dmlHead(spark, root, ref, commitTsMs)
     if (cur.files.isEmpty) return cur.version
     val bad = set.keySet -- cur.schema.fieldNames.toSet
     require(bad.isEmpty, s"updateWhereMoR: unknown column(s) ${bad.mkString(",")}")
-    val fs = fsFor(spark, new Path(root))
     // one pruned scan feeds BOTH the delete coordinates and the updated
     // rows; localCheckpoint so the matched set is computed once
     val matched = spark.read.format("snapshotlog")
@@ -3690,61 +3325,18 @@ object SnapshotLog {
         col("*")) // data columns after the coordinates
       .filter(coalesce(cond, lit(false)))
       .localCheckpoint()
-    val useDv = (try tableProps(spark, root)
-      catch { case scala.util.control.NonFatal(_) => Map.empty[String, String] })
-      .get("write.delete.vector").contains("true")
-    (if (useDv) stageDeleteVectors(spark, root, cur, matched)
-     else stageDeleteFiles(spark, root, cur, matched)) match {
+    val tblProps = tablePropsOrEmpty(spark, root)
+    stageDeletes(spark, root, matched, tblProps) match {
       case None => cur.version
-      case Some((delDir, _, merged)) =>
-        val dataDir = new Path(new Path(root, "data"),
-          java.util.UUID.randomUUID().toString.take(12))
-        matched
-          .select(cur.schema.fields.map(f =>
+      case Some((delDir, dels)) =>
+        val (dataDir, data) = stageData(spark, root,
+          matched.select(cur.schema.fields.map(f =>
             set.getOrElse(f.name, col(f.name)).as(f.name)).toSeq: _*)
-          .repartition(math.max(1, numFiles)).write.parquet(dataDir.toString)
-        val statuses = fs.listStatus(dataDir)
-          .filter(s => s.getPath.getName.startsWith("part-") &&
-            s.getPath.getName.endsWith(".parquet"))
-          .sortBy(_.getPath.getName)
-        val rows = footerRowCounts(spark.sessionState.newHadoopConf(),
-          statuses.map(_.getPath.toString).toSeq)
-        val newFiles = statuses.map(_.getPath.toString).toSeq
-          .filter(f => rows(norm(f)) > 0)
-        statuses.map(_.getPath.toString).filterNot(newFiles.contains)
-          .foreach(f => fs.delete(new Path(f), false))
-        val newSizes = statuses.filter(s => newFiles.contains(s.getPath.toString))
-          .map(s => norm(s.getPath.toString) -> s.getLen).toMap
-        val (newStats, newCols, newRows, newNulls) =
-          footerMeta(spark.sessionState.newHadoopConf(), newFiles, cur.schema)
-        val delta = delsDelta(cur, merged)
-        val committed = try retryingCommit("updateWhereMoR") { () =>
-          val (head, nextV) = headAndNext(spark, root)
-          val ts = if (head.version == cur.version) commitTsMs else {
-            validateReapply("updateWhereMoR", cur, head, delta.keySet)
-            math.max(commitTsMs, head.commitTsMs + 1)
-          }
-          val mergedNow = head.dels ++ delta.map { case (f, ds) =>
-            f -> (head.dels.getOrElse(f, Seq.empty) ++ ds) }
-          val allFiles = head.files ++ newFiles
-          val (fids, colIds, maxId) =
-            fidCarry(Some(head), cur.schema, allFiles, newCols)
-          commitManifest(fs, root, nextV, "update", ts,
-            head.schemaJson, allFiles,
-            head.stats ++ newStats, head.sizes ++ newSizes,
-            Map("update.mode" -> "merge-on-read"),
-            head.spec, head.parts, head.cols ++ newCols, mergedNow,
-            fids, colIds, maxId, head.specs, head.fileSpec, head.version,
-            head.rows ++ newRows)
-          nextV
-        } catch {
-          case e: IllegalStateException =>
-            fs.delete(delDir, true); fs.delete(dataDir, true); throw e
-        }
-        // null-count sidecar AFTER the commit: a refused commit deletes
-        // the data files, and a record written first would orphan forever
-        SnapshotNulls.record(spark, root, newNulls)
-        locally { maybeMaintain(spark, root); committed }
+            .repartition(math.max(1, numFiles)),
+          cur.schema, tblProps, dropEmpty = true)
+        commitChange(spark, root, ref, Some(cur), commitTsMs, Change("update",
+          "update", Map("update.mode" -> "merge-on-read"),
+          Seq(delDir, dataDir), tblProps, data, dels))
     }
   }
 
@@ -3905,8 +3497,6 @@ object SnapshotLog {
     val schema = cur.schema
     val numOut = math.max(1L,
       (small.map(sizeOf).sum + targetBytes - 1) / targetBytes).toInt
-    val dataDir = new Path(new Path(root, "data"),
-      java.util.UUID.randomUUID().toString.take(12))
     // the rewrite conforms every output file to the current table schema:
     // columns absent from pre-evolution files fill their declared DEFAULT
     // (else null) — a raw supplied-schema read would MATERIALIZE null into
@@ -3924,17 +3514,10 @@ object SnapshotLog {
     // ACTIVE spec with fresh partition tuples, so pruning keeps working
     // on the compacted files — an unpartitioned rewrite would silently
     // degrade every probe on the table to a full scan
-    val (newFiles, newSizes, newParts) =
+    val (dataDir, data) =
       if (cur.spec.nonEmpty) {
-        val pCols = cur.spec.zipWithIndex.map { case ((src, tr), i) =>
-          SnapshotPartition.transformCol(src, tr,
-            schema(src).dataType).as(s"_p_$i")
-        }
-        val found = writePartitionedData(spark, input, dataDir, pCols,
-          cur.spec, sortBy = clusterBy)
-        (found.map(_._1),
-          found.map(f => norm(f._1) -> f._2).toMap,
-          found.map(f => norm(f._1) -> f._3).toMap)
+        val (shaped, pNames) = partitionShaped(input, cur.spec, clusterBy)
+        stageData(spark, root, shaped, schema, Map.empty, pNames)
       } else {
         import org.apache.spark.sql.functions.col
         val shaped =
@@ -3961,26 +3544,17 @@ object SnapshotLog {
             input.repartitionByRange(numOut, keys: _*)
               .sortWithinPartitions(keys: _*)
           }
-        shaped.write.parquet(dataDir.toString)
-        val statuses = fs.listStatus(dataDir)
-          .filter(s => s.getPath.getName.startsWith("part-") &&
-            s.getPath.getName.endsWith(".parquet"))
-          .sortBy(_.getPath.getName)
-        (statuses.map(_.getPath.toString).toSeq,
-          statuses.map(s => norm(s.getPath.toString) -> s.getLen).toMap,
-          Map.empty[String, Seq[String]])
+        stageData(spark, root, shaped, schema, Map.empty)
       }
-    val (newStats, newCols, newRows, newNulls) =
-      footerMeta(spark.sessionState.newHadoopConf(), newFiles, schema)
     // compacted outputs regenerate bloom coverage (an absent bloom is
     // merely weaker pruning, but compaction folding a bloom'd table
     // should not silently shed its point-lookup skipping)
-    SnapshotBlooms.writeBothSidecars(spark, root, newFiles, schema, newRows)
-    SnapshotNulls.record(spark, root, newNulls)
+    SnapshotBlooms.writeBothSidecars(spark, root, data.files, schema, data.rows)
+    SnapshotNulls.record(spark, root, data.nulls)
     // cluster-by outputs are key-sorted: record the per-file sort order so
     // the DSv2 scan can report SupportsReportOrdering (co-sorted SPJ joins
     // then skip the Sort as well as the Exchange)
-    SnapshotSorts.record(spark, root, newFiles, clusterBy)
+    SnapshotSorts.record(spark, root, data.files, clusterBy)
 
     val smallSet = small.map(norm).toSet
     // optimistic re-apply: a concurrent append carries through (the new
@@ -3993,29 +3567,21 @@ object SnapshotLog {
         validateReapply("rewriteDataFiles", cur, head, smallSet)
         math.max(commitTsMs, head.commitTsMs + 1)
       }
-      val keptNow = head.files.filterNot(f => smallSet.contains(norm(f)))
-      val keptNorm = keptNow.map(norm).toSet
+      // deletes on rewritten files are folded; kept files carry theirs
+      // (none today — dels force files into the rewrite set — but a
+      // future partial rewrite must not drop them silently)
+      val kept = withStaged(head.retain(f => !smallSet.contains(f)), data)
       val (fids, colIds, maxId) =
-        fidCarry(Some(head), schema, keptNow ++ newFiles, newCols)
-      commitManifest(fs, root, next, "rewrite", ts, head.schemaJson,
-        keptNow ++ newFiles,
-        head.stats.view.filterKeys(keptNorm).toMap ++ newStats,
-        head.sizes.view.filterKeys(keptNorm).toMap ++ newSizes,
-        Map.empty, head.spec,
-        head.parts.view.filterKeys(keptNorm).toMap ++ newParts,
-        head.cols.view.filterKeys(keptNorm).toMap ++ newCols,
-        // deletes on rewritten files are folded; kept files carry theirs
-        // (none today — dels force files into the rewrite set — but a
-        // future partial rewrite must not drop them silently)
-        head.dels.view.filterKeys(keptNorm).toMap,
-        fids, colIds, maxId, head.specs,
-        head.fileSpec.view.filterKeys(keptNorm).toMap ++
-          // rewritten files were laid out under the ACTIVE spec
+        fidCarry(Some(head), schema, kept.files, data.cols)
+      commitManifest(fs, root, kept.copy(version = next,
+        operation = "rewrite", commitTsMs = ts, props = Map.empty,
+        fids = fids, colIds = colIds, maxId = maxId,
+        // rewritten files were laid out under the ACTIVE spec
+        fileSpec = kept.fileSpec ++
           (if (head.specs.nonEmpty && head.spec.nonEmpty)
-            newFiles.map(f => norm(f) -> head.specs.indexOf(head.spec)).toMap
+            data.files.map(f => norm(f) -> head.specs.indexOf(head.spec)).toMap
           else Map.empty),
-        head.version,
-        head.rows.view.filterKeys(keptNorm).toMap ++ newRows)
+        parent = head.version))
       next
     } catch {
       case e: IllegalStateException => fs.delete(dataDir, true); throw e
@@ -4122,12 +3688,10 @@ object SnapshotLog {
         df -> (eq ++ folded.toSeq ++
           (if (hadPos) mergedFor.getOrElse(df, Seq.empty) else Seq.empty))
       }.filter(_._2.nonEmpty)
-      commitManifest(fs, root, nextV, "rewrite", ts,
-        head.schemaJson, head.files, head.stats, head.sizes,
-        Map("rewrite" -> "position-delete-files"),
-        head.spec, head.parts, head.cols, newDels,
-        head.fids, head.colIds, head.maxId, head.specs, head.fileSpec,
-        head.version, head.rows)
+      commitManifest(fs, root, head.copy(version = nextV,
+        operation = "rewrite", commitTsMs = ts,
+        props = Map("rewrite" -> "position-delete-files"), dels = newDels,
+        parent = head.version))
       nextV
     } catch {
       case e: IllegalStateException => fs.delete(delDir, true); throw e
@@ -4225,15 +3789,6 @@ object SnapshotLog {
     }
   }
 
-  /** Per-file row counts from parquet footers (metadata IO only). */
-  private[sources] def footerRowCounts(conf: Configuration,
-                              files: Seq[String]): Map[String, Long] =
-    files.map { f =>
-      val rdr = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
-      try norm(f) -> rdr.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-      finally rdr.close()
-    }.toMap
-
   /** Copy-on-write partial rewrite — the commit primitive behind DELETE:
     * the TOUCHED files are replaced by `keep` (their surviving rows), the
     * UNTOUCHED files are carried by reference (metadata only, stats and
@@ -4248,22 +3803,10 @@ object SnapshotLog {
     require(cur.commitTsMs < commitTsMs,
       s"commitTsMs $commitTsMs must advance past the last snapshot")
     val fs = fsFor(spark, new Path(root))
-    val conf = spark.sessionState.newHadoopConf()
-    val dataDir = new Path(new Path(root, "data"),
-      java.util.UUID.randomUUID().toString.take(12))
-    keep.repartition(math.max(1, numFiles)).write.parquet(dataDir.toString)
-    val statuses = fs.listStatus(dataDir)
-      .filter(s => s.getPath.getName.startsWith("part-") &&
-        s.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-    val written = statuses.map(_.getPath.toString).toSeq
-    val rows = footerRowCounts(conf, written)
-    val (newFiles, husks) = written.partition(f => rows(norm(f)) > 0)
-    husks.foreach(f => fs.delete(new Path(f), false))
-    val newSizes = statuses.filter(s => rows(norm(s.getPath.toString)) > 0)
-      .map(s => norm(s.getPath.toString) -> s.getLen).toMap
-    val (newStats, newCols, newRows, newNulls) = footerMeta(conf, newFiles, cur.schema)
-    SnapshotNulls.record(spark, root, newNulls)
+    val (dataDir, data) = stageData(spark, root,
+      keep.repartition(math.max(1, numFiles)), cur.schema, Map.empty,
+      dropEmpty = true)
+    SnapshotNulls.record(spark, root, data.nulls)
     // the files this copy-on-write REPLACES: their rows were recomputed
     // into `keep`, so a concurrent writer touching them refuses re-apply
     val replaced = cur.files.map(norm).toSet -- untouched.map(norm).toSet
@@ -4273,22 +3816,12 @@ object SnapshotLog {
         validateReapply(s"rewriteTouched($operation)", cur, head, replaced)
         math.max(commitTsMs, head.commitTsMs + 1)
       }
-      val untouchedNow = head.files.filterNot(f => replaced.contains(norm(f)))
-      val untouchedSet = untouchedNow.map(norm).toSet
+      val kept = withStaged(head.retain(f => !replaced.contains(f)), data)
       val (fids, colIds, maxId) =
-        fidCarry(Some(head), cur.schema, untouchedNow ++ newFiles, newCols)
-      commitManifest(fs, root, next, operation, ts, head.schemaJson,
-        untouchedNow ++ newFiles,
-        head.stats.view.filterKeys(untouchedSet.contains).toMap ++ newStats,
-        head.sizes.view.filterKeys(untouchedSet.contains).toMap ++ newSizes,
-        Map.empty, head.spec,
-        head.parts.view.filterKeys(untouchedSet.contains).toMap,
-        head.cols.view.filterKeys(untouchedSet.contains).toMap ++ newCols,
-        head.dels.view.filterKeys(untouchedSet.contains).toMap,
-        fids, colIds, maxId, head.specs,
-        head.fileSpec.view.filterKeys(untouchedSet.contains).toMap,
-        head.version,
-        head.rows.view.filterKeys(untouchedSet.contains).toMap ++ newRows)
+        fidCarry(Some(head), cur.schema, kept.files, data.cols)
+      commitManifest(fs, root, kept.copy(version = next,
+        operation = operation, commitTsMs = ts, props = Map.empty,
+        fids = fids, colIds = colIds, maxId = maxId, parent = head.version))
       next
     } catch {
       case e: IllegalStateException => fs.delete(dataDir, true); throw e

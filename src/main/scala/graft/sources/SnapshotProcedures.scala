@@ -661,7 +661,7 @@ private[sources] object SnapshotProcedures {
   }
 
   /** CALL snap.system.merge_branch('ns.t', 'audit', 'fix_view', 'k') —
-    * SQL surface for WAP MERGE ([[SnapshotLog.upsertEqualityMoRBranch]]):
+    * SQL surface for WAP MERGE ([[SnapshotLog.upsertEqualityMoR]] with `branch`):
     * ONE branch snapshot equality-deletes the source view's keys from
     * the branch head and appends its rows, so the whole
     * write-audit-publish loop (create_branch → DML → audit →
@@ -694,8 +694,8 @@ private[sources] object SnapshotProcedures {
       val source = spark.table(input.getUTF8String(2).toString)
       val keys = input.getUTF8String(3).toString
         .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      val v = SnapshotLog.upsertEqualityMoRBranch(spark, root, branch,
-        source, keys, SnapshotLog.nextCommitTs(spark, root))
+      val v = SnapshotLog.upsertEqualityMoR(spark, root, source, keys,
+        SnapshotLog.nextCommitTs(spark, root), branch = Some(branch))
       Iterator(resultScan(
         StructType(Seq(
           StructField("branch", StringType, nullable = false),
@@ -706,7 +706,7 @@ private[sources] object SnapshotProcedures {
 
   /** CALL snap.system.delete_branch_where('ns.t', 'audit', 'bal < 0') —
     * the audit-delete half of WAP DML from SQL
-    * ([[SnapshotLog.deleteWhereMoRBranch]]). */
+    * ([[SnapshotLog.deleteWhereMoR]] with `branch`). */
   private class DeleteBranchWhereProc(warehouse: String)
       extends UnboundProcedure with BoundProcedure {
     override def name(): String = "delete_branch_where"
@@ -726,10 +726,10 @@ private[sources] object SnapshotProcedures {
       val spark = SparkSession.active
       val root = rootFor(warehouse, input.getUTF8String(0).toString)
       val branch = input.getUTF8String(1).toString
-      val v = SnapshotLog.deleteWhereMoRBranch(spark, root, branch,
+      val v = SnapshotLog.deleteWhereMoR(spark, root,
         org.apache.spark.sql.functions.expr(
           input.getUTF8String(2).toString),
-        SnapshotLog.nextCommitTs(spark, root))
+        SnapshotLog.nextCommitTs(spark, root), branch = Some(branch))
       Iterator(resultScan(
         StructType(Seq(
           StructField("branch", StringType, nullable = false),
@@ -740,7 +740,7 @@ private[sources] object SnapshotProcedures {
 
   /** CALL snap.system.update_branch_where('ns.t', 'audit', 'k % 10 = 1',
     * 'bal = bal + 1000') — the audit-fix half of WAP DML from SQL
-    * ([[SnapshotLog.updateWhereMoRBranch]]). `set_exprs` is a
+    * ([[SnapshotLog.updateWhereMoR]] with `branch`). `set_exprs` is a
     * ';'-separated list of `col = sql-expr` assignments (exprs may
     * contain commas). */
   private class UpdateBranchWhereProc(warehouse: String)
@@ -770,10 +770,10 @@ private[sources] object SnapshotProcedures {
           a.take(i).trim ->
             org.apache.spark.sql.functions.expr(a.drop(i + 1).trim)
         }.toMap
-      val v = SnapshotLog.updateWhereMoRBranch(spark, root, branch,
+      val v = SnapshotLog.updateWhereMoR(spark, root,
         org.apache.spark.sql.functions.expr(
           input.getUTF8String(2).toString),
-        sets, SnapshotLog.nextCommitTs(spark, root))
+        sets, SnapshotLog.nextCommitTs(spark, root), branch = Some(branch))
       Iterator(resultScan(
         StructType(Seq(
           StructField("branch", StringType, nullable = false),

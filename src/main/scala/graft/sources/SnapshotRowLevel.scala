@@ -199,12 +199,16 @@ private[sources] class SnapshotReplaceBatchWrite(root: String,
     val written = messages.collect {
       case SnapshotReplaceMessage(path) if path != null => path
     }.toSeq.sorted
-    // drop zero-row outputs (a task that received no rows still opened a
-    // writer) — deleting a whole group's rows must shrink the table
-    val rowCounts = SnapshotLog.footerRowCounts(conf, written)
+    // ONE footer walk over every written file; zero-row outputs (a task
+    // that received no rows still opened a writer) are dropped —
+    // deleting a whole group's rows must shrink the table
+    val (allStats, allCols, allRows, allNulls) =
+      SnapshotLog.footerMeta(conf, written, schema)
     val (newFiles, husks) =
-      written.partition(f => rowCounts(SnapshotLog.norm(f)) > 0)
+      written.partition(f => allRows.getOrElse(SnapshotLog.norm(f), 0L) > 0)
     husks.foreach(f => fs.delete(new Path(f), false))
+    val live = newFiles.map(SnapshotLog.norm).toSet
+    def liveOf[V](m: Map[String, V]) = m.view.filterKeys(live).toMap
 
     // single atomic read: head + version slot + ts (TOCTOU guard)
     val (cur, nextV, nextTs) = SnapshotLog.headNextTs(spark, root)
@@ -215,34 +219,24 @@ private[sources] class SnapshotReplaceBatchWrite(root: String,
           s"$operation planned against v${snap.version}) — retry the statement")
     }
     val replaced = scannedFiles().map(SnapshotLog.norm).toSet
-    val untouched = cur.files.filterNot(f => replaced.contains(SnapshotLog.norm(f)))
-    val untouchedSet = untouched.map(SnapshotLog.norm).toSet
-    val (newStats, newCols, newRows, newNulls) = SnapshotLog.footerMeta(conf, newFiles, schema)
     val newSizes = newFiles
       .map(f => SnapshotLog.norm(f) -> fs.getFileStatus(new Path(f)).getLen).toMap
     // rewritten files regenerate bloom coverage (a DML-heavy table must
     // not bleed point-lookup pruning file by file until compaction)
-    SnapshotBlooms.writeBothSidecars(spark, root, newFiles, schema, newRows)
-    SnapshotNulls.record(spark, root, newNulls)
-    val (fids, colIds, maxId) =
-      SnapshotLog.fidCarry(Some(cur), schema, untouched ++ newFiles, newCols)
+    SnapshotBlooms.writeBothSidecars(spark, root, newFiles, schema, liveOf(allRows))
+    SnapshotNulls.record(spark, root, liveOf(allNulls))
+    // replaced files' rows were re-derived through the dels-applying
+    // scan, so their delete baggage folds; untouched files keep theirs
+    val kept = cur.retain(f => !replaced.contains(f))
+    val (fids, colIds, maxId) = SnapshotLog.fidCarry(Some(cur), schema,
+      kept.files ++ newFiles, liveOf(allCols))
     try {
-      SnapshotLog.commitManifest(fs, root,
-        nextV, operation,
-        nextTs, cur.schemaJson,
-        untouched ++ newFiles,
-        cur.stats.view.filterKeys(untouchedSet.contains).toMap ++ newStats,
-        cur.sizes.view.filterKeys(untouchedSet.contains).toMap ++ newSizes,
-        SnapshotLog.takePendingCommitProps(), cur.spec,
-        cur.parts.view.filterKeys(untouchedSet.contains).toMap,
-        cur.cols.view.filterKeys(untouchedSet.contains).toMap ++ newCols,
-        // replaced files' rows were re-derived through the dels-applying
-        // scan, so their delete baggage folds; untouched files keep theirs
-        cur.dels.view.filterKeys(untouchedSet.contains).toMap,
-        fids, colIds, maxId, cur.specs,
-        cur.fileSpec.view.filterKeys(untouchedSet.contains).toMap,
-        cur.version,
-        cur.rows.view.filterKeys(untouchedSet.contains).toMap ++ newRows)
+      SnapshotLog.commitManifest(fs, root, kept.copy(version = nextV,
+        operation = operation, commitTsMs = nextTs,
+        files = kept.files ++ newFiles, stats = kept.stats ++ liveOf(allStats),
+        sizes = kept.sizes ++ newSizes, props = SnapshotLog.takePendingCommitProps(),
+        cols = kept.cols ++ liveOf(allCols), rows = kept.rows ++ liveOf(allRows),
+        fids = fids, colIds = colIds, maxId = maxId, parent = cur.version))
     } catch {
       case e: IllegalStateException => fs.delete(dataDir, true); throw e
     }

@@ -117,8 +117,8 @@ class SnapshotAdviceR14Spec extends AnyFunSuite {
       Seq((1L, "main-a"), (2L, "main-b")).toDF("k", "s"),
       root, overwrite = true, 100L)
     SnapshotLog.createBranch(spark, root, "audit", 1)
-    val bv = SnapshotLog.commitToBranch(spark, root, "audit",
-      Seq((9L, "branch-only")).toDF("k", "s"), 200L)
+    val bv = SnapshotLog.commit(Seq((9L, "branch-only")).toDF("k", "s"),
+      root, overwrite = false, 200L, branch = Some("audit"))
     // the branch commit is the latest snapshot overall
     assert(SnapshotLog.snapshots(spark, root).last.version === bv)
     val uv = SnapshotLog.upsertEqualityMoR(spark, root,
@@ -141,8 +141,8 @@ class SnapshotAdviceR14Spec extends AnyFunSuite {
       spark.range(0, 20).selectExpr("id AS k", "id AS v"),
       root, overwrite = true, 100L)
     SnapshotLog.createBranch(spark, root, "wip", 1)
-    val bv = SnapshotLog.commitToBranch(spark, root, "wip",
-      spark.range(100, 105).selectExpr("id AS k", "id AS v"), 200L)
+    val bv = SnapshotLog.commit(spark.range(100, 105).selectExpr("id AS k", "id AS v"),
+      root, overwrite = false, 200L, branch = Some("wip"))
     val dv = SnapshotLog.deleteWhereMoR(spark, root, col("k") < 5, 300L)
     assert(dv === bv + 1)
     assert(spark.read.format("snapshotlog").load(root).count() === 15)
@@ -159,9 +159,9 @@ class SnapshotAdviceR14Spec extends AnyFunSuite {
     val root = s"$wh/advsql/t"
     val mainHead = SnapshotLog.snapshots(spark, root).last.version
     SnapshotLog.createBranch(spark, root, "wip", mainHead)
-    val bv = SnapshotLog.commitToBranch(spark, root, "wip",
-      spark.range(100, 105).selectExpr("id AS k", "id AS v"),
-      SnapshotLog.nextCommitTs(spark, root))
+    val bv = SnapshotLog.commit(spark.range(100, 105).selectExpr("id AS k", "id AS v"),
+      root, overwrite = false, SnapshotLog.nextCommitTs(spark, root),
+      branch = Some("wip"))
     spark.sql("UPDATE snap.advsql.t SET v = -1 WHERE k = 7") // group CoW
     val afterCow = SnapshotLog.snapshots(spark, root)
       .filter(_.branch.isEmpty).last

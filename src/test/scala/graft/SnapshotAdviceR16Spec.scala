@@ -85,6 +85,24 @@ class SnapshotAdviceR16Spec extends AnyFunSuite {
     assert(spark.read.format("snapshotlog").load(root).count() === 150)
   }
 
+  test("partitioned append that retypes a shared column is refused like " +
+       "a flat one") {
+    val root = freshRoot("retype_guard_partitioned")
+    val spec = Seq("k" -> "bucket[4]")
+    SnapshotLog.commitPartitioned(
+      spark.range(0, 100).selectExpr("id AS k", "CAST(id AS DOUBLE) AS v"),
+      root, spec, overwrite = true, 100L)
+    val e = intercept[SnapshotLog.CommitConflictException] {
+      SnapshotLog.commitPartitioned(
+        spark.range(100, 200).selectExpr("id AS k", "CAST(id AS STRING) AS v"),
+        root, spec, overwrite = false, 200L)
+    }
+    assert(e.getMessage.contains("v (table double vs append string)"))
+    val t = spark.read.format("snapshotlog").load(root)
+    assert(t.count() === 100)
+    assert(t.schema("v").dataType === org.apache.spark.sql.types.DoubleType)
+  }
+
   test("nested retype inside a struct is refused; nested field ADD is not") {
     val root = freshRoot("nested_retype")
     SnapshotLog.commit(

@@ -218,6 +218,25 @@ class SnapshotBloomSpec extends AnyFunSuite {
     assert(t.filter(col("k") === k7).select("v").as[Long].head() === 8L)
   }
 
+  test("merge-on-read update and upsert index their new files: nothing " +
+       "is left for rebuildFileIndexes to backfill") {
+    val root = freshRoot("mor_index")
+    def rows(lo: Long, hi: Long) = spark.range(lo, hi)
+      .selectExpr("md5(cast(id AS string)) AS k", "id AS v")
+    SnapshotLog.commit(rows(0, 200), root, overwrite = true, 100L, 2)
+    SnapshotLog.setTableProps(spark, root, Map("write.bloom.columns" -> "k"))
+    assert(SnapshotLog.rebuildFileIndexes(spark, root)._1 > 0,
+      "the pre-property files need a backfill")
+    SnapshotLog.updateWhereMoR(spark, root, col("v") % 10 === 3,
+      Map("v" -> (col("v") + 1000L)), 200L)
+    assert(SnapshotLog.rebuildFileIndexes(spark, root) === ((0, 0)),
+      "the update's new file must carry its bloom")
+    SnapshotLog.upsertEqualityMoR(spark, root, rows(150, 250), Seq("k"), 300L)
+    assert(SnapshotLog.rebuildFileIndexes(spark, root) === ((0, 0)),
+      "the upsert's new file must carry its bloom")
+    assert(spark.read.format("snapshotlog").load(root).count() === 250)
+  }
+
   test(".blooms metadata table inventories live covered (file, column) pairs") {
     val wh = "/tmp/graft_snap_warehouse"
     val ns = "bloommeta"

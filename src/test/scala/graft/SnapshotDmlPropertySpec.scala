@@ -14,6 +14,9 @@ import graft.sources.SnapshotLog
   * equal the model exactly. This is the net that catches interplay
   * orderings no hand-written scenario covers — stacked delete flavors,
   * update-after-delete, compaction mid-sequence, expiry at the end.
+  * The branch rows run the same DML on a branch forked after the seed
+  * content (main and branches share one commit kernel, so they must
+  * agree), while compaction, publishes and ANALYZE stay on main.
   */
 class SnapshotDmlPropertySpec extends AnyFunSuite {
   import spark.implicits._
@@ -25,44 +28,62 @@ class SnapshotDmlPropertySpec extends AnyFunSuite {
   private def bulkStateOf(root: String): Map[Long, Long] =
     SnapshotLog.read(spark, root).as[(Long, Long)].collect().toMap
 
-  // (seed, shard threshold): the None rows run the legacy single-manifest
-  // layout; the Some(4) rows force MANIFEST-LIST SHARDING (r14) so the
-  // same random interplay exercises shard reuse, tombstones, and
-  // re-homing under every DML flavor
-  for ((seed, shardMin) <- Seq((7, None), (23, None), (91, None),
-         (41, Some(4)), (67, Some(4)))) {
+  private def branchStateOf(root: String, b: String): Map[Long, Long] =
+    spark.read.format("snapshotlog").option("branch", b).load(root)
+      .as[(Long, Long)].collect().toMap
+
+  private def branchBulkStateOf(root: String, b: String): Map[Long, Long] =
+    SnapshotLog.read(spark, root, asOfVersion = Some(SnapshotLog.refs(spark, root)(b)))
+      .as[(Long, Long)].collect().toMap
+
+  // (seed, shard threshold, ref): the None-shard rows run the legacy
+  // single-manifest layout; the Some(4) rows force MANIFEST-LIST
+  // SHARDING (r14) so the same random interplay exercises shard reuse,
+  // tombstones, and re-homing under every DML flavor; the Some(branch)
+  // rows run the DML on that branch
+  for ((seed, shardMin, branch) <- Seq((7, None, None), (23, None, None),
+         (91, None, None), (41, Some(4), None), (67, Some(4), None),
+         (23, None, Some("dev")), (67, Some(4), Some("dev")))) {
     test(s"random DML sequence equals the model (seed $seed" +
-         shardMin.map(m => s", shardMin $m").getOrElse("") + ")") {
+         shardMin.map(m => s", shardMin $m").getOrElse("") +
+         branch.map(b => s", on branch $b").getOrElse("") + ")") {
       val shardKey = "spark.graft.snapshot.shardMin"
       val oldShard = spark.conf.getOption(shardKey)
       shardMin.foreach(m => spark.conf.set(shardKey, m.toString))
       try {
       val rnd = new scala.util.Random(seed)
-      val root = s"/tmp/graft_snaplog_spec/dmlprop_${seed}_${shardMin.getOrElse(0)}"
+      val tag = s"${seed}_${shardMin.getOrElse(0)}${branch.fold("")("_" + _)}"
+      val root = s"/tmp/graft_snaplog_spec/dmlprop_$tag"
       val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
       fs.delete(new Path(root), true)
 
-      var model = Map.empty[Long, Long]
+      var model = Map.empty[Long, Long] // the ref the DML runs on
       var nextKey = 0L
       var ts = 1000L
       def tick(): Long = { ts += 1000; ts }
 
-      def appendBatch(n: Int): Unit = {
+      def appendBatch(n: Int, ref: Option[String]): Unit = {
         val rows = (0 until n).map { _ =>
           nextKey += 1; (nextKey, rnd.nextInt(1000).toLong)
         }
         SnapshotLog.commit(rows.toDF("k", "v"), root,
           overwrite = model.isEmpty && SnapshotLog.snapshots(spark, root).isEmpty,
-          commitTsMs = tick())
+          commitTsMs = tick(), branch = ref)
         model ++= rows
       }
 
-      appendBatch(30) // seed content
+      appendBatch(30, None) // seed content
+      // main's own state: the model itself unless the DML runs on a branch
+      var mainModel = model
+      def setMain(m: Map[Long, Long]): Unit =
+        if (branch.isEmpty) model = m else mainModel = m
+      def mainNow: Map[Long, Long] = if (branch.isEmpty) model else mainModel
+      branch.foreach(b => SnapshotLog.createBranch(spark, root, b, 1))
 
       // incremental MV over the same random history: count/sum per value
       // bucket, created at the seed version, maintained mid-run and at the
       // end — must equal a from-scratch rebuild at every refresh
-      val mvTable = s"mvprop.mv_${seed}_${shardMin.getOrElse(0)}"
+      val mvTable = s"mvprop.mv_$tag"
       new Path(s"/tmp/graft_snap_warehouse/mvprop").getFileSystem(
         spark.sessionState.newHadoopConf()).delete(
         new Path(s"/tmp/graft_snap_warehouse/" +
@@ -73,7 +94,7 @@ class SnapshotDmlPropertySpec extends AnyFunSuite {
         val got = spark.table(s"snap.$mvTable").collect()
           .map(r => (r.getAs[Long]("v"),
             (r.getAs[Long]("n"), r.getAs[Long]("s_k")))).toMap
-        val want = model.toSeq.groupBy(_._2).map { case (v, kvs) =>
+        val want = mainNow.toSeq.groupBy(_._2).map { case (v, kvs) =>
           v -> (kvs.size.toLong, kvs.map(_._1).sum)
         }
         assert(got === want, s"incremental MV diverged from rebuild ($ctx)")
@@ -87,20 +108,20 @@ class SnapshotDmlPropertySpec extends AnyFunSuite {
         rnd.nextInt(8) match {
           case 0 => // append new keys
             opNames += "append"
-            appendBatch(5 + rnd.nextInt(10))
+            appendBatch(5 + rnd.nextInt(10), branch)
           case 1 => // positional delete by predicate
             opNames += "posDelete"
             val m = 2 + rnd.nextInt(5)
             val r = rnd.nextInt(m)
             SnapshotLog.deleteWhereMoR(spark, root,
-              col("k") % m === r.toLong, tick())
+              col("k") % m === r.toLong, tick(), branch)
             model = model.filter { case (k, _) => k % m != r }
           case 2 => // equality delete of sampled keys
             opNames += "eqDelete"
             val victims = rnd.shuffle(existing).take(3 + rnd.nextInt(4))
             if (victims.nonEmpty) {
               SnapshotLog.deleteEqualityMoR(spark, root,
-                victims.toDF("k"), tick())
+                victims.toDF("k"), tick(), branch)
               model = model -- victims
             }
           case 3 => // merge-on-read update
@@ -110,7 +131,7 @@ class SnapshotDmlPropertySpec extends AnyFunSuite {
             val delta = 1 + rnd.nextInt(100)
             SnapshotLog.updateWhereMoR(spark, root,
               col("k") % m === r.toLong,
-              Map("v" -> (col("v") + delta.toLong)), tick())
+              Map("v" -> (col("v") + delta.toLong)), tick(), branch = branch)
             model = model.map { case (k, v) =>
               k -> (if (k % m == r) v + delta else v) }
           case 4 => // upsert: update some existing + insert fresh
@@ -121,9 +142,10 @@ class SnapshotDmlPropertySpec extends AnyFunSuite {
               nextKey += 1; (nextKey, rnd.nextInt(1000).toLong)
             }
             val batch = (ups ++ ins).toDF("k", "v")
-            SnapshotLog.upsertEqualityMoR(spark, root, batch, Seq("k"), tick())
+            SnapshotLog.upsertEqualityMoR(spark, root, batch, Seq("k"), tick(),
+              branch = branch)
             model ++= ups ++ ins
-          case 5 => // compaction folds everything so far
+          case 5 => // compaction folds everything so far (on main)
             opNames += "rewrite"
             SnapshotLog.rewriteDataFiles(spark, root, tick(),
               targetBytes = 1L << 30)
@@ -138,13 +160,13 @@ class SnapshotDmlPropertySpec extends AnyFunSuite {
             val staged = (0 until 4).map { _ =>
               nextKey += 1; (nextKey, rnd.nextInt(1000).toLong)
             }
-            SnapshotLog.commitToBranch(spark, root, br,
-              staged.toDF("k", "v"), tick())
-            assert(stateOf(root) === model,
+            SnapshotLog.commit(staged.toDF("k", "v"), root, overwrite = false,
+              tick(), branch = Some(br))
+            assert(stateOf(root) === mainNow,
               s"main leaked branch rows mid-WAP (seed=$seed step=$step)")
             SnapshotLog.fastForward(spark, root, br, tick())
             SnapshotLog.dropBranch(spark, root, br)
-            model ++= staged
+            setMain(mainNow ++ staged)
           case 7 => // ANALYZE: stats sidecar must never change results
             opNames += "analyze"
             SnapshotLog.analyze(spark, root, k = 64)
@@ -153,8 +175,14 @@ class SnapshotDmlPropertySpec extends AnyFunSuite {
             SnapshotLog.snapshots(spark, root).last.shardPaths.nonEmpty)
           sawShards = true
         val ctx = s"seed=$seed step=$step ops=${opNames.mkString(",")}"
-        assert(stateOf(root) === model, s"DSv2 read diverged ($ctx)")
-        assert(bulkStateOf(root) === model, s"bulk read diverged ($ctx)")
+        assert(stateOf(root) === mainNow, s"DSv2 read diverged ($ctx)")
+        assert(bulkStateOf(root) === mainNow, s"bulk read diverged ($ctx)")
+        branch.foreach { b =>
+          assert(branchStateOf(root, b) === model,
+            s"DSv2 branch read diverged ($ctx)")
+          assert(branchBulkStateOf(root, b) === model,
+            s"bulk branch read diverged ($ctx)")
+        }
         // refresh the incremental MV mid-run at a couple of random points
         // (multi-version catch-up ranges), not just at the end
         if (step == 6 || step == 11) mvMatchesRebuild(ctx)
@@ -176,13 +204,13 @@ class SnapshotDmlPropertySpec extends AnyFunSuite {
         assert(net.values.forall(c => c == 0L || c == 1L),
           s"changelog net multiplicities out of {0,1} (seed=$seed)")
         val replayed = net.collect { case ((k, v), 1L) => k -> v }.toMap
-        assert(replayed === model, s"changelog replay diverged (seed=$seed)")
+        assert(replayed === mainNow, s"changelog replay diverged (seed=$seed)")
         val nv = SnapshotLog.changes(spark, root, fromVersion = 0,
           netChanges = true).collect()
         assert(nv.forall(_.getAs[String]("_change_type") == "insert"),
           s"genesis net view must be pure inserts (seed=$seed)")
         assert(nv.map(r =>
-          r.getAs[Long]("k") -> r.getAs[Long]("v")).toMap === model,
+          r.getAs[Long]("k") -> r.getAs[Long]("v")).toMap === mainNow,
           s"net_changes view diverged from the model (seed=$seed)")
         // compute_updates invariant: pairing is a pure RETAG — mapping
         // pre→delete / post→insert reproduces the plain changelog's
@@ -218,8 +246,11 @@ class SnapshotDmlPropertySpec extends AnyFunSuite {
       SnapshotLog.rewriteDataFiles(spark, root, tick(), targetBytes = 1L << 30)
       val head = SnapshotLog.snapshots(spark, root).last.version
       SnapshotLog.expireSnapshots(spark, root, keepFromVersion = head)
-      assert(stateOf(root) === model, s"post-expiry read diverged (seed=$seed)")
-      assert(SnapshotLog.snapshots(spark, root).last.dels.isEmpty)
+      assert(stateOf(root) === mainNow, s"post-expiry read diverged (seed=$seed)")
+      assert(SnapshotLog.snapshots(spark, root).filter(_.branch.isEmpty)
+        .last.dels.isEmpty)
+      branch.foreach(b => assert(branchStateOf(root, b) === model,
+        s"post-expiry branch read diverged (seed=$seed)"))
       if (shardMin.isDefined) {
         // the sharded variants must have actually exercised shards at
         // some point (the final compaction may fold below the threshold)

@@ -216,7 +216,8 @@ class SnapshotLogSpec extends AnyFunSuite {
   test("expireSnapshots drops dead manifests and only unshared data files") {
     val root = freshRoot("expire")
     SnapshotLog.commit(Seq(1, 2).toDF("x"), root, overwrite = true, 100L)   // v1
-    SnapshotLog.commit(Seq(3).toDF("x"), root, overwrite = false, 200L)     // v2 shares v1 files
+    SnapshotLog.commit(Seq(3).toDF("x"), root,
+      overwrite = false, 200L)     // v2 shares v1 files
     SnapshotLog.commit(Seq(9).toDF("x"), root, overwrite = true, 300L)      // v3 fresh files
     val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
 
@@ -951,10 +952,10 @@ class SnapshotLogSpec extends AnyFunSuite {
 
     // fork an audit branch from the main head, stage two batches on it
     spark.sql(s"CALL snap.system.create_branch('wap.t', 'audit', $mainV)")
-    SnapshotLog.commitToBranch(spark, root, "audit",
-      spark.range(10, 15).toDF("k"), SnapshotLog.nextCommitTs(spark, root))
-    SnapshotLog.commitToBranch(spark, root, "audit",
-      spark.range(15, 18).toDF("k"), SnapshotLog.nextCommitTs(spark, root))
+    SnapshotLog.commit(spark.range(10, 15).toDF("k"), root, overwrite = false,
+      SnapshotLog.nextCommitTs(spark, root), branch = Some("audit"))
+    SnapshotLog.commit(spark.range(15, 18).toDF("k"), root, overwrite = false,
+      SnapshotLog.nextCommitTs(spark, root), branch = Some("audit"))
 
     // MAIN is untouched: default reads, TIMESTAMP AS OF, and the version
     // numbering all ignore branch snapshots
@@ -982,8 +983,8 @@ class SnapshotLogSpec extends AnyFunSuite {
     // a DIVERGED branch publishes as overwrite: main moved on after fork
     spark.sql(s"CALL snap.system.create_branch('wap.t', 'fix', ${pub.version})")
     spark.sql("INSERT INTO snap.wap.t SELECT id FROM range(100, 105)") // main advances
-    SnapshotLog.commitToBranch(spark, root, "fix",
-      spark.range(200, 202).toDF("k"), SnapshotLog.nextCommitTs(spark, root))
+    SnapshotLog.commit(spark.range(200, 202).toDF("k"), root, overwrite = false,
+      SnapshotLog.nextCommitTs(spark, root), branch = Some("fix"))
     SnapshotLog.fastForward(spark, root, "fix",
       SnapshotLog.nextCommitTs(spark, root))
     val pub2 = SnapshotLog.snapshots(spark, root).last

@@ -66,7 +66,8 @@ class SnapshotRollbackSpec extends AnyFunSuite {
     }
     // a branch snapshot is not a mainline ancestor — refuse with guidance
     SnapshotLog.createBranch(spark, root, "audit", 2)
-    SnapshotLog.commitToBranch(spark, root, "audit", rows(3, "br"), 3000L)
+    SnapshotLog.commit(rows(3, "br"), root,
+      overwrite = false, 3000L, branch = Some("audit"))
     val e = intercept[IllegalArgumentException] {
       SnapshotLog.rollbackTo(spark, root, 3, 4000L)
     }
@@ -81,7 +82,8 @@ class SnapshotRollbackSpec extends AnyFunSuite {
     val root = fresh("setcur")
     SnapshotLog.commit(rows(20, "main1"), root, overwrite = true, 1000L)
     SnapshotLog.createBranch(spark, root, "wip", 1)
-    SnapshotLog.commitToBranch(spark, root, "wip", rows(7, "branch"), 2000L)
+    SnapshotLog.commit(rows(7, "branch"), root,
+      overwrite = false, 2000L, branch = Some("wip"))
     // adopt the branch snapshot's content on MAIN without fast_forward
     val v = SnapshotLog.setCurrentSnapshot(spark, root, 2,
       SnapshotLog.nextCommitTs(spark, root))

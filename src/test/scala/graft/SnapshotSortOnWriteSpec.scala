@@ -142,9 +142,9 @@ class SnapshotSortOnWriteSpec extends AnyFunSuite {
     SnapshotLog.setTableProps(spark, root, Map("write.sort.order" -> "k"))
     // branch commit: staged data arrives clustered too
     SnapshotLog.createBranch(spark, root, "b", 1)
-    SnapshotLog.commitToBranch(spark, root, "b",
-      spark.range(0, 500).selectExpr(
-        "cast(xxhash64(id) % 1000 AS bigint) AS k", "id AS v"), 200L, 2)
+    SnapshotLog.commit(spark.range(0, 500).selectExpr(
+        "cast(xxhash64(id) % 1000 AS bigint) AS k", "id AS v"), root, overwrite = false,
+      200L, 2, branch = Some("b"))
     assert(SnapshotSorts.sortsAt(root).count(_._2 == Seq("k")) === 2,
       "the branch commit's files must record the sort order")
     // streaming micro-batch: commitStreamBatch rides commit(), so the

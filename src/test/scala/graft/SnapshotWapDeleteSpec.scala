@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark.spark
 import graft.sources.SnapshotLog
 
-/** MoR DELETE on a branch (deleteWhereMoRBranch) — write-audit-publish
+/** MoR DELETE on a branch (deleteWhereMoR with `branch`) — write-audit-publish
   * with DML: stage, audit (delete failing rows ON the branch), publish. */
 class SnapshotWapDeleteSpec extends AnyFunSuite {
   import spark.implicits._
@@ -28,10 +28,10 @@ class SnapshotWapDeleteSpec extends AnyFunSuite {
       spark.range(0, 100).selectExpr("id AS k", "id AS v"),
       root, overwrite = true, 1000L) // main: 0..99
     SnapshotLog.createBranch(spark, root, "audit", 1)
-    SnapshotLog.commitToBranch(spark, root, "audit",
-      spark.range(100, 200).selectExpr("id AS k", "id AS v"), 2000L)
-    val dv = SnapshotLog.deleteWhereMoRBranch(spark, root, "audit",
-      col("k") >= 150, 3000L)
+    SnapshotLog.commit(spark.range(100, 200).selectExpr("id AS k", "id AS v"),
+      root, overwrite = false, 2000L, branch = Some("audit"))
+    val dv = SnapshotLog.deleteWhereMoR(spark, root, col("k") >= 150,
+      3000L, branch = Some("audit"))
     assert(dv === 3)
     // branch: staged minus audited-out rows
     assert(branchRead(root, "audit").count() === 150)
@@ -56,10 +56,10 @@ class SnapshotWapDeleteSpec extends AnyFunSuite {
     SnapshotLog.setTableProps(spark, root,
       Map("write.delete.vector" -> "true"))
     SnapshotLog.createBranch(spark, root, "audit", 1)
-    SnapshotLog.commitToBranch(spark, root, "audit",
-      spark.range(50, 100).selectExpr("id AS k", "id AS v"), 2000L)
-    SnapshotLog.deleteWhereMoRBranch(spark, root, "audit",
-      col("k") % 10 === 7, 3000L)
+    SnapshotLog.commit(spark.range(50, 100).selectExpr("id AS k", "id AS v"),
+      root, overwrite = false, 2000L, branch = Some("audit"))
+    SnapshotLog.deleteWhereMoR(spark, root, col("k") % 10 === 7,
+      3000L, branch = Some("audit"))
     assert(branchRead(root, "audit").count() === 90)
     val snap = SnapshotLog.snapshots(spark, root).last
     assert(snap.dels.values.flatten.exists(_.endsWith(".dv")),
@@ -74,11 +74,11 @@ class SnapshotWapDeleteSpec extends AnyFunSuite {
       spark.range(0, 100).selectExpr("id AS k", "id AS v"),
       root, overwrite = true, 1000L)
     SnapshotLog.createBranch(spark, root, "audit", 1)
-    SnapshotLog.commitToBranch(spark, root, "audit",
-      spark.range(100, 200).selectExpr("id AS k", "id * 0 - 5 AS v"), 2000L)
+    SnapshotLog.commit(spark.range(100, 200).selectExpr("id AS k", "id * 0 - 5 AS v"),
+      root, overwrite = false, 2000L, branch = Some("audit"))
     // audit finds the staged batch wrote sentinel v = -5 — fix on branch
-    SnapshotLog.updateWhereMoRBranch(spark, root, "audit",
-      col("v") < 0, Map("v" -> (col("k") * 10)), 3000L)
+    SnapshotLog.updateWhereMoR(spark, root, col("v") < 0,
+      Map("v" -> (col("k") * 10)), 3000L, branch = Some("audit"))
     val b = branchRead(root, "audit")
     assert(b.count() === 200)
     assert(b.filter(col("v") < 0).count() === 0)
@@ -98,17 +98,17 @@ class SnapshotWapDeleteSpec extends AnyFunSuite {
       spark.range(0, 10).selectExpr("id AS k", "id AS v"),
       root, overwrite = true, 1000L)
     intercept[NoSuchElementException] {
-      SnapshotLog.deleteWhereMoRBranch(spark, root, "nope",
-        col("k") > 5, 2000L)
+      SnapshotLog.deleteWhereMoR(spark, root, col("k") > 5,
+        2000L, branch = Some("nope"))
     }
     SnapshotLog.createTag(spark, root, "rel", 1)
     intercept[IllegalArgumentException] {
-      SnapshotLog.deleteWhereMoRBranch(spark, root, "rel",
-        col("k") > 5, 2000L)
+      SnapshotLog.deleteWhereMoR(spark, root, col("k") > 5,
+        2000L, branch = Some("rel"))
     }
     SnapshotLog.createBranch(spark, root, "b", 1)
-    val v = SnapshotLog.deleteWhereMoRBranch(spark, root, "b",
-      col("k") > 1000, 2000L)
+    val v = SnapshotLog.deleteWhereMoR(spark, root, col("k") > 1000,
+      2000L, branch = Some("b"))
     assert(v === 1, "a delete matching nothing must not commit")
   }
 }

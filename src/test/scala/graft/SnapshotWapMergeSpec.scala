@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark.spark
 import graft.sources.SnapshotLog
 
-/** WAP MERGE (upsertEqualityMoRBranch) and equality DELETE
-  * (deleteEqualityMoRBranch) on a branch — the r19 completion of branch
+/** WAP MERGE (upsertEqualityMoR with `branch`) and equality DELETE
+  * (deleteEqualityMoR with `branch`) on a branch — the r19 completion of branch
   * DML parity with mainline: audit-fix with upsert semantics happens
   * PRE-publish, and concurrent branch writers are refused
   * deterministically (test seam), never silently overwritten. */
@@ -31,13 +31,13 @@ class SnapshotWapMergeSpec extends AnyFunSuite {
       spark.range(0, 100).selectExpr("id AS k", "id AS v"),
       root, overwrite = true, 1000L)
     SnapshotLog.createBranch(spark, root, "audit", 1)
-    SnapshotLog.commitToBranch(spark, root, "audit",
-      spark.range(100, 200).selectExpr("id AS k", "id AS v"), 2000L)
+    SnapshotLog.commit(spark.range(100, 200).selectExpr("id AS k", "id AS v"),
+      root, overwrite = false, 2000L, branch = Some("audit"))
     // fix keys 150..159 (v := v + 10000), insert keys 500..504
     val batch = spark.range(150, 160).selectExpr("id AS k", "id + 10000 AS v")
       .unionByName(spark.range(500, 505).selectExpr("id AS k", "id AS v"))
-    val mv = SnapshotLog.upsertEqualityMoRBranch(spark, root, "audit",
-      batch, Seq("k"), 3000L)
+    val mv = SnapshotLog.upsertEqualityMoR(spark, root, batch,
+      Seq("k"), 3000L, branch = Some("audit"))
     assert(mv === 3)
     val b = branchRead(root, "audit")
     assert(b.count() === 205)
@@ -64,23 +64,24 @@ class SnapshotWapMergeSpec extends AnyFunSuite {
       spark.range(0, 100).selectExpr("id AS k", "id AS v"),
       root, overwrite = true, 1000L)
     SnapshotLog.createBranch(spark, root, "audit", 1)
-    SnapshotLog.commitToBranch(spark, root, "audit",
-      spark.range(100, 150).selectExpr("id AS k", "id AS v"), 2000L)
-    val dv = SnapshotLog.deleteEqualityMoRBranch(spark, root, "audit",
-      spark.range(120, 140).selectExpr("id AS k"), 3000L)
+    SnapshotLog.commit(spark.range(100, 150).selectExpr("id AS k", "id AS v"),
+      root, overwrite = false, 2000L, branch = Some("audit"))
+    val dv = SnapshotLog.deleteEqualityMoR(spark, root,
+      spark.range(120, 140).selectExpr("id AS k"),
+      3000L, branch = Some("audit"))
     assert(dv === 3)
     assert(branchRead(root, "audit").count() === 130)
     assert(SnapshotLog.read(spark, root).count() === 100)
     // the pre-delete branch state stays time-travelable
     assert(SnapshotLog.read(spark, root, asOfVersion = Some(2)).count() === 150)
     intercept[NoSuchElementException] {
-      SnapshotLog.deleteEqualityMoRBranch(spark, root, "nope",
-        spark.range(0, 1).selectExpr("id AS k"), 4000L)
+      SnapshotLog.deleteEqualityMoR(spark, root, spark.range(0, 1).selectExpr("id AS k"),
+        4000L, branch = Some("nope"))
     }
     SnapshotLog.createTag(spark, root, "t1", 1)
     intercept[IllegalArgumentException] {
-      SnapshotLog.deleteEqualityMoRBranch(spark, root, "t1",
-        spark.range(0, 1).selectExpr("id AS k"), 5000L)
+      SnapshotLog.deleteEqualityMoR(spark, root, spark.range(0, 1).selectExpr("id AS k"),
+        5000L, branch = Some("t1"))
     }
   }
 
@@ -92,20 +93,21 @@ class SnapshotWapMergeSpec extends AnyFunSuite {
       spark.range(0, 50).selectExpr("id AS k", "id AS v"),
       root, overwrite = true, 1000L)
     SnapshotLog.createBranch(spark, root, "audit", 1)
-    SnapshotLog.commitToBranch(spark, root, "audit",
-      spark.range(50, 100).selectExpr("id AS k", "id AS v"), 2000L)
+    SnapshotLog.commit(spark.range(50, 100).selectExpr("id AS k", "id AS v"),
+      root, overwrite = false, 2000L, branch = Some("audit"))
     // the seam fires after the merge's staging: a concurrent writer
     // advances the branch ref underneath it
     SnapshotLog.branchDmlAfterStage = () => {
       SnapshotLog.branchDmlAfterStage = () => ()
-      SnapshotLog.commitToBranch(spark, root, "audit",
-        spark.range(100, 110).selectExpr("id AS k", "id AS v"), 2500L): Unit
+      SnapshotLog.commit(spark.range(100, 110).selectExpr("id AS k", "id AS v"),
+        root, overwrite = false, 2500L, branch = Some("audit")): Unit
     }
     try {
       intercept[SnapshotLog.CommitConflictException] {
-        SnapshotLog.upsertEqualityMoRBranch(spark, root, "audit",
+        SnapshotLog.upsertEqualityMoR(spark, root,
           spark.range(60, 70).selectExpr("id AS k", "id + 5000 AS v"),
-          Seq("k"), 3000L)
+          Seq("k"),
+          3000L, branch = Some("audit"))
       }
     } finally SnapshotLog.branchDmlAfterStage = () => ()
     // the concurrent writer's snapshot IS the branch head; the refused
@@ -118,13 +120,13 @@ class SnapshotWapMergeSpec extends AnyFunSuite {
     // the equality-delete flavor refuses through the same seam
     SnapshotLog.branchDmlAfterStage = () => {
       SnapshotLog.branchDmlAfterStage = () => ()
-      SnapshotLog.commitToBranch(spark, root, "audit",
-        spark.range(110, 115).selectExpr("id AS k", "id AS v"), 3500L): Unit
+      SnapshotLog.commit(spark.range(110, 115).selectExpr("id AS k", "id AS v"),
+        root, overwrite = false, 3500L, branch = Some("audit")): Unit
     }
     try {
       intercept[SnapshotLog.CommitConflictException] {
-        SnapshotLog.deleteEqualityMoRBranch(spark, root, "audit",
-          spark.range(0, 10).selectExpr("id AS k"), 4000L)
+        SnapshotLog.deleteEqualityMoR(spark, root,
+          spark.range(0, 10).selectExpr("id AS k"), 4000L, branch = Some("audit"))
       }
     } finally SnapshotLog.branchDmlAfterStage = () => ()
     assert(branchRead(root, "audit").count() === 115)
@@ -132,31 +134,84 @@ class SnapshotWapMergeSpec extends AnyFunSuite {
     // every branch DML path is deterministically race-tested)
     SnapshotLog.branchDmlAfterStage = () => {
       SnapshotLog.branchDmlAfterStage = () => ()
-      SnapshotLog.commitToBranch(spark, root, "audit",
-        spark.range(115, 120).selectExpr("id AS k", "id AS v"), 4500L): Unit
+      SnapshotLog.commit(spark.range(115, 120).selectExpr("id AS k", "id AS v"),
+        root, overwrite = false, 4500L, branch = Some("audit")): Unit
     }
     try {
       intercept[SnapshotLog.CommitConflictException] {
-        SnapshotLog.deleteWhereMoRBranch(spark, root, "audit",
-          col("k") < 5, 5000L)
+        SnapshotLog.deleteWhereMoR(spark, root, col("k") < 5,
+          5000L, branch = Some("audit"))
       }
     } finally SnapshotLog.branchDmlAfterStage = () => ()
     assert(branchRead(root, "audit").count() === 120)
     SnapshotLog.branchDmlAfterStage = () => {
       SnapshotLog.branchDmlAfterStage = () => ()
-      SnapshotLog.commitToBranch(spark, root, "audit",
-        spark.range(120, 125).selectExpr("id AS k", "id AS v"), 5500L): Unit
+      SnapshotLog.commit(spark.range(120, 125).selectExpr("id AS k", "id AS v"),
+        root, overwrite = false, 5500L, branch = Some("audit")): Unit
     }
     try {
       intercept[SnapshotLog.CommitConflictException] {
-        SnapshotLog.updateWhereMoRBranch(spark, root, "audit",
-          col("k") < 5, Map("v" -> (col("v") + 100L)), 6000L)
+        SnapshotLog.updateWhereMoR(spark, root, col("k") < 5,
+          Map("v" -> (col("v") + 100L)), 6000L, branch = Some("audit"))
       }
     } finally SnapshotLog.branchDmlAfterStage = () => ()
     val b2 = branchRead(root, "audit")
     assert(b2.count() === 125)
     assert(b2.filter(col("k") === 2).select("v").as[Long].head() === 2L,
       "the refused update must not have rewritten any row")
+  }
+
+  test("a branch append staged while a mainline append and a second " +
+       "branch writer land re-applies on the new branch head") {
+    val root = fresh("append_race")
+    SnapshotLog.commit(
+      spark.range(0, 50).selectExpr("id AS k", "id AS v"),
+      root, overwrite = true, 1000L)
+    SnapshotLog.createBranch(spark, root, "audit", 1)
+    var fired = false
+    SnapshotLog.branchDmlAfterStage = () => {
+      SnapshotLog.branchDmlAfterStage = () => ()
+      fired = true
+      // a mainline append claims the version slot the staged append saw
+      // as next, and a second branch writer advances the branch
+      SnapshotLog.commit(spark.range(500, 510).selectExpr("id AS k", "id AS v"),
+        root, overwrite = false, 1500L)
+      SnapshotLog.commit(spark.range(100, 110).selectExpr("id AS k", "id AS v"),
+        root, overwrite = false, 1600L, branch = Some("audit")): Unit
+    }
+    val v = try SnapshotLog.commit(
+      spark.range(50, 100).selectExpr("id AS k", "id AS v"),
+      root, overwrite = false, 2000L, branch = Some("audit"))
+    finally SnapshotLog.branchDmlAfterStage = () => ()
+    assert(fired, "the staging seam must fire for branch appends")
+    assert(v === 4)
+    assert(SnapshotLog.refs(spark, root)("audit") === 4)
+    assert(SnapshotLog.snapshots(spark, root).find(_.version == 4).get
+      .parent === 3, "the append builds on the concurrent writer's snapshot")
+    assert(branchRead(root, "audit").count() === 110)
+    assert(SnapshotLog.read(spark, root).count() === 60)
+  }
+
+  test("a branch writer that commits between a branch append's publish " +
+       "and its ref write stays on the branch chain (the append refuses)") {
+    val root = fresh("append_ref_race")
+    SnapshotLog.commit(
+      spark.range(0, 50).selectExpr("id AS k", "id AS v"),
+      root, overwrite = true, 1000L)
+    SnapshotLog.createBranch(spark, root, "audit", 1)
+    SnapshotLog.branchDmlBeforeRefWrite = () => {
+      SnapshotLog.branchDmlBeforeRefWrite = () => ()
+      SnapshotLog.commit(spark.range(100, 110).selectExpr("id AS k", "id AS v"),
+        root, overwrite = false, 5000L, branch = Some("audit")): Unit
+    }
+    val e = try intercept[SnapshotLog.CommitConflictException] {
+      SnapshotLog.commit(spark.range(50, 100).selectExpr("id AS k", "id AS v"),
+        root, overwrite = false, 2000L, branch = Some("audit"))
+    } finally SnapshotLog.branchDmlBeforeRefWrite = () => ()
+    assert(e.orphanVersion.contains(2))
+    // the concurrent writer's snapshot is the branch head — not dropped
+    assert(SnapshotLog.refs(spark, root)("audit") === 3)
+    assert(branchRead(root, "audit").count() === 60)
   }
 
   test("the SQL surface (merge_branch CALL) refuses concurrent head " +
@@ -174,9 +229,9 @@ class SnapshotWapMergeSpec extends AnyFunSuite {
       .createOrReplaceTempView("wapsql_race_src")
     SnapshotLog.branchDmlAfterStage = () => {
       SnapshotLog.branchDmlAfterStage = () => ()
-      SnapshotLog.commitToBranch(spark, root, "audit",
-        spark.range(900, 905).selectExpr("id AS k", "id AS v"),
-        SnapshotLog.nextCommitTs(spark, root)): Unit
+      SnapshotLog.commit(spark.range(900, 905).selectExpr("id AS k", "id AS v"),
+        root, overwrite = false, SnapshotLog.nextCommitTs(spark, root),
+        branch = Some("audit")): Unit
     }
     val e = try intercept[Exception] {
       spark.sql(s"CALL snap.system.merge_branch('$ns.t', 'audit', " +
@@ -198,21 +253,22 @@ class SnapshotWapMergeSpec extends AnyFunSuite {
       spark.range(0, 50).selectExpr("id AS k", "id AS v"),
       root, overwrite = true, 1000L)
     SnapshotLog.createBranch(spark, root, "audit", 1)
-    SnapshotLog.commitToBranch(spark, root, "audit",
-      spark.range(50, 100).selectExpr("id AS k", "id AS v"), 2000L)
+    SnapshotLog.commit(spark.range(50, 100).selectExpr("id AS k", "id AS v"),
+      root, overwrite = false, 2000L, branch = Some("audit"))
     // the narrow window: the commit closure's head check passed, the
     // snapshot is durable — THEN a concurrent writer advances the ref
     // (ts past the in-flight upsert's 3000: the DML snapshot is already
     // durable when this concurrent writer lands)
     SnapshotLog.branchDmlBeforeRefWrite = () => {
       SnapshotLog.branchDmlBeforeRefWrite = () => ()
-      SnapshotLog.commitToBranch(spark, root, "audit",
-        spark.range(100, 110).selectExpr("id AS k", "id AS v"), 5000L): Unit
+      SnapshotLog.commit(spark.range(100, 110).selectExpr("id AS k", "id AS v"),
+        root, overwrite = false, 5000L, branch = Some("audit")): Unit
     }
     val e = try intercept[SnapshotLog.CommitConflictException] {
-      SnapshotLog.upsertEqualityMoRBranch(spark, root, "audit",
+      SnapshotLog.upsertEqualityMoR(spark, root,
         spark.range(60, 70).selectExpr("id AS k", "id + 5000 AS v"),
-        Seq("k"), 3000L)
+        Seq("k"),
+        3000L, branch = Some("audit"))
     } finally SnapshotLog.branchDmlBeforeRefWrite = () => ()
     val orphan = e.orphanVersion.getOrElse(
       fail("ref-write refusal must carry the orphan version"))

@@ -32,7 +32,7 @@ class SnapshotManifestScaleSpec extends AnyFunSuite {
       org.apache.spark.sql.types.StructField("k",
         org.apache.spark.sql.types.LongType))).json
     SnapshotLog.commitManifest(SnapshotLog.fsFor(spark, new Path(root)),
-      root, 1, "append", 1000L, schemaJson, files, stats, sizes)
+      root, SnapshotLog.Snapshot(1, "append", 1000L, schemaJson, files, stats, sizes))
 
     // cold parse
     val t0 = System.nanoTime()
@@ -73,8 +73,8 @@ class SnapshotManifestScaleSpec extends AnyFunSuite {
         org.apache.spark.sql.types.LongType))).json
     val t0 = System.nanoTime()
     SnapshotLog.commitManifest(SnapshotLog.fsFor(spark, new Path(root)),
-      root, 1, "append", 1000L, schemaJson, files, stats, sizes,
-      rowCounts = rows)
+      root, SnapshotLog.Snapshot(1, "append", 1000L, schemaJson, files, stats,
+        sizes, rows = rows))
     val commitS = (System.nanoTime() - t0) / 1e9
 
     // the version manifest itself must be SMALL (entries live in the shard)
@@ -117,11 +117,11 @@ class SnapshotManifestScaleSpec extends AnyFunSuite {
     }.toMap
     val t4 = System.nanoTime()
     SnapshotLog.commitManifest(SnapshotLog.fsFor(spark, new Path(root)),
-      root, 2, "append", 2000L, schemaJson, files ++ newFiles,
-      stats ++ newStats,
-      sizes ++ newFiles.map(f => SnapshotLog.norm(f) -> (128L << 20)).toMap,
-      parent = 1,
-      rowCounts = rows ++ newFiles.map(f => SnapshotLog.norm(f) -> 1000L).toMap)
+      root, SnapshotLog.Snapshot(2, "append", 2000L, schemaJson,
+        files ++ newFiles, stats ++ newStats,
+        sizes ++ newFiles.map(f => SnapshotLog.norm(f) -> (128L << 20)).toMap,
+        parent = 1,
+        rows = rows ++ newFiles.map(f => SnapshotLog.norm(f) -> 1000L).toMap))
     val appendS = (System.nanoTime() - t4) / 1e9
     val head = SnapshotLog.snapshots(spark, root).last
     assert(head.files.size === n + 100)

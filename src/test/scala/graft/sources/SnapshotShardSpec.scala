@@ -161,8 +161,8 @@ class SnapshotShardSpec extends AnyFunSuite {
       SnapshotLog.commit(spark.range(0, 500).selectExpr("id AS k"),
         root, overwrite = true, 100L, 5)
       SnapshotLog.createBranch(spark, root, "audit", 1)
-      SnapshotLog.commitToBranch(spark, root, "audit",
-        spark.range(500, 600).selectExpr("id AS k"), 200L)
+      SnapshotLog.commit(spark.range(500, 600).selectExpr("id AS k"),
+        root, overwrite = false, 200L, branch = Some("audit"))
       // main unchanged
       assert(spark.read.format("snapshotlog").load(root).count() === 500)
       SnapshotLog.fastForward(spark, root, "audit", 300L)
