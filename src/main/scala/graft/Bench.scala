@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 
 /** Timed battery over SPARK_GRAFT_SF_DIR, one JSON line to stdout.
@@ -42,7 +43,9 @@ object Bench {
   private def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
 
   private def jsonLine(results: Seq[(String, Double)], sfDir: String,
-                       detail: String, drift: Double): (String, String) = {
+                       detail: String, drift: Double,
+                       compiles: Seq[Long],
+                       failures: Seq[(String, Throwable)]): (String, String) = {
     val failed = results.collect { case (k, v) if v < 0 => "\"" + esc(k) + "\"" }
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     def qmap(rs: Seq[(String, Double)]): String =
@@ -53,7 +56,16 @@ object Bench {
     // short stdout line: must fit the driver's ~2000-char tail with room to
     // spare, so no per-query entries inline — they live in the detail file
     val compact = s"""{"metric":"total",$common,"detail":"${esc(detail)}"}"""
-    val full = s"""{"metric":"total",$common,"queries":${qmap(results)}}"""
+    // detail-only: generated classes Janino compiled in each timed pass
+    // (Spark's CodegenMetrics; 0 when the warm pass left every class in
+    // the cache), and why each failing query failed
+    val why = failures.map { case (k, t) =>
+      "\"" + esc(k) + "\":{\"class\":\"" + esc(t.getClass.getName) +
+        "\",\"message\":\"" + esc(String.valueOf(t.getMessage).take(500)) + "\"}"
+    }.mkString("{", ",", "}")
+    val full = s"""{"metric":"total",$common,""" +
+      s""""compiles_per_pass":${compiles.mkString("[", ",", "]")},""" +
+      s""""failures":$why,"queries":${qmap(results)}}"""
     (compact, full)
   }
 
@@ -66,17 +78,31 @@ object Bench {
     // not a run of DataSourceV2Strategy/DAGScheduler WARNs (VERDICT r21 §2)
     spark.sparkContext.setLogLevel("ERROR")
     val queries = SparkEntry.queries.filter(_._1.contains(flt))
-    // Warm pass: executes every plan once (codegen compiled, buffers sized).
+    // Warm pass: executes every plan once, so its generated classes are
+    // compiled and cached (Sessions sizes Spark's class cache to hold the
+    // whole suite's), and buffers are sized. The detail file records the
+    // classes each timed pass still compiled.
     queries.foreach { case (_, fn) =>
       try run(fn(spark, sfDir)) catch { case _: Throwable => () }
     }
     // A query that throws records the sentinel -1.0 (never a normal-looking
     // timing) and lands in "errors" — a broken query must not silently
-    // shrink the recorded baseline anchor.
-    def timedPass(): Seq[(String, Double)] = queries.toSeq.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val ok = try { run(fn(spark, sfDir)); true } catch { case _: Throwable => false }
-      name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+    // shrink the recorded baseline anchor. Its first exception goes to the
+    // detail file's "failures".
+    val failures = scala.collection.mutable.LinkedHashMap.empty[String, Throwable]
+    val compiles = scala.collection.mutable.ArrayBuffer.empty[Long]
+    def compiled: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def timedPass(): Seq[(String, Double)] = {
+      val c0 = compiled
+      val times = queries.toSeq.map { case (name, fn) =>
+        val t0 = System.nanoTime()
+        val ok = try { run(fn(spark, sfDir)); true } catch {
+          case t: Throwable => failures.getOrElseUpdate(name, t); false
+        }
+        name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+      }
+      compiles += compiled - c0
+      times
     }
     val (p1, p2) = (timedPass(), timedPass().toMap)
     val results = p1.map { case (name, v1) =>
@@ -105,7 +131,8 @@ object Bench {
     }
     val canonical = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench.json")
     val out = if (flt.isEmpty) canonical else canonical + ".dev"
-    val (compact, full) = jsonLine(results, sfDir, out, drift)
+    val (compact, full) = jsonLine(results, sfDir, out, drift, compiles.toSeq,
+      failures.toSeq)
     java.nio.file.Files.writeString(java.nio.file.Paths.get(out), full + "\n")
     if (flt.isEmpty)
       try java.nio.file.Files.writeString(

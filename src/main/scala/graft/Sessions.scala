@@ -13,12 +13,40 @@ import org.apache.spark.sql.SparkSession
   * RuntimeJoinFilterProgram.kt) via Spark's built-in equivalents.
   */
 object Sessions {
+  /** Entries of Spark's JVM-wide cache of generated classes
+    * (`spark.sql.codegen.cache.maxEntries`; Spark's default is 100). A
+    * class evicted from it is compiled again by Janino the next time its
+    * plan runs. The suite's working set is far above 100: one JVM running
+    * all 300 queries at sf0.01 compiles about 2,750 distinct classes, so
+    * at the default each warm pass compiled about 2,750 again (117 s a
+    * pass against 66 s once they stay cached, 4 cores). 4096 holds that
+    * set with about 1.5x headroom. An entry retains about 30 KB of heap
+    * (source and class; the full run's heap in use after GC went from
+    * 152 MB to 234 MB), so a full cache costs about 120 MB. A JVM that
+    * runs a handful of queries fills only what it runs. */
+  private val CodegenCacheEntries = 4096
+
   def build(master: String, shufflePartitions: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(master)
       // library extension point: registers the custom Catalyst expressions
       // (jaro_winkler, uuid5) on every session built from this config
       .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // Keep the whole-stage codegen stage id out of the generated class
+      // name, the only place it enters the cached source. AQE numbers a
+      // query's stages in the order their inputs finish, which varies
+      // from call to call when branches run in parallel (agg_hll_sketch's
+      // four aggregates): the same pipeline then compiled again under a
+      // new name. The id still shows in EXPLAIN as `*(n)`.
+      .config("spark.sql.codegen.useIdInClassName", "false")
+      // The cleaner removes a dead broadcast or task binary without
+      // waiting for the block manager. Blocking removal stalled
+      // SnapshotConcurrentPropertySpec once cached classes made its racing
+      // writers fast: the cleaner waited on the memory store, which was
+      // evicting blocks to disk under the memory-manager lock, so dead
+      // broadcasts filled the heap and every task waited on that lock.
+      .config("spark.cleaner.referenceTracking.blocking", "false")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       // Historical fixture generations shipped events.ts as TIMESTAMP(NANOS),

@@ -42,18 +42,21 @@ object VecExprs {
     * MEASURED SLOWER than the HOF on the focused A/B (a ~190-node tree per
     * use pays compile/interpreted-eval overhead that dwarfs the per-pair
     * win at fixture volume), while the loop form pays one array conversion
-    * per call and runs the 64 multiply-adds fused. NULL arrays yield NULL,
-    * like the HOF. */
+    * per call and runs the 64 multiply-adds fused. NULL in, NULL out, like
+    * the HOF: a NULL array, a NULL element (it would null its product and
+    * so the sum) and a length mismatch (zip_with's null padding) all yield
+    * NULL. */
   def dotLoop: UserDefinedFunction =
-    udf { (a: Seq[Double], b: Seq[Double]) =>
-      // length mismatch → null, like zip_with's null padding propagating
-      // through the sum (never happens on the DIM-64 fixtures)
+    udf { (a: Seq[java.lang.Double], b: Seq[java.lang.Double]) =>
       if (a == null || b == null || a.length != b.length) null
       else {
         var acc = 0.0
         var i = 0
-        while (i < a.length) { acc += a(i) * b(i); i += 1 }
-        java.lang.Double.valueOf(acc)
+        while (i < a.length && a(i) != null && b(i) != null) {
+          acc += a(i) * b(i)
+          i += 1
+        }
+        if (i < a.length) null else java.lang.Double.valueOf(acc)
       }
     }
 
@@ -61,10 +64,17 @@ object VecExprs {
     * w_j[i] = ((i·31 + j·17) % 7) − 3 (identical constants to the DuckDB
     * oracle mirrors): bit j set iff Σ_i emb[i]·w_j[i] ≥ 0, per-plane
     * accumulation left-to-right from 0.0 — bit-identical to the per-plane
-    * `aggregate(zip_with(emb, sequence(0, dim-1), ...))` column form. */
+    * `aggregate(zip_with(emb, sequence(0, dim-1), ...))` column form on
+    * every embedding of exactly `dim` non-NULL elements.
+    *
+    * Anything else is NULL in, NULL out: a NULL embedding, a NULL
+    * element, or a length other than `dim`. This departs from the HOF
+    * form, whose NULL plane dots fell through `when(dot >= 0)` to 0 and
+    * so filed such rows under bucket 0; a NULL signature files them under
+    * no bucket, so a bucket equi-join never matches them. */
   def lshSig(dim: Int, nplanes: Int): UserDefinedFunction =
-    udf { (emb: Seq[Double]) =>
-      if (emb == null) null
+    udf { (emb: Seq[java.lang.Double]) =>
+      if (emb == null || emb.length != dim || emb.contains(null)) null
       else {
         var s = 0L
         var j = 0

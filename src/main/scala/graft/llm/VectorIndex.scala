@@ -27,6 +27,9 @@ object VectorIndex {
   // fresh zip array per call — moved to tight-loop UDFs in
   // functions/VecExprs: same fold order, bit-identical doubles, so
   // existing fingerprint-keyed indexes stay valid (identical buckets).
+  // One departure: an embedding that is NULL, holds a NULL, or is not
+  // DIM long now gets a NULL bucket (the HOF form gave it bucket 0), so
+  // it sits in no probed bucket. The fixture has no such embedding.
   // The per-row norm/cast HOFs stay (unrolled replacements measured
   // slower on the focused A/B; row-bounded call count).
 

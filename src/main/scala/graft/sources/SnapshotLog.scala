@@ -2645,7 +2645,7 @@ object SnapshotLog {
               toVersion: Option[Int] = None,
               netChanges: Boolean = false,
               identifierCols: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.{col, lit, typedLit}
     require(!(netChanges && identifierCols.nonEmpty),
       "SnapshotLog.changes: net_changes and compute-updates (identifier " +
         "columns) cannot be combined — Iceberg's create_changelog_view " +
@@ -2731,13 +2731,22 @@ object SnapshotLog {
           val before = conform(visible(prev, touchedPrev), prev)
             .withColumn(tagC, lit(-1L))
           Some(after.unionByName(before)
-            .withColumn("_commit_version", lit(cur.version))
-            .withColumn("_commit_ts_ms", lit(cur.commitTsMs)))
+            .withColumn("_commit_version", lit(cur.version)))
         }
       case _ => None
     }.toSeq
     if (slices.isEmpty) emptyDf(StructType(outSchema.fields ++ metaFields))
     else {
+      // Commit timestamps join AFTER the netting, looked up on
+      // `_commit_version` in one map-typed literal. Codegen passes a map
+      // literal by reference but inlines a long literal into the Java
+      // source, and procedures commit at wall-clock time: a per-slice
+      // timestamp literal would make each call's plan new source and a
+      // fresh compile. A timestamp is a function of its version, so the
+      // netting keys need only the version.
+      val tsMap = typedLit(inRange.map(s => s.version -> s.commitTsMs).toMap)
+      def tsOf(version: org.apache.spark.sql.Column) =
+        org.apache.spark.sql.GraftSqlShim.assertNotNull(tsMap(version))
       // ONE aggregation for the whole changelog: every transition's
       // before(-1)/after(+1) rows union tagged, a single groupBy over
       // (row, version) nets the multiplicities — bag semantics identical
@@ -2750,7 +2759,7 @@ object SnapshotLog {
       // chunks so a pathological all-duplicate file cannot materialize a
       // row-count-sized array.
       import org.apache.spark.sql.functions.{abs => fAbs, explode, least, max => fMax, sequence, sum => fSum, when}
-      val verKeys = (outCols ++ Seq("_commit_version", "_commit_ts_ms")).map(col)
+      val verKeys = (outCols :+ "_commit_version").map(col)
       def netOf(chunk: Seq[DataFrame]): DataFrame =
         chunk.reduce(_ unionByName _)
           .groupBy(verKeys: _*)
@@ -2773,11 +2782,12 @@ object SnapshotLog {
       // transition that CHANGED it, not the last that touched its file
       // (Iceberg net_changes semantics).
       val grouped =
-        if (!netChanges) perVersion
+        if (!netChanges)
+          perVersion.withColumn("_commit_ts_ms", tsOf(col("_commit_version")))
         else perVersion.groupBy(outCols.map(col): _*)
           .agg(fSum(col(netC)).as(netC),
             fMax(col("_commit_version")).as("_commit_version"),
-            fMax(col("_commit_ts_ms")).as("_commit_ts_ms"))
+            fMax(tsOf(col("_commit_version"))).as("_commit_ts_ms"))
           .filter(col(netC) =!= 0L)
       val expanded = grouped
         .withColumn("_change_type",

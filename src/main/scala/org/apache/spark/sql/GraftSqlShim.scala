@@ -12,6 +12,14 @@ object GraftSqlShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** `c`, declared non-nullable: Catalyst's own `AssertNotNull`, for a
+    * value the caller knows is never null but whose expression (a map
+    * lookup, say) Catalyst types as nullable. Fails the task if a null
+    * does arrive. */
+  def assertNotNull(c: Column): Column = classic.ExpressionUtils.column(
+    catalyst.expressions.objects.AssertNotNull(
+      classic.ExpressionUtils.expression(c)))
+
   /** Re-wrap a computed batch DataFrame as a STREAMING frame for a legacy
     * `Source.getBatch` return: MicroBatchExecution asserts
     * `isStreaming=true` on the returned plan, and a multi-stage computed

@@ -10,7 +10,10 @@ import graft.functions.VecExprs
   * replaced in SimQueries/VectorIndex: same left-to-right fold from 0.0
   * ⇒ identical doubles ⇒ identical sign bits, buckets, and rank ties.
   * Runs over the REAL embeddings fixture so the comparison covers the
-  * exact value distribution the queries see. */
+  * exact value distribution the queries see. Edge inputs (a NULL array,
+  * a NULL element, a length mismatch) are NULL in, NULL out for both
+  * UDFs; for lshSig that departs from the HOF, which gave such rows
+  * signature 0. */
 class VecExprsSpec extends AnyFunSuite {
 
   private val DIM = 64
@@ -54,7 +57,7 @@ class VecExprsSpec extends AnyFunSuite {
     }
   }
 
-  test("dotLoop/lshSig null and mismatch semantics mirror the HOFs") {
+  test("dotLoop/lshSig: a NULL array or a length mismatch yields NULL") {
     import spark.implicits._
     val df = Seq(
       (Some(Seq(1.0, 2.0)), Some(Seq(3.0, 4.0))), // 1*3 + 2*4 = 11
@@ -64,7 +67,28 @@ class VecExprsSpec extends AnyFunSuite {
     val got = df.select(VecExprs.dotLoop(col("a"), col("b"))).collect()
     assert(got(0).getDouble(0) === 11.0)
     assert(got(1).isNullAt(0) && got(2).isNullAt(0))
+    // a NULL embedding gets a NULL signature (the HOF form gave 0)
     val sig = df.select(VecExprs.lshSig(2, 1)(col("a"))).collect()
     assert(!sig(0).isNullAt(0) && sig(1).isNullAt(0))
+  }
+
+  test("lshSig yields NULL for an embedding shorter or longer than dim") {
+    import spark.implicits._
+    val df = Seq(Seq(1.0, 2.0, 3.0), Seq(1.0, 2.0), Seq(1.0, 2.0, 3.0, 4.0))
+      .toDF("e")
+    val sig = df.select(VecExprs.lshSig(3, 4)(col("e"))).collect()
+    assert(!sig(0).isNullAt(0))
+    assert(sig(1).isNullAt(0) && sig(2).isNullAt(0))
+  }
+
+  test("dotLoop/lshSig: a NULL element yields NULL instead of failing the task") {
+    val df = spark.sql(
+      "SELECT array(1.0D, CAST(NULL AS DOUBLE)) AS a, array(3.0D, 4.0D) AS b")
+    val row = df.select(VecExprs.dotLoop(col("a"), col("b")),
+      VecExprs.dotLoop(col("b"), col("a")),
+      VecExprs.lshSig(2, 2)(col("a")),
+      VecExprs.lshSig(2, 2)(col("b"))).head()
+    assert(row.isNullAt(0) && row.isNullAt(1) && row.isNullAt(2))
+    assert(!row.isNullAt(3))
   }
 }
