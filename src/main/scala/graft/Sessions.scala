@@ -40,13 +40,16 @@ object Sessions {
       // four aggregates): the same pipeline then compiled again under a
       // new name. The id still shows in EXPLAIN as `*(n)`.
       .config("spark.sql.codegen.useIdInClassName", "false")
-      // The cleaner removes a dead broadcast or task binary without
-      // waiting for the block manager. Blocking removal stalled
-      // SnapshotConcurrentPropertySpec once cached classes made its racing
-      // writers fast: the cleaner waited on the memory store, which was
-      // evicting blocks to disk under the memory-manager lock, so dead
-      // broadcasts filled the heap and every task waited on that lock.
-      .config("spark.cleaner.referenceTracking.blocking", "false")
+      // Tungsten page size. A broadcast hash relation on a non-long key
+      // takes its first page at full size whatever it holds, and Spark's
+      // default size grows with the heap: 16 MB at 3 GB and 4 cores, 64 MB
+      // at 7 GB. A snapshot read broadcasts each equality-delete file for
+      // its own anti-join, so reads of a table with many of them held one
+      // page per file: 165 live relations, 2.5 GB of a 3 GB heap in
+      // SnapshotConcurrentPropertySpec, which then spun in full GCs. 1 MB
+      // is the floor of Spark's default; a larger record still gets a page
+      // of its own size.
+      .config("spark.buffer.pageSize", "1m")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       // Historical fixture generations shipped events.ts as TIMESTAMP(NANOS),
