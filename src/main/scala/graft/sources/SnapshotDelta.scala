@@ -89,50 +89,28 @@ private[sources] class SnapshotDeltaBatchWrite(root: String,
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DeltaWriterFactory =
     new SnapshotDeltaWriterFactory(dataDir.toString, delDir.toString, schema.json)
 
+  /** Every affected data file gets the statement's delete files; the
+    * inserted fragments get bloom coverage like any other commit. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
-    val fs = SnapshotLog.fsFor(spark, new Path(root))
-    val conf = spark.sessionState.newHadoopConf()
     val msgs = messages.collect { case m: SnapshotDeltaMessage => m }
-    val newFiles = msgs.flatMap(m => Option(m.dataPath)).toSeq.sorted
+    val newFiles = msgs.flatMap(m => Option(m.dataPath)).toSeq
     val delFiles = msgs.flatMap(m => Option(m.deletePath)).toSeq.sorted
-    val affected = msgs.flatMap(_.affectedFiles).distinct
-
-    // single atomic read: head + version slot + ts (TOCTOU guard)
-    val (cur, nextV, nextTs) = SnapshotLog.headNextTs(spark, root)
-    if (cur.version != snap.version) {
-      fs.delete(dataDir, true); fs.delete(delDir, true)
-      throw new IllegalStateException(
-        s"SnapshotLog: concurrent commit (table at v${cur.version}, " +
-          s"$operation planned against v${snap.version}) — retry the statement")
-    }
     if (newFiles.isEmpty && delFiles.isEmpty) {
-      fs.delete(dataDir, true); fs.delete(delDir, true)
-      return // statement matched nothing: no snapshot
+      abort(messages)
+      // statement matched nothing: no snapshot, but a moved head refuses
+      // like any other statement planned against `snap`
+      val head = SnapshotLog.pick(spark, root, None, None).version
+      if (head != snap.version)
+        throw SnapshotLog.movedSincePlanned(operation, snap, head)
+      return
     }
-    val merged = cur.dels ++ affected.map(f =>
-      f -> (cur.dels.getOrElse(f, Seq.empty) ++ delFiles)).toMap
-    val newSizes = newFiles
-      .map(f => SnapshotLog.norm(f) -> fs.getFileStatus(new Path(f)).getLen).toMap
-    val (newStats, newCols, newRows, newNulls) = SnapshotLog.footerMeta(conf, newFiles, schema)
-    // delta-appended files carry bloom coverage like any other commit
-    SnapshotBlooms.writeBothSidecars(spark, root, newFiles, schema, newRows)
-    SnapshotNulls.record(spark, root, newNulls)
-    val allFiles = cur.files ++ newFiles
-    val (fids, colIds, maxId) =
-      SnapshotLog.fidCarry(Some(cur), schema, allFiles, newCols)
-    try {
-      SnapshotLog.commitManifest(fs, root, cur.copy(version = nextV,
-        operation = operation, commitTsMs = nextTs, files = allFiles,
-        stats = cur.stats ++ newStats, sizes = cur.sizes ++ newSizes,
-        props = Map("write.mode" -> "merge-on-read-delta") ++
-          SnapshotLog.takePendingCommitProps(),
-        cols = cur.cols ++ newCols, dels = merged, rows = cur.rows ++ newRows,
-        fids = fids, colIds = colIds, maxId = maxId, parent = cur.version))
-    } catch {
-      case e: IllegalStateException =>
-        fs.delete(dataDir, true); fs.delete(delDir, true); throw e
-    }
+    val affected = msgs.flatMap(_.affectedFiles).distinct
+    SnapshotLog.commitRowLevel(spark, root, snap, operation,
+      Map("write.mode" -> "merge-on-read-delta") ++
+        SnapshotLog.takePendingCommitProps(),
+      schema, newFiles, Set.empty,
+      affected.map(_ -> delFiles).toMap, Seq(dataDir, delDir))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

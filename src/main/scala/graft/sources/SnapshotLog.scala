@@ -716,7 +716,7 @@ object SnapshotLog {
     * ids), and derives each new file's id list from its physical column
     * names. All-empty until the table bootstraps field ids (first
     * rename/drop) — name-based tables pay nothing. */
-  private[sources] def fidCarry(prior: Option[Snapshot], schema: StructType,
+  private def fidCarry(prior: Option[Snapshot], schema: StructType,
       allFiles: Seq[String], newCols: Map[String, Seq[String]])
       : (Map[String, Int], Map[String, Seq[Int]], Int) =
     prior.filter(_.fids.nonEmpty) match {
@@ -805,16 +805,12 @@ object SnapshotLog {
     * manifest's id->physical-name mapping — no data moves, old snapshots
     * read under their own schema. Bootstraps field ids on first use. */
   def renameColumn(spark: SparkSession, root: String, from: String,
-                   to: String, commitTsMs: Long): Int = {
-    require(pick(spark, root, None, None).commitTsMs < commitTsMs,
-      s"commitTsMs $commitTsMs must advance past the last snapshot")
+                   to: String, commitTsMs: Long): Int =
     // metadata-only ops re-run WHOLESALE against the fresh head on a
     // lost race — their cost is one manifest compose, and re-validation
     // (column still present, no eq-delete keys on it) is the whole body
-    retryingCommit("renameColumn") { () =>
-      val (head, next) = headAndNext(spark, root)
+    alter(spark, root, "renameColumn", commitTsMs) { head =>
       val cur = bootstrapFids(head)
-      val ts = math.max(commitTsMs, cur.commitTsMs + 1)
       require(cur.schema.fieldNames.contains(from),
         s"SnapshotLog: no column $from to rename at $root")
       require(!cur.schema.fieldNames.contains(to),
@@ -837,27 +833,19 @@ object SnapshotLog {
       }
       def renamed(sp: Seq[(String, String)]) =
         sp.map { case (s, t) => (if (s == from) to else s, t) }
-      commitManifest(fsFor(spark, new Path(root)), root, cur.copy(
-        version = next, operation = "alter", commitTsMs = ts,
-        schemaJson = newSchema.json, props = Map.empty,
+      cur.copy(schemaJson = newSchema.json,
         spec = renamed(cur.spec), specs = cur.specs.map(renamed),
-        fids = cur.fids - from + (to -> cur.fids(from)), parent = cur.version))
-      next
+        fids = cur.fids - from + (to -> cur.fids(from)))
     }
-  }
 
   /** METADATA-ONLY column drop: the field id is RETIRED, never reused —
     * a later re-added column of the same name gets a fresh id, so the
     * dropped data cannot alias back (Iceberg's rule). Time travel to
     * pre-drop versions still reads the column. */
   def dropColumn(spark: SparkSession, root: String, name: String,
-                 commitTsMs: Long): Int = {
-    require(pick(spark, root, None, None).commitTsMs < commitTsMs,
-      s"commitTsMs $commitTsMs must advance past the last snapshot")
-    retryingCommit("dropColumn") { () =>
-      val (head, next) = headAndNext(spark, root)
+                 commitTsMs: Long): Int =
+    alter(spark, root, "dropColumn", commitTsMs) { head =>
       val cur = bootstrapFids(head)
-      val ts = math.max(commitTsMs, cur.commitTsMs + 1)
       require(cur.schema.fieldNames.contains(name),
         s"SnapshotLog: no column $name to drop at $root")
       require(cur.schema.fields.length > 1,
@@ -874,13 +862,21 @@ object SnapshotLog {
           s"SnapshotLog: column $name is a key of equality delete file $df" +
             " — run rewriteDataFiles to fold the deletes before dropping")
       }
-      val newSchema = StructType(cur.schema.fields.filterNot(_.name == name))
-      commitManifest(fsFor(spark, new Path(root)), root, cur.copy(
-        version = next, operation = "alter", commitTsMs = ts,
-        schemaJson = newSchema.json, props = Map.empty,
-        fids = cur.fids - name, parent = cur.version))
-      next
+      cur.copy(schemaJson =
+        StructType(cur.schema.fields.filterNot(_.name == name)).json,
+        fids = cur.fids - name)
     }
+
+  /** A metadata-only "alter" snapshot on main: `edit` re-derives the
+    * schema change, validation included, from the fresh head of every
+    * attempt; [[compose]] then carries the field ids (new columns get
+    * fresh ones). Staged against no head, it never refuses a moved one. */
+  private def alter(spark: SparkSession, root: String, what: String,
+                    commitTsMs: Long)(edit: Snapshot => Snapshot): Int = {
+    require(pick(spark, root, None, None).commitTsMs < commitTsMs,
+      s"commitTsMs $commitTsMs must advance past the last snapshot")
+    commitChange(spark, root, Ref.Main, None, commitTsMs, Change(what,
+      "alter", Map.empty, Nil, edit = Edit(on = edit), maintain = false))
   }
 
   /** Sort-on-write shaping for a commit batch. `write.sort.order=c1,c2`
@@ -947,10 +943,18 @@ object SnapshotLog {
     def of(branch: Option[String]): Ref = branch.fold[Ref](Main)(Branch(_))
   }
 
-  /** ONE log read: (head of `ref`, version slot to claim, newest commit
-    * ts) — the [[headAndNext]] invariant on any ref. Main's head is None
-    * before the first commit; a branch must exist and point at a
-    * retained snapshot. */
+  /** ONE log read per commit attempt: (head of `ref`, version slot to
+    * claim, newest commit ts). THE invariant of the optimistic protocol: a
+    * manifest published at slot N must be composed from a read whose last
+    * version was N-1 — then any concurrent commit that landed after that
+    * read must have claimed slot ≤ N itself, so OUR O_EXCL claim of N
+    * fails and the attempt retries on the fresh head. Deriving head and
+    * slot from TWO separate reads is a lost-update TOCTOU: a commit
+    * landing between them hands the composer a STALE head and a FREE slot
+    * — the publish succeeds conflict-free and the intervening commit's
+    * files and deletes silently vanish (caught by
+    * SnapshotConcurrentPropertySpec, r16). Main's head is None before the
+    * first commit; a branch must exist and point at a retained snapshot. */
   private def resolveRef(spark: SparkSession, root: String, ref: Ref)
       : (Option[Snapshot], Int, Long) = {
     val branchHead = ref match {
@@ -1000,11 +1004,9 @@ object SnapshotLog {
       parts: Map[String, Seq[String]] = Map.empty)
 
   /** Write `df` into a fresh uuid dir under `<root>/data` (hive-style
-    * when `partitionBy` is set) and lift the written part files in ONE
-    * footer walk: sizes from the listing, stats/columns/row and null
-    * counts from the footers, partition tuples from the directory path.
-    * `dropEmpty` deletes zero-row parts (a task that received no rows
-    * still opened a writer). Returns the dir, for cleanup on refusal. */
+    * when `partitionBy` is set), list the written part files and lift
+    * them through [[stageFiles]]. Returns the dir, for cleanup on
+    * refusal. */
   private def stageData(spark: SparkSession, root: String, df: DataFrame,
       schema: StructType, tblProps: Map[String, String],
       partitionBy: Seq[String] = Nil,
@@ -1016,20 +1018,30 @@ object SnapshotLog {
       (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*))
         .parquet(dir.toString)
     }
-    val fs = fsFor(spark, dir)
     val listed = scala.collection.mutable.ArrayBuffer[(String, Long)]()
-    val it = fs.listFiles(dir, true)
+    val it = fsFor(spark, dir).listFiles(dir, true)
     while (it.hasNext) {
       val st = it.next()
       val name = st.getPath.getName
       if (name.startsWith("part-") && name.endsWith(".parquet"))
         listed += ((st.getPath.toString, st.getLen))
     }
+    (dir, stageFiles(spark, listed.toSeq, schema, partitionBy, dropEmpty))
+  }
+
+  /** The footer-walk half of staging, for written and listed (path, size)
+    * files: ONE footer walk lifts stats/columns/row and null counts,
+    * partition tuples come from the directory path. `dropEmpty` deletes
+    * zero-row parts (a task that received no rows still opened a
+    * writer). */
+  private def stageFiles(spark: SparkSession, listed: Seq[(String, Long)],
+      schema: StructType, partitionBy: Seq[String] = Nil,
+      dropEmpty: Boolean = false): Staged = {
     val (stats, cols, rows, nulls) = footerMeta(
-      spark.sessionState.newHadoopConf(), listed.map(_._1).toSeq, schema)
-    val (kept, empty) = listed.sortBy(_._1).toSeq
+      spark.sessionState.newHadoopConf(), listed.map(_._1), schema)
+    val (kept, empty) = listed.sortBy(_._1)
       .partition(f => !dropEmpty || rows.getOrElse(norm(f._1), 0L) > 0)
-    empty.foreach(f => fs.delete(new Path(f._1), false))
+    empty.foreach(f => fsFor(spark, new Path(f._1)).delete(new Path(f._1), false))
     val live = kept.map(f => norm(f._1)).toSet
     def liveOf[V](m: Map[String, V]) = m.view.filterKeys(live).toMap
     // each leaf file's partition tuple is its directory path
@@ -1040,8 +1052,8 @@ object SnapshotLog {
           case seg if seg.startsWith(pn + "=") => seg.substring(pn.length + 1)
         }.getOrElse(SnapshotPartition.NullMarker))
       }.toMap
-    (dir, Staged(schema, kept.map(_._1), kept.map(f => norm(f._1) -> f._2).toMap,
-      liveOf(stats), liveOf(cols), liveOf(rows), liveOf(nulls), parts))
+    Staged(schema, kept.map(_._1), kept.map(f => norm(f._1) -> f._2).toMap,
+      liveOf(stats), liveOf(cols), liveOf(rows), liveOf(nulls), parts)
   }
 
   /** `h` plus the staged files (per-file maps merged in). */
@@ -1056,18 +1068,35 @@ object SnapshotLog {
   private final case class Append(overwrite: Boolean,
                                   spec: Seq[(String, String)] = Nil)
 
+  /** The head-relative part of a change, evaluated on the FRESH head of
+    * every attempt: `on` maps that head to the one the change composes
+    * onto — files dropped because the change's new data replaces them, a
+    * delete-list rewire, a schema edit with its validation. `targets`
+    * holds the NORMALIZED data files whose entries it replaces or rewires:
+    * on a moved head [[validateReapply]] requires them exactly as staged. */
+  private final case class Edit(targets: Set[String] = Set.empty,
+                                on: Snapshot => Snapshot = identity)
+  private object Edit {
+    /** The change's new data replaces `files` (normalized). */
+    def replacing(files: Set[String]): Edit =
+      Edit(files, _.retain(f => !files.contains(f)))
+  }
+
   /** A staged change, ready for [[commitChange]] on any ref: new data
-    * files, delete files per existing data file, the manifest operation
-    * and props, and the staged dirs to delete if it never lands. `what`
-    * names it in refusals. Without `append` it is row-level work, valid
+    * files, delete files per existing data file, the head-relative edit,
+    * the manifest operation and props, and the staged dirs to delete if it
+    * never lands. `what` names it in refusals; `tblProps` arm the new
+    * files' index sidecars. Without `append` it is row-level work, valid
     * only on the head it was staged against; `reapply` adds a check to
-    * the mainline re-apply validation. */
+    * the mainline re-apply validation. `maintain` = run [[maybeMaintain]]
+    * after a mainline commit. */
   private final case class Change(what: String, operation: String,
       props: Map[String, String], cleanup: Seq[Path],
       tblProps: Map[String, String] = Map.empty, data: Staged = Staged(),
       dels: Map[String, Seq[String]] = Map.empty, sortOn: Seq[String] = Nil,
-      append: Option[Append] = None,
-      reapply: (Snapshot, Snapshot) => Unit = (_, _) => ())
+      append: Option[Append] = None, edit: Edit = Edit(),
+      reapply: (Snapshot, Snapshot) => Unit = (_, _) => (),
+      maintain: Boolean = true)
 
   /** Test seam: invoked on a branch commit after staging, before the
     * commit closure — lets specs interleave a concurrent writer
@@ -1081,27 +1110,37 @@ object SnapshotLog {
     * (surfaced via CommitConflictException.orphanVersion). */
   private[graft] var branchDmlBeforeRefWrite: () => Unit = () => ()
 
-  /** THE commit kernel: every data commit — append, overwrite,
-    * partitioned append, MoR delete/update/upsert — on every ref, staged
-    * ONCE against `base` (the ref's head at entry). Optimistic
-    * concurrency (Iceberg SnapshotProducer): each [[retryingCommit]]
-    * attempt resolves the ref's fresh head, validates, composes the new
-    * snapshot as a copy of the head plus the change, and publishes it; a
-    * lost version race re-runs the attempt, so writers of disjoint work
-    * all land. Refused or out of retries, the staged dirs are deleted —
-    * no orphan files leak. Then the index sidecars of the new files
-    * (AFTER the publish: written first, they would reference a refused
-    * commit's deleted files forever), then the ref's post-commit step.
+  /** THE commit kernel: every snapshot commit that stages work goes
+    * through here, on every ref —
+    *  - data commits: append, overwrite, partitioned append, MoR
+    *    delete/update/upsert ([[commit]] … [[upsertEqualityMoR]]);
+    *  - ALTER: [[renameColumn]], [[dropColumn]], [[alterSchema]];
+    *  - compactions: [[rewriteDataFiles]], [[rewriteDeleteFiles]];
+    *  - copy-on-write DELETE ([[rewriteTouched]]);
+    *  - the DSv2 SQL UPDATE/MERGE/DELETE writers ([[commitRowLevel]]).
+    * Staged ONCE against `base` (the ref's head at entry; None for an
+    * ALTER, which stages nothing and re-derives itself from the fresh
+    * head). Optimistic concurrency (Iceberg SnapshotProducer): each
+    * [[retryingCommit]] attempt resolves the ref's fresh head, validates,
+    * applies the change's [[Edit]] to it, composes the new snapshot as a
+    * copy of that head plus the change, and publishes it; a lost version
+    * race re-runs the attempt, so writers of disjoint work all land.
+    * Refused or out of retries, the staged dirs are deleted — no orphan
+    * files leak. Then the index sidecars of the new files (AFTER the
+    * publish: written first, they would reference a refused commit's
+    * deleted files forever), then the ref's post-commit step.
     *
     * What differs by ref:
     *  - head: the mainline head, or the branch's ref;
     *  - a head that moved during staging: appends re-apply on either ref
     *    (uuid-named files cannot overlap anyone's work; an overwrite is
     *    base-independent). Row-level work re-applies on main after
-    *    [[validateReapply]], and refuses on a branch — branch DML is
-    *    never blind-merged across a concurrent branch writer;
-    *  - post-commit: [[maybeMaintain]] on main; on a branch the CAS
-    *    [[advanceBranchRef]] (the snapshot carries `ref=<branch>`).
+    *    [[validateReapply]] on its targeted files and the change's own
+    *    `reapply` check, and refuses on a branch — branch DML is never
+    *    blind-merged across a concurrent branch writer;
+    *  - post-commit: [[maybeMaintain]] on main (when the change asks for
+    *    it); on a branch the CAS [[advanceBranchRef]] (the snapshot
+    *    carries `ref=<branch>`).
     * Timestamps bump past the newest snapshot, keeping commitTsMs
     * strictly monotone per table. Returns the committed version. */
   private def commitChange(spark: SparkSession, root: String, ref: Ref,
@@ -1113,18 +1152,18 @@ object SnapshotLog {
       c.append match {
         case Some(a) =>
           if (!a.overwrite) validateAppend(c.what, c.data.schema, base, head)
-        case None if head.map(_.version) != base.map(_.version) => ref match {
-          case Ref.Main =>
-            validateReapply(c.what, base.get, head.get, c.dels.keySet)
-            c.reapply(base.get, head.get)
-          case Ref.Branch(b) => throw new CommitConflictException(
-            s"SnapshotLog: branch '$b' advanced during the ${c.what} " +
-              "staging — re-run against the new head")
-        }
-        case None => ()
+        case None =>
+          for (b <- base; h <- head if h.version != b.version) ref match {
+            case Ref.Main =>
+              validateReapply(c.what, b, h, c.dels.keySet ++ c.edit.targets)
+              c.reapply(b, h)
+            case Ref.Branch(name) => throw new CommitConflictException(
+              s"SnapshotLog: branch '$name' advanced during the ${c.what} " +
+                "staging — re-run against the new head")
+          }
       }
-      commitManifest(fs, root,
-        compose(head, next, math.max(commitTsMs, lastTs + 1), ref, c))
+      commitManifest(fs, root, compose(head.map(c.edit.on), next,
+        math.max(commitTsMs, lastTs + 1), ref, c))
       (next, head)
     } catch {
       case e: IllegalStateException =>
@@ -1138,7 +1177,7 @@ object SnapshotLog {
       if (c.sortOn.nonEmpty) SnapshotSorts.record(spark, root, d.files, c.sortOn)
     }
     ref match {
-      case Ref.Main => maybeMaintain(spark, root)
+      case Ref.Main => if (c.maintain) maybeMaintain(spark, root)
       case Ref.Branch(b) =>
         branchDmlBeforeRefWrite()
         advanceBranchRef(spark, root, b, head.get.version, committed)
@@ -1146,11 +1185,11 @@ object SnapshotLog {
     committed
   }
 
-  /** The snapshot change `c` publishes at slot `next` on `head`: a copy of
-    * the head (of nothing, for an overwrite or a first commit) with the
-    * new files added, delete files folded onto their data files, the
-    * field ids carried and, for a partitioned append, the spec history
-    * extended. */
+  /** The snapshot change `c` publishes at slot `next` on `head` (already
+    * edited by the change): a copy of the head (of nothing, for an
+    * overwrite or a first commit) with the new files added, delete files
+    * folded onto their data files, the field ids carried and, for a
+    * partitioned append, the spec history extended. */
   private def compose(head: Option[Snapshot], next: Int, ts: Long, ref: Ref,
                       c: Change): Snapshot = {
     val parent = if (c.append.exists(_.overwrite)) None else head
@@ -1163,8 +1202,10 @@ object SnapshotLog {
     // under a DIFFERENT spec is legal — the new files lay out and prune
     // under the new spec, carried files keep pruning under the spec they
     // were written with (parent files without an entry were written under
-    // the parent's active spec). Other changes keep the head's spec; their
-    // new files carry no tuple and are kept conservatively by pruning.
+    // the parent's active spec). Other changes keep the head's spec: new
+    // files with a partition tuple (a compaction's) were laid out under
+    // its ACTIVE spec, the rest carry no tuple and are kept conservatively
+    // by pruning.
     val (spec, specs, fileSpec) = c.append.map(_.spec).filter(_.nonEmpty) match {
       case Some(sp) =>
         val prior = parent.fold(Seq.empty[Seq[(String, String)]])(p =>
@@ -1175,6 +1216,9 @@ object SnapshotLog {
         (sp, hist, parent.fold(Map.empty[String, Int])(p => p.files.map(norm)
           .map(k => k -> p.fileSpec.getOrElse(k, pIdx)).toMap) ++
           c.data.files.map(f => norm(f) -> hist.indexOf(sp)))
+      case None if h.specs.nonEmpty && h.spec.nonEmpty =>
+        (h.spec, h.specs,
+          h.fileSpec ++ c.data.parts.keySet.map(_ -> h.specs.indexOf(h.spec)))
       case None => (h.spec, h.specs, h.fileSpec)
     }
     h.copy(version = next, operation = c.operation, commitTsMs = ts,
@@ -1354,28 +1398,16 @@ object SnapshotLog {
     * survive with its type — rename/drop/retype would strand name-based
     * resolution of old files (Iceberg needs field IDs for those). */
   def alterSchema(spark: SparkSession, root: String, newSchema: StructType,
-                  commitTsMs: Long): Int = {
-    require(pick(spark, root, None, None).commitTsMs < commitTsMs,
-      s"commitTsMs $commitTsMs must advance past the last snapshot")
-    retryingCommit("alterSchema") { () =>
-      val (cur, next) = headAndNext(spark, root)
-      val ts = math.max(commitTsMs, cur.commitTsMs + 1)
-      val old = cur.schema
-      old.fields.foreach { f =>
+                  commitTsMs: Long): Int =
+    alter(spark, root, "alterSchema", commitTsMs) { cur =>
+      cur.schema.fields.foreach { f =>
         val kept = newSchema.find(_.name == f.name)
         require(kept.exists(_.dataType == f.dataType),
           s"SnapshotLog: alterSchema must keep column ${f.name}: ${f.dataType} " +
             "(additive evolution only — rename/drop/retype unsupported)")
       }
-      val (fids, colIds, maxId) =
-        fidCarry(Some(cur), newSchema, cur.files, Map.empty)
-      commitManifest(fsFor(spark, new Path(root)), root, cur.copy(
-        version = next, operation = "alter", commitTsMs = ts,
-        schemaJson = newSchema.json, props = Map.empty,
-        fids = fids, colIds = colIds, maxId = maxId, parent = cur.version))
-      next
+      cur.copy(schemaJson = newSchema.json)
     }
-  }
 
   /** IMPORT an existing parquet directory as snapshot version 1 WITHOUT
     * moving or rewriting a byte — Iceberg's `snapshot` procedure analog:
@@ -2268,7 +2300,7 @@ object SnapshotLog {
     * jobs — thus ALL land; only a validation refusal
     * ([[CommitConflictException]]) or exhaustion surfaces. The tiny
     * jittered backoff de-synchronizes contenders without a lock. */
-  private[sources] def retryingCommit[T](what: String, maxAttempts: Int = 6)
+  private def retryingCommit[T](what: String, maxAttempts: Int = 6)
       (attempt: () => T): T = {
     var n = 1
     while (true) {
@@ -2455,42 +2487,6 @@ object SnapshotLog {
         throw new NoSuchElementException(
           s"SnapshotLog: only branch snapshots at $root"))
     }
-  }
-
-  /** Next version number for a NEW commit: one past the max over ALL
-    * commits including branch commits — version numbers are a single
-    * global sequence shared by every line of history, so mainline DML
-    * concurrent with an unpublished write-audit-publish branch allocates
-    * past the branch head instead of colliding with its version file. */
-  private[sources] def nextVersion(spark: SparkSession, root: String): Int =
-    snapshots(spark, root).lastOption.map(_.version + 1).getOrElse(1)
-
-  /** ONE atomic log read per commit attempt: (mainline head, version slot
-    * to claim). THE invariant of the optimistic protocol: a manifest
-    * published at slot N must be composed from a read whose last version
-    * was N-1 — then any concurrent commit that landed after that read
-    * must have claimed slot ≤ N itself, so OUR O_EXCL claim of N fails
-    * and the attempt retries on the fresh head. Deriving head and slot
-    * from TWO separate reads is a lost-update TOCTOU: a commit landing
-    * between them hands the composer a STALE head and a FREE slot — the
-    * publish succeeds conflict-free and the intervening commit's files
-    * and deletes silently vanish (caught by
-    * SnapshotConcurrentPropertySpec, r16). */
-  private[sources] def headAndNext(spark: SparkSession,
-                                   root: String): (Snapshot, Int) = {
-    val (h, n, _) = headNextTs(spark, root)
-    (h, n)
-  }
-
-  /** [[headAndNext]] plus the monotone commit timestamp — all three from
-    * the SAME read (the DSv2 row-level/delta writers need the ts too). */
-  private[sources] def headNextTs(spark: SparkSession,
-                                  root: String): (Snapshot, Int, Long) = {
-    val (main, next, lastTs) = resolveRef(spark, root, Ref.Main)
-    require(next > 1, s"SnapshotLog: no snapshots at $root")
-    (main.getOrElse(throw new NoSuchElementException(
-        s"SnapshotLog: only branch snapshots at $root")),
-      next, math.max(System.currentTimeMillis(), lastTs + 1))
   }
 
   /** Read a snapshot: the latest, a pinned version, or AS-OF a timestamp
@@ -3556,46 +3552,23 @@ object SnapshotLog {
           }
         stageData(spark, root, shaped, schema, Map.empty)
       }
-    // compacted outputs regenerate bloom coverage (an absent bloom is
-    // merely weaker pruning, but compaction folding a bloom'd table
-    // should not silently shed its point-lookup skipping)
-    SnapshotBlooms.writeBothSidecars(spark, root, data.files, schema, data.rows)
-    SnapshotNulls.record(spark, root, data.nulls)
-    // cluster-by outputs are key-sorted: record the per-file sort order so
-    // the DSv2 scan can report SupportsReportOrdering (co-sorted SPJ joins
-    // then skip the Sort as well as the Exchange)
-    SnapshotSorts.record(spark, root, data.files, clusterBy)
-
-    val smallSet = small.map(norm).toSet
     // optimistic re-apply: a concurrent append carries through (the new
     // head's untouched files are taken by reference); a concurrent
     // writer touching a REPLACED file (new deletes, rewrite) refuses —
-    // this compaction folded a state that no longer exists
-    try retryingCommit("rewriteDataFiles") { () =>
-      val (head, next) = headAndNext(spark, root)
-      val ts = if (head.version == cur.version) commitTsMs else {
-        validateReapply("rewriteDataFiles", cur, head, smallSet)
-        math.max(commitTsMs, head.commitTsMs + 1)
-      }
-      // deletes on rewritten files are folded; kept files carry theirs
-      // (none today — dels force files into the rewrite set — but a
-      // future partial rewrite must not drop them silently)
-      val kept = withStaged(head.retain(f => !smallSet.contains(f)), data)
-      val (fids, colIds, maxId) =
-        fidCarry(Some(head), schema, kept.files, data.cols)
-      commitManifest(fs, root, kept.copy(version = next,
-        operation = "rewrite", commitTsMs = ts, props = Map.empty,
-        fids = fids, colIds = colIds, maxId = maxId,
-        // rewritten files were laid out under the ACTIVE spec
-        fileSpec = kept.fileSpec ++
-          (if (head.specs.nonEmpty && head.spec.nonEmpty)
-            data.files.map(f => norm(f) -> head.specs.indexOf(head.spec)).toMap
-          else Map.empty),
-        parent = head.version))
-      next
-    } catch {
-      case e: IllegalStateException => fs.delete(dataDir, true); throw e
-    }
+    // this compaction folded a state that no longer exists. Deletes on
+    // rewritten files are folded; kept files carry theirs (none today —
+    // dels force files into the rewrite set — but a future partial
+    // rewrite must not drop them silently). The compacted outputs
+    // regenerate bloom coverage (an absent bloom is merely weaker
+    // pruning, but compaction folding a bloom'd table should not silently
+    // shed its point-lookup skipping), and cluster-by outputs record
+    // their per-file sort order so the DSv2 scan can report
+    // SupportsReportOrdering (co-sorted SPJ joins then skip the Sort as
+    // well as the Exchange).
+    commitChange(spark, root, Ref.Main, Some(cur), commitTsMs, Change(
+      "rewriteDataFiles", "rewrite", Map.empty, Seq(dataDir),
+      tablePropsOrEmpty(spark, root), data, sortOn = clusterBy,
+      edit = Edit.replacing(small.map(norm).toSet), maintain = false))
   }
 
   /** Compact the POSITIONAL DELETE FILES of the current snapshot
@@ -3679,35 +3652,28 @@ object SnapshotLog {
         .mapValues(_.map(p => byNorm(norm(p._2))).toSeq.distinct.sorted).toMap
     }
     val posSet = posFiles.toSet
+    // the rewire, on whatever head the commit lands on: positional files
+    // give way to the merged ranges holding each data file's rows, stacked
+    // vectors to their fold, equality files stay
+    def rewired(dels: Map[String, Seq[String]]) = dels.map { case (df, ds) =>
+      val folded = foldedDv.get(df)
+      val eq = ds.filterNot(d => posSet.contains(d) ||
+        (folded.isDefined && SnapshotDeletes.isVector(d)))
+      val hadPos = ds.exists(posSet.contains)
+      df -> (eq ++ folded.toSeq ++
+        (if (hadPos) mergedFor.getOrElse(df, Seq.empty) else Seq.empty))
+    }.filter(_._2.nonEmpty)
     // data files whose delete lists this rewrite rewires — the re-apply
-    // validation set (a concurrent delete on one of them would be lost)
+    // validation set (a concurrent delete on one of them would be lost).
+    // The replaced delete files stay on disk for time travel; expiry
+    // reclaims them once no surviving snapshot references them.
     val targeted = cur.dels.collect {
       case (df, ds) if ds.exists(posSet.contains) => df
     }.toSet ++ dvFold.keySet
-    try retryingCommit("rewriteDeleteFiles") { () =>
-      val (head, nextV) = headAndNext(spark, root)
-      val ts = if (head.version == cur.version) commitTsMs else {
-        validateReapply("rewriteDeleteFiles", cur, head, targeted)
-        math.max(commitTsMs, head.commitTsMs + 1)
-      }
-      val newDels = head.dels.map { case (df, ds) =>
-        val folded = foldedDv.get(df)
-        val eq = ds.filterNot(d => posSet.contains(d) ||
-          (folded.isDefined && SnapshotDeletes.isVector(d)))
-        val hadPos = ds.exists(posSet.contains)
-        df -> (eq ++ folded.toSeq ++
-          (if (hadPos) mergedFor.getOrElse(df, Seq.empty) else Seq.empty))
-      }.filter(_._2.nonEmpty)
-      commitManifest(fs, root, head.copy(version = nextV,
-        operation = "rewrite", commitTsMs = ts,
-        props = Map("rewrite" -> "position-delete-files"), dels = newDels,
-        parent = head.version))
-      nextV
-    } catch {
-      case e: IllegalStateException => fs.delete(delDir, true); throw e
-    }
-    // the replaced delete files stay on disk for time travel; expiry
-    // reclaims them once no surviving snapshot references them
+    commitChange(spark, root, Ref.Main, Some(cur), commitTsMs, Change(
+      "rewriteDeleteFiles", "rewrite", Map("rewrite" -> "position-delete-files"),
+      Seq(delDir), edit = Edit(targeted, h => h.copy(dels = rewired(h.dels))),
+      maintain = false))
   }
 
   /** COMMIT-TIME AUTOMATIC MAINTENANCE (the policy layer Iceberg leaves
@@ -3800,43 +3766,60 @@ object SnapshotLog {
   }
 
   /** Copy-on-write partial rewrite — the commit primitive behind DELETE:
-    * the TOUCHED files are replaced by `keep` (their surviving rows), the
-    * UNTOUCHED files are carried by reference (metadata only, stats and
-    * sizes preserved) — Iceberg's file-granular copy-on-write delete.
-    * Zero-row outputs are dropped from the manifest (and disk), so
-    * deleting a whole file's rows shrinks the table instead of leaving
-    * empty husks. Old snapshots still reference the replaced files until
-    * `expireSnapshots`. */
+    * the `touched` files of `cur` are replaced by `keep` (their surviving
+    * rows), the untouched files are carried by reference (metadata only,
+    * stats and sizes preserved) — Iceberg's file-granular copy-on-write
+    * delete. Zero-row outputs are dropped from the manifest (and disk),
+    * so deleting a whole file's rows shrinks the table instead of leaving
+    * empty husks. The replaced files' rows were recomputed into `keep`,
+    * so a concurrent writer touching them refuses re-apply. Old snapshots
+    * still reference the replaced files until `expireSnapshots`. */
   private[sources] def rewriteTouched(spark: SparkSession, root: String,
-      cur: Snapshot, untouched: Seq[String], keep: DataFrame,
-      operation: String, commitTsMs: Long, numFiles: Int): Int = {
+      cur: Snapshot, touched: Seq[String], keep: DataFrame,
+      commitTsMs: Long): Int = {
     require(cur.commitTsMs < commitTsMs,
       s"commitTsMs $commitTsMs must advance past the last snapshot")
-    val fs = fsFor(spark, new Path(root))
     val (dataDir, data) = stageData(spark, root,
-      keep.repartition(math.max(1, numFiles)), cur.schema, Map.empty,
+      keep.repartition(math.max(1, touched.size)), cur.schema, Map.empty,
       dropEmpty = true)
-    SnapshotNulls.record(spark, root, data.nulls)
-    // the files this copy-on-write REPLACES: their rows were recomputed
-    // into `keep`, so a concurrent writer touching them refuses re-apply
-    val replaced = cur.files.map(norm).toSet -- untouched.map(norm).toSet
-    try retryingCommit(s"rewriteTouched($operation)") { () =>
-      val (head, next) = headAndNext(spark, root)
-      val ts = if (head.version == cur.version) commitTsMs else {
-        validateReapply(s"rewriteTouched($operation)", cur, head, replaced)
-        math.max(commitTsMs, head.commitTsMs + 1)
-      }
-      val kept = withStaged(head.retain(f => !replaced.contains(f)), data)
-      val (fids, colIds, maxId) =
-        fidCarry(Some(head), cur.schema, kept.files, data.cols)
-      commitManifest(fs, root, kept.copy(version = next,
-        operation = operation, commitTsMs = ts, props = Map.empty,
-        fids = fids, colIds = colIds, maxId = maxId, parent = head.version))
-      next
-    } catch {
-      case e: IllegalStateException => fs.delete(dataDir, true); throw e
-    }
+    commitChange(spark, root, Ref.Main, Some(cur), commitTsMs, Change(
+      "rewriteTouched(delete)", "delete", Map.empty, Seq(dataDir),
+      tablePropsOrEmpty(spark, root), data,
+      edit = Edit.replacing(touched.map(norm).toSet), maintain = false))
   }
+
+  /** The DSv2 row-level writers' commit — SQL UPDATE / MERGE / DELETE as
+    * a copy-on-write replace ([[SnapshotReplaceBatchWrite]]) or a
+    * merge-on-read delta ([[SnapshotDeltaBatchWrite]]): the files the
+    * tasks wrote take the footer-walk half of staging (zero-row ones are
+    * dropped), `replaced` files (normalized) leave the head, `dels`
+    * attach to their data files. Spark planned the statement against
+    * `planned`, so any head that moved since refuses — the statement must
+    * re-run. */
+  private[sources] def commitRowLevel(spark: SparkSession, root: String,
+      planned: Snapshot, operation: String, props: Map[String, String],
+      schema: StructType, written: Seq[String], replaced: Set[String],
+      dels: Map[String, Seq[String]], cleanup: Seq[Path]): Unit = {
+    val fs = fsFor(spark, new Path(root))
+    val data = stageFiles(spark,
+      written.map(f => f -> fs.getFileStatus(new Path(f)).getLen), schema,
+      dropEmpty = true)
+    commitChange(spark, root, Ref.Main, Some(planned),
+      System.currentTimeMillis(), Change(operation, operation, props, cleanup,
+        tablePropsOrEmpty(spark, root), data, dels,
+        edit = Edit.replacing(replaced),
+        reapply = (_, head) => throw movedSincePlanned(operation, planned,
+          head.version),
+        maintain = false)): Unit
+  }
+
+  /** The refusal of a DSv2 row-level statement whose table moved to
+    * `headVersion` after Spark planned it against `planned`. */
+  private[sources] def movedSincePlanned(operation: String, planned: Snapshot,
+      headVersion: Int): IllegalStateException =
+    new IllegalStateException(s"SnapshotLog: concurrent commit (table at " +
+      s"v$headVersion, $operation planned against v${planned.version}) — " +
+      "retry the statement")
 
   /** Expire snapshots older than `keepFromVersion`: delete their
     * manifests, then delete every data file referenced ONLY by expired

@@ -237,9 +237,6 @@ private[sources] class SnapshotLogTable(root: String,
     val schema = cur.schema
     // same pruning as the scan (field-id stats rekey + blooms included)
     val touched = SnapshotLogScanBuilder.prune(cur, cur.files, filters, root)
-    val touchedSet = touched.map(SnapshotLog.norm).toSet
-    val untouched =
-      cur.files.filterNot(f => touchedSet.contains(SnapshotLog.norm(f)))
     if (touched.isEmpty) return // stats prove nothing matches: no-op
     val cond = filters.map(f => SnapshotStatsFilter.toColumn(f).getOrElse(
       throw new UnsupportedOperationException(
@@ -260,8 +257,8 @@ private[sources] class SnapshotLogTable(root: String,
         else SnapshotLog.applyDels(spark, rawTouched, touchedDels)
       }
     val keep = conformed.filter(not(coalesce(cond, lit(false))))
-    SnapshotLog.rewriteTouched(spark, root, cur, untouched, keep,
-      "delete", SnapshotLog.nextCommitTs(spark, root), touched.size): Unit
+    SnapshotLog.rewriteTouched(spark, root, cur, touched, keep,
+      SnapshotLog.nextCommitTs(spark, root)): Unit
   }
 
   /** INSERT INTO / INSERT OVERWRITE / CTAS-append through the V1

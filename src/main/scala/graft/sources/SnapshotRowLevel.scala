@@ -28,11 +28,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *  2. Spark computes the replacement rows and hands them to this
   *     operation's WRITE: each task writes one immutable parquet file
   *     (parquet-mr Group API — the write twin of [[SnapshotFileReader]]).
-  *  3. `commit` is one manifest publish: untouched files carried by
+  *  3. `commit` is one commit-kernel publish
+  *     ([[SnapshotLog.commitRowLevel]]): untouched files carried by
   *     reference (stats/sizes/partition tuples preserved), scanned files
   *     replaced by the new ones (footer-walk stats), zero-row outputs
   *     dropped. A concurrent commit between scan pin and publish surfaces
-  *     as a version conflict — never a lost update.
+  *     as a refusal — never a lost update.
   *
   * The simple-predicate DELETE still takes the cheaper `SupportsDelete`
   * metadata path; Spark routes only what that refuses (or UPDATE/MERGE)
@@ -192,54 +193,19 @@ private[sources] class SnapshotReplaceBatchWrite(root: String,
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new SnapshotReplaceWriterFactory(dataDir.toString, schema.json)
 
+  /** Zero-row outputs (a task that received no rows still opened a
+    * writer) are dropped — deleting a whole group's rows must shrink the
+    * table. Replaced files' rows were re-derived through the
+    * dels-applying scan, so their delete baggage folds; untouched files
+    * keep theirs. The new files get bloom coverage (a DML-heavy table
+    * must not bleed point-lookup pruning file by file until compaction). */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    val fs = SnapshotLog.fsFor(spark, new Path(root))
-    val conf = spark.sessionState.newHadoopConf()
     val written = messages.collect {
       case SnapshotReplaceMessage(path) if path != null => path
-    }.toSeq.sorted
-    // ONE footer walk over every written file; zero-row outputs (a task
-    // that received no rows still opened a writer) are dropped —
-    // deleting a whole group's rows must shrink the table
-    val (allStats, allCols, allRows, allNulls) =
-      SnapshotLog.footerMeta(conf, written, schema)
-    val (newFiles, husks) =
-      written.partition(f => allRows.getOrElse(SnapshotLog.norm(f), 0L) > 0)
-    husks.foreach(f => fs.delete(new Path(f), false))
-    val live = newFiles.map(SnapshotLog.norm).toSet
-    def liveOf[V](m: Map[String, V]) = m.view.filterKeys(live).toMap
-
-    // single atomic read: head + version slot + ts (TOCTOU guard)
-    val (cur, nextV, nextTs) = SnapshotLog.headNextTs(spark, root)
-    if (cur.version != snap.version) {
-      fs.delete(dataDir, true)
-      throw new IllegalStateException(
-        s"SnapshotLog: concurrent commit (table at v${cur.version}, " +
-          s"$operation planned against v${snap.version}) — retry the statement")
-    }
-    val replaced = scannedFiles().map(SnapshotLog.norm).toSet
-    val newSizes = newFiles
-      .map(f => SnapshotLog.norm(f) -> fs.getFileStatus(new Path(f)).getLen).toMap
-    // rewritten files regenerate bloom coverage (a DML-heavy table must
-    // not bleed point-lookup pruning file by file until compaction)
-    SnapshotBlooms.writeBothSidecars(spark, root, newFiles, schema, liveOf(allRows))
-    SnapshotNulls.record(spark, root, liveOf(allNulls))
-    // replaced files' rows were re-derived through the dels-applying
-    // scan, so their delete baggage folds; untouched files keep theirs
-    val kept = cur.retain(f => !replaced.contains(f))
-    val (fids, colIds, maxId) = SnapshotLog.fidCarry(Some(cur), schema,
-      kept.files ++ newFiles, liveOf(allCols))
-    try {
-      SnapshotLog.commitManifest(fs, root, kept.copy(version = nextV,
-        operation = operation, commitTsMs = nextTs,
-        files = kept.files ++ newFiles, stats = kept.stats ++ liveOf(allStats),
-        sizes = kept.sizes ++ newSizes, props = SnapshotLog.takePendingCommitProps(),
-        cols = kept.cols ++ liveOf(allCols), rows = kept.rows ++ liveOf(allRows),
-        fids = fids, colIds = colIds, maxId = maxId, parent = cur.version))
-    } catch {
-      case e: IllegalStateException => fs.delete(dataDir, true); throw e
-    }
+    }.toSeq
+    SnapshotLog.commitRowLevel(SparkSession.active, root, snap, operation,
+      SnapshotLog.takePendingCommitProps(), schema, written,
+      scannedFiles().map(SnapshotLog.norm).toSet, Map.empty, Seq(dataDir))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

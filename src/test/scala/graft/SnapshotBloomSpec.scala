@@ -220,7 +220,11 @@ class SnapshotBloomSpec extends AnyFunSuite {
 
   test("merge-on-read update and upsert index their new files: nothing " +
        "is left for rebuildFileIndexes to backfill") {
-    val root = freshRoot("mor_index")
+    // rooted inside the snap-catalog warehouse so the copy-on-write step
+    // can run as real SQL (DELETE FROM snap.bloom_mor_index.t ...)
+    val root = "/tmp/graft_snap_warehouse/bloom_mor_index/t"
+    new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+      .delete(new Path(root), true)
     def rows(lo: Long, hi: Long) = spark.range(lo, hi)
       .selectExpr("md5(cast(id AS string)) AS k", "id AS v")
     SnapshotLog.commit(rows(0, 200), root, overwrite = true, 100L, 2)
@@ -235,6 +239,14 @@ class SnapshotBloomSpec extends AnyFunSuite {
     assert(SnapshotLog.rebuildFileIndexes(spark, root) === ((0, 0)),
       "the upsert's new file must carry its bloom")
     assert(spark.read.format("snapshotlog").load(root).count() === 250)
+    // copy-on-write DELETE (no write.delete.mode): the stat-touched
+    // original files are rewritten without rows 0..19 (3 and 13 moved to
+    // the update's fragment)
+    spark.sql("DELETE FROM snap.bloom_mor_index.t WHERE v < 20")
+    assert(SnapshotLog.snapshots(spark, root).last.operation === "delete")
+    assert(SnapshotLog.rebuildFileIndexes(spark, root) === ((0, 0)),
+      "the copy-on-write delete's rewritten files must carry their bloom")
+    assert(spark.read.format("snapshotlog").load(root).count() === 232)
   }
 
   test(".blooms metadata table inventories live covered (file, column) pairs") {

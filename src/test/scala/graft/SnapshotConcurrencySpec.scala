@@ -245,4 +245,45 @@ class SnapshotConcurrencySpec extends AnyFunSuite {
       assert(t.count() >= 10) // the table stays consistent and readable
     }
   }
+
+  test("SQL UPDATE (copy-on-write) and MERGE (merge-on-read delta) racing " +
+       "an append: the statement lands with the appended rows intact, or " +
+       "refuses — never a lost append") {
+    val wh = "/tmp/graft_snap_warehouse"
+    Seq(
+      ("conc_rl_update", Map.empty[String, String],
+        "UPDATE snap.conc_rl_update.t SET v = v + 10000 WHERE k < 50"),
+      ("conc_rl_merge", Map("write.merge.mode" -> "merge-on-read"),
+        """MERGE INTO snap.conc_rl_merge.t AS t
+          |USING (SELECT id AS k, id + 10000 AS v FROM range(0, 50)) AS s
+          |ON t.k = s.k WHEN MATCHED THEN UPDATE SET v = s.v""".stripMargin)
+    ).foreach { case (ns, props, stmt) =>
+      val root = s"$wh/$ns/t"
+      new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+        .delete(new Path(root), true)
+      SnapshotLog.commit(spark.range(0, 100).selectExpr("id AS k", "id AS v"),
+        root, overwrite = true, 100L)
+      if (props.nonEmpty) SnapshotLog.setTableProps(spark, root, props)
+      val Seq(appended, statement) = race(Seq(
+        () => SnapshotLog.commit(
+          spark.range(1000, 1050).selectExpr("id AS k", "id AS v"),
+          root, overwrite = false, 200L),
+        () => spark.sql(stmt).collect().length))
+      assert(appended.isRight, s"$ns: the append must land: $appended")
+      val t = spark.read.format("snapshotlog").load(root)
+      assert(t.filter(col("k") >= 1000 && col("v") === col("k")).count() === 50,
+        s"$ns: the appended rows must survive untouched")
+      assert(t.count() === 150)
+      statement match {
+        case Right(_) =>
+          assert(t.filter(col("k") < 50 && col("v") === col("k") + 10000)
+            .count() === 50, s"$ns: the statement landed")
+        case Left(e) =>
+          assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+            .exists(_.isInstanceOf[IllegalStateException]),
+            s"$ns: a refusal must be an IllegalStateException: $e")
+          assert(t.filter(col("v") === col("k")).count() === 150)
+      }
+    }
+  }
 }

@@ -291,4 +291,33 @@ class SnapshotWapMergeSpec extends AnyFunSuite {
     assert(orphanFiles.forall(f => !fs.exists(new Path(f))),
       "expiry below the orphan must reclaim its staged files")
   }
+
+  test("ALTER and compaction on main stamp past a newer branch snapshot: " +
+       "commitTsMs stays strictly monotone per table") {
+    val root = fresh("monotone")
+    SnapshotLog.commit(spark.range(0, 100).selectExpr("id AS k", "id AS v"),
+      root, overwrite = true, 100L)
+    SnapshotLog.createBranch(spark, root, "audit", 1)
+    def branchAt(ts: Long): Unit = SnapshotLog.commit(
+      spark.range(100, 110).selectExpr("id AS k", "id AS v"),
+      root, overwrite = false, ts, branch = Some("audit")): Unit
+    // each main commit asks for a ts past main's head but behind the
+    // branch's newest snapshot
+    branchAt(1000L)
+    SnapshotLog.alterSchema(spark, root,
+      SnapshotLog.snapshots(spark, root).head.schema.add("x", "string"), 500L)
+    branchAt(3000L)
+    SnapshotLog.renameColumn(spark, root, "v", "w", 2000L)
+    branchAt(5000L)
+    SnapshotLog.rewriteDataFiles(spark, root, 4000L)
+    val snaps = SnapshotLog.snapshots(spark, root)
+    assert(snaps.filter(_.branch.isEmpty).map(_.operation) ===
+      Seq("overwrite", "alter", "alter", "rewrite"))
+    snaps.sliding(2).foreach { case Seq(a, b) =>
+      assert(b.commitTsMs > a.commitTsMs,
+        s"v${b.version} (${b.operation}) at ${b.commitTsMs} must follow " +
+          s"v${a.version} at ${a.commitTsMs}")
+    }
+    assert(SnapshotLog.read(spark, root).count() === 100)
+  }
 }
