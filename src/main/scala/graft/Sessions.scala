@@ -50,6 +50,18 @@ object Sessions {
       // is the floor of Spark's default; a larger record still gets a page
       // of its own size.
       .config("spark.buffer.pageSize", "1m")
+      // `file:` paths go through NioLocalFileSystem, which sets and reads
+      // POSIX permissions with java.nio. With no libhadoop installed,
+      // Hadoop's stock local file system forks `chmod` for each file it
+      // creates (data and .crc) and each directory level it makes, and
+      // `ls -ld` for each listed entry: 192 process starts per
+      // table_io_sf001 pass, 4-9 ms each on 4 cores. Without them that
+      // workload's query_p50_s went from 0.87 s to 0.68 s (medians of 10
+      // alternating pairs, all 10 won). Hadoop caches file systems by
+      // scheme and user, so `new Configuration()` readers on executors get
+      // this one as well.
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.sources.NioLocalFileSystem].getName)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       // Historical fixture generations shipped events.ts as TIMESTAMP(NANOS),

@@ -4,6 +4,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import java.util.concurrent.ThreadLocalRandom
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -209,6 +211,15 @@ object SnapshotLog {
 
   private[sources] def fsFor(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sessionState.newHadoopConf())
+
+  /** Open a parquet file for its footer under the caller's `conf`.
+    * `ParquetFileReader.open(InputFile)` alone builds its read options on
+    * a fresh `Configuration`, which parses Hadoop's default XML again on
+    * every open (3-4 ms each). The record filter stays off, as on that
+    * path: these opens read footers, not rows. */
+  private[sources] def openFooter(path: Path, conf: Configuration): ParquetFileReader =
+    ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
+      HadoopReadOptions.builder(conf).withRecordFilter(FilterCompat.NOOP).build())
 
   private def logDir(root: String) = new Path(root, "_log")
 
@@ -617,7 +628,7 @@ object SnapshotLog {
     val rowsAcc = scala.collection.mutable.Map[String, Long]()
     val nullsAcc = scala.collection.mutable.Map[String, Map[String, Long]]()
     val stats = files.map { f =>
-      val rdr = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f), conf))
+      val rdr = openFooter(new Path(f), conf)
       try {
         colsAcc(norm(f)) = rdr.getFooter.getFileMetaData.getSchema
           .getFields.asScala.map(_.getName).toSeq
@@ -822,7 +833,7 @@ object SnapshotLog {
       // Refuse until compaction folds the deletes away.
       val conf = spark.sessionState.newHadoopConf()
       cur.dels.values.flatten.toSeq.distinct.foreach { df =>
-        val rdr = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(df), conf))
+        val rdr = openFooter(new Path(df), conf)
         val fields =
           try rdr.getFooter.getFileMetaData.getSchema.getFields.asScala.map(_.getName)
           finally rdr.close()
@@ -3501,6 +3512,7 @@ object SnapshotLog {
       s"commitTsMs $commitTsMs must advance past the last snapshot")
 
     val schema = cur.schema
+    val tblProps = tablePropsOrEmpty(spark, root)
     val numOut = math.max(1L,
       (small.map(sizeOf).sum + targetBytes - 1) / targetBytes).toInt
     // the rewrite conforms every output file to the current table schema:
@@ -3523,7 +3535,7 @@ object SnapshotLog {
     val (dataDir, data) =
       if (cur.spec.nonEmpty) {
         val (shaped, pNames) = partitionShaped(input, cur.spec, clusterBy)
-        stageData(spark, root, shaped, schema, Map.empty, pNames)
+        stageData(spark, root, shaped, schema, tblProps, pNames)
       } else {
         import org.apache.spark.sql.functions.col
         val shaped =
@@ -3550,7 +3562,7 @@ object SnapshotLog {
             input.repartitionByRange(numOut, keys: _*)
               .sortWithinPartitions(keys: _*)
           }
-        stageData(spark, root, shaped, schema, Map.empty)
+        stageData(spark, root, shaped, schema, tblProps)
       }
     // optimistic re-apply: a concurrent append carries through (the new
     // head's untouched files are taken by reference); a concurrent
@@ -3567,7 +3579,7 @@ object SnapshotLog {
     // well as the Exchange).
     commitChange(spark, root, Ref.Main, Some(cur), commitTsMs, Change(
       "rewriteDataFiles", "rewrite", Map.empty, Seq(dataDir),
-      tablePropsOrEmpty(spark, root), data, sortOn = clusterBy,
+      tblProps, data, sortOn = clusterBy,
       edit = Edit.replacing(small.map(norm).toSet), maintain = false))
   }
 
@@ -3779,12 +3791,13 @@ object SnapshotLog {
       commitTsMs: Long): Int = {
     require(cur.commitTsMs < commitTsMs,
       s"commitTsMs $commitTsMs must advance past the last snapshot")
+    val tblProps = tablePropsOrEmpty(spark, root)
     val (dataDir, data) = stageData(spark, root,
-      keep.repartition(math.max(1, touched.size)), cur.schema, Map.empty,
+      keep.repartition(math.max(1, touched.size)), cur.schema, tblProps,
       dropEmpty = true)
     commitChange(spark, root, Ref.Main, Some(cur), commitTsMs, Change(
       "rewriteTouched(delete)", "delete", Map.empty, Seq(dataDir),
-      tablePropsOrEmpty(spark, root), data,
+      tblProps, data,
       edit = Edit.replacing(touched.map(norm).toSet), maintain = false))
   }
 

@@ -7,8 +7,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.schema.{MessageType, PrimitiveType}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -1720,8 +1719,7 @@ private[sources] object SnapshotDeletes {
   def schemaOf(df: String, conf: Configuration): Seq[String] =
     if (isVector(df)) Seq(VectorSentinel)
     else schemaCache.computeIfAbsent(SnapshotLog.norm(df), _ => {
-      val r = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(df), conf))
+      val r = SnapshotLog.openFooter(new Path(df), conf)
       try r.getFooter.getFileMetaData.getSchema.getFields.asScala
         .map(_.getName).toSeq
       finally r.close()
@@ -1899,8 +1897,7 @@ private[sources] class SnapshotVectorReader(file: String, required: StructType,
   private val fileFields: Set[String] =
     if (eqDeleteFiles.isEmpty) Set.empty
     else {
-      val r = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(file), conf))
+      val r = SnapshotLog.openFooter(new Path(file), conf)
       try r.getFooter.getFileMetaData.getSchema.getFields.asScala
         .map(_.getName).toSet
       finally r.close()
@@ -1935,8 +1932,7 @@ private[sources] class SnapshotVectorReader(file: String, required: StructType,
   // file-level coordinates; whole-file reads pay no footer open here
   private var rowsSeen: Long = range match {
     case Some((s, _)) if posDeleteFiles.nonEmpty =>
-      val r = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(file), conf))
+      val r = SnapshotLog.openFooter(new Path(file), conf)
       try r.getFooter.getBlocks.asScala
         .filter(b => b.getStartingPos + b.getCompressedSize / 2 < s)
         .map(_.getRowCount).sum
@@ -2178,7 +2174,7 @@ private[sources] class SnapshotFileReader(file: String, required: StructType,
   private var eqSets: Seq[(Array[Int], java.util.HashSet[Vector[Any]])] = Nil
   private var ord0 = 0L // ordinal of the range's first row within the FILE
   locally {
-    val pfr = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
+    val pfr = SnapshotLog.openFooter(path, conf)
     val (fileSchema, rowCount) =
       try {
         val blocks = pfr.getFooter.getBlocks.asScala

@@ -277,17 +277,48 @@ class SnapshotBloomSpec extends AnyFunSuite {
     SnapshotLog.setTableProps(spark, root, Map("write.bloom.columns" -> "k"))
     SnapshotLog.commit(spark.range(10, 2000).selectExpr(
       "md5(cast(id AS string)) AS k", "id AS v"), root, overwrite = false, 200L, 1)
-    val conf = spark.sessionState.newHadoopConf()
     val snaps = SnapshotLog.snapshots(spark, root)
-    def bloomOffsets(files: Seq[String]): Seq[Long] = files.flatMap { f =>
+    // v1 (pre-property): no native bloom; v2: native bloom present
+    assert(bloomOffsets(snaps.head.files, "k").forall(_ < 0))
+    assert(bloomOffsets(snaps.last.files.diff(snaps.head.files), "k").forall(_ >= 0))
+  }
+
+  /** Footer bloom-filter offset of column `c` in every row group of
+    * `files` (-1: no native bloom). */
+  private def bloomOffsets(files: Seq[String], c: String): Seq[Long] = {
+    val conf = spark.sessionState.newHadoopConf()
+    files.flatMap { f =>
       val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(f), conf))
       try rdr.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala
-        .filter(_.getPath.toDotString == "k").map(_.getBloomFilterOffset)).toSeq
+        .filter(_.getPath.toDotString == c).map(_.getBloomFilterOffset)).toSeq
       finally rdr.close()
     }
-    // v1 (pre-property): no native bloom; v2: native bloom present
-    assert(bloomOffsets(snaps.head.files).forall(_ < 0))
-    assert(bloomOffsets(snaps.last.files.diff(snaps.head.files)).forall(_ >= 0))
+  }
+
+  test("compaction and copy-on-write DELETE keep the parquet-native blooms") {
+    // inside the snap-catalog warehouse so the DELETE runs as real SQL
+    val root = "/tmp/graft_snap_warehouse/bloom_native_rewrite/t"
+    new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+      .delete(new Path(root), true)
+    def rows(lo: Long, hi: Long) = spark.range(lo, hi)
+      .selectExpr("md5(cast(id AS string)) AS s", "id AS v")
+    SnapshotLog.commit(rows(0, 500), root, overwrite = true, 100L, 1)
+    SnapshotLog.setTableProps(spark, root, Map("write.bloom.columns" -> "s"))
+    SnapshotLog.commit(rows(500, 1000), root, overwrite = false, 200L, 1)
+    val before = SnapshotLog.snapshots(spark, root).last
+    SnapshotLog.rewriteDataFiles(spark, root, 300L)
+    val compacted = SnapshotLog.snapshots(spark, root).last
+    assert(compacted.operation === "rewrite")
+    val outs = compacted.files.diff(before.files)
+    assert(outs.nonEmpty)
+    assert(bloomOffsets(outs, "s").forall(_ >= 0), "compacted file lost its bloom")
+    spark.sql("DELETE FROM snap.bloom_native_rewrite.t WHERE v < 20")
+    val deleted = SnapshotLog.snapshots(spark, root).last
+    assert(deleted.operation === "delete")
+    val rewritten = deleted.files.diff(compacted.files)
+    assert(rewritten.nonEmpty)
+    assert(bloomOffsets(rewritten, "s").forall(_ >= 0), "rewritten file lost its bloom")
+    assert(spark.read.format("snapshotlog").load(root).count() === 980)
   }
 }
