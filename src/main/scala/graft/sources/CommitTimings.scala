@@ -6,7 +6,7 @@ import java.util.concurrent.atomic.LongAdder
 /** Opt-in phase timing for the snapshot commit pipeline (r22, guide §1 —
   * measure before touching the most safety-critical code in the repo).
   * Disabled (one static boolean test, zero allocation) unless the JVM
-  * starts with `-Dgraft.commit.timings=true`; the [[graft.tools.CommitProbe]]
+  * starts with `-Dgraft.commit.timings=true`; the [[graft.CommitProbe]]
   * main enables it and prints the per-phase breakdown over real gates.
   * Thread-safe: LongAdder per phase (the commit path may time phases from
   * sidecar/footer worker threads). */

@@ -1,14 +1,10 @@
 package graft.sources
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
 import org.apache.spark.sql.sources.{And, EqualNullSafe, EqualTo, Filter, In, Or}
 import org.apache.spark.sql.types._
 import org.apache.spark.util.sketch.BloomFilter
-
-import scala.jdk.CollectionConverters._
 
 /** PER-FILE BLOOM FILTERS for point-lookup file skipping — the Iceberg
   * Puffin-blob / reference-engine answer (reference bloom machinery:
@@ -42,7 +38,8 @@ import scala.jdk.CollectionConverters._
   *    file (conservative).
   *  - Consulted in [[SnapshotLogScanBuilder.prune]] AFTER min/max pruning,
   *    only for EqualTo / EqualNullSafe / In probes on bloom columns.
-  *    Sidecars parse once per JVM (immutable ⇒ path-keyed cache).
+  *    Sidecars are immutable, so each parses once per JVM
+  *    ([[SidecarStore]] caches parses per root).
   *  - The same columns also get PARQUET-NATIVE bloom filters written into
   *    the data files (`parquet.bloom.filter.enabled#col`): at the 10⁶-file
   *    decade, where driver-side bloom metadata would not fit one JVM, the
@@ -55,7 +52,6 @@ import scala.jdk.CollectionConverters._
   */
 private[graft] object SnapshotBlooms {
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-  private val om = new ObjectMapper()
 
   val ColsProp = "write.bloom.columns"
   val MaxBytesProp = "write.bloom.max-bytes"
@@ -72,8 +68,6 @@ private[graft] object SnapshotBlooms {
     * [[writeSidecar]] executes (exposed for the equivalence spec). */
   def batchCountFor(nFiles: Int, batch: Int): Int =
     if (nFiles <= 0) 0 else (nFiles + batch - 1) / batch
-
-  private def bloomsDir(root: String) = new Path(root, "blooms")
 
   /** Bloom-eligible columns of this commit: the property's names that
     * exist in the written schema with a supported type. */
@@ -97,80 +91,49 @@ private[graft] object SnapshotBlooms {
       s"parquet.bloom.filter.enabled#${f.name}" -> "true").toMap
 
   /** Compute per-file blooms for `newFiles` and publish one immutable
-    * sidecar. Call ONCE per commit, outside the retry loop (uuid-named
-    * data files never collide; a lost commit race leaves an orphan
-    * sidecar that expiry reclaims). NonFatal-guarded: bloom metadata is
-    * an accelerator, a failure must never fail the commit. */
+    * sidecar per batch. Call ONCE per commit, outside the retry loop
+    * (uuid-named data files never collide; a lost commit race leaves an
+    * orphan sidecar that expiry reclaims). NonFatal-guarded: bloom
+    * metadata is an accelerator, a failure must never fail the commit. */
   def writeSidecar(spark: SparkSession, root: String, newFiles: Seq[String],
                    schema: StructType, rowsByFile: Map[String, Long],
-                   propsOpt: Option[Map[String, String]] = None): Unit = CommitTimings.time("bloomSidecar") {
-    val props = propsOpt.getOrElse(
-      try SnapshotLog.tableProps(spark, root)
-      catch { case scala.util.control.NonFatal(_) => Map.empty[String, String] })
+                   props: Map[String, String]): Unit = CommitTimings.time("bloomSidecar") {
     val cols = bloomColumns(props, schema)
     if (cols.isEmpty || newFiles.isEmpty) return
     try {
       val maxBytes = props.get(MaxBytesProp).flatMap(v =>
         scala.util.Try(v.toLong).toOption).getOrElse(DefaultMaxBytes)
-      val batchSize = math.max(1, props.get(BuildBatchProp).flatMap(v =>
-        scala.util.Try(v.toInt).toOption).getOrElse(DefaultBuildBatch))
       // Spark's BloomFilterAggregate over xxhash64(col): per-file grouping
       // via the _metadata file path — one column-pruned scan of ONLY the
-      // new files. Registered under a uuid name (collision-proof, dropped
-      // after use — same discipline as ANALYZE's interval-NDV pass).
-      val fnName = "__graft_bloom_" +
-        java.util.UUID.randomUUID().toString.replace("-", "").take(16)
-      val fnId = org.apache.spark.sql.catalyst.FunctionIdentifier(fnName)
-      spark.sessionState.functionRegistry.registerFunction(
-        fnId,
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-          fnName),
-        (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          new org.apache.spark.sql.catalyst.expressions.aggregate
-            .BloomFilterAggregate(args.head, args(1), args(2)))
-      // BOUNDED BATCHES: a 100k-file bulk import with 3 bloom columns
-      // would otherwise concentrate ~tens of GB of bloom bytes in one
-      // driver collect — per-batch passes cap residency at
-      // batch × cols × max-bytes, each batch publishing its own sidecar
-      // (the read side unions sidecars, so batching is invisible there)
-      try newFiles.grouped(batchSize).foreach { batch =>
-        // size from the LARGEST file in the batch (one aggregate literal
-        // serves the batch; uniform staged writes keep files near-equal)
-        val maxRows = math.max(1L,
-          batch.map(f => rowsByFile.getOrElse(SnapshotLog.norm(f), 0L)).max)
-        val numBits = math.min(math.max(64L, maxRows * 10L), maxBytes * 8L)
-        import org.apache.spark.sql.functions.{col, expr, regexp_replace}
-        val src = spark.read.schema(schema).parquet(batch: _*)
-          .select((regexp_replace(col("_metadata.file_path"), "^file:/*", "/")
-            .as("__f")) +: cols.map(f => col(f.name)): _*)
-        val aggs = cols.map(f => expr(
-          s"$fnName(xxhash64(`${f.name}`), ${maxRows}L, ${numBits}L)")
-          .as(s"__b_${f.name}"))
-        val rows = src.groupBy(col("__f")).agg(aggs.head, aggs.tail: _*)
-          .collect()
-        val node = om.createObjectNode()
-        val colsArr = node.putArray("cols")
-        cols.foreach(f => colsArr.add(f.name))
-        node.put("numBits", numBits)
-        val filesNode = node.putObject("files")
-        rows.foreach { r =>
-          val fNode = filesNode.putObject(SnapshotLog.norm(r.getString(0)))
-          cols.zipWithIndex.foreach { case (f, i) =>
-            val bytes = r.getAs[Array[Byte]](s"__b_${f.name}")
-            if (bytes != null)
-              fNode.put(f.name,
-                java.util.Base64.getEncoder.encodeToString(bytes)): Unit
+      // new files
+      SnapshotSidecars.inBloomBatches(spark, "bloom", newFiles,
+        SnapshotSidecars.batchSize(props, BuildBatchProp, DefaultBuildBatch)) {
+        (fnName, batch) =>
+          // size from the LARGEST file in the batch (one aggregate literal
+          // serves the batch; uniform staged writes keep files near-equal)
+          val maxRows = math.max(1L,
+            batch.map(f => rowsByFile.getOrElse(SnapshotLog.norm(f), 0L)).max)
+          val numBits = math.min(math.max(64L, maxRows * 10L), maxBytes * 8L)
+          import org.apache.spark.sql.functions.{col, expr, regexp_replace}
+          val src = spark.read.schema(schema).parquet(batch: _*)
+            .select((regexp_replace(col("_metadata.file_path"), "^file:/*", "/")
+              .as("__f")) +: cols.map(f => col(f.name)): _*)
+          val aggs = cols.map(f => expr(
+            s"$fnName(xxhash64(`${f.name}`), ${maxRows}L, ${numBits}L)")
+            .as(s"__b_${f.name}"))
+          val rows = src.groupBy(col("__f")).agg(aggs.head, aggs.tail: _*)
+            .collect()
+          val node = SnapshotSidecars.om.createObjectNode()
+          val colsArr = node.putArray("cols")
+          cols.foreach(f => colsArr.add(f.name))
+          node.put("numBits", numBits)
+          val filesNode = node.putObject("files")
+          rows.foreach { r =>
+            cols.foreach(f => SnapshotSidecars.putBloom(filesNode,
+              r.getString(0), f.name, r.getAs[Array[Byte]](s"__b_${f.name}")))
           }
-        }
-        val dir = bloomsDir(root)
-        val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-        fs.mkdirs(dir)
-        val dest = new Path(dir,
-          "b-" + java.util.UUID.randomUUID().toString.take(12) + ".json")
-        val out = fs.create(dest, false)
-        try out.write(om.writeValueAsBytes(node)) finally out.close()
-      } finally spark.sessionState.functionRegistry.dropFunction(fnId)
+          store.publish(spark, root, node)
+      }
     } catch {
       case scala.util.control.NonFatal(e) =>
         log.warn(s"snapshotlog: bloom sidecar write failed at $root " +
@@ -180,89 +143,14 @@ private[graft] object SnapshotBlooms {
 
   // ---- read side ----
 
-  /** Parsed sidecar: column -> (normFile -> bloom). Sidecars are
-    * immutable (uuid-named, written once) — cache parses per JVM. */
-  private val sidecarCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, Map[String, BloomFilter]]]()
-
-  private def parseSidecar(fs: FileSystem, p: Path)
-      : Map[String, Map[String, BloomFilter]] = {
-    val key = p.toString
-    val hit = sidecarCache.get(key)
-    if (hit != null) return hit
-    val parsed: Map[String, Map[String, BloomFilter]] =
-      try {
-        val in = fs.open(p)
-        val bytes = try {
-          val len = fs.getFileStatus(p).getLen.toInt
-          val buf = new Array[Byte](len)
-          in.readFully(0, buf); buf
-        } finally in.close()
-        val node = om.readTree(bytes)
-        val cols = node.get("cols").elements().asScala.map(_.asText()).toSeq
-        val acc = scala.collection.mutable.Map[String, scala.collection.mutable.Map[String, BloomFilter]]()
-        cols.foreach(c => acc(c) = scala.collection.mutable.Map.empty)
-        node.get("files").fields().asScala.foreach { fe =>
-          val file = fe.getKey
-          fe.getValue.fields().asScala.foreach { ce =>
-            val bf = BloomFilter.readFrom(new java.io.ByteArrayInputStream(
-              java.util.Base64.getDecoder.decode(ce.getValue.asText())))
-            acc.getOrElseUpdate(ce.getKey,
-              scala.collection.mutable.Map.empty)(file) = bf
-          }
-        }
-        acc.view.mapValues(_.toMap).toMap
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          log.warn(s"snapshotlog: unreadable bloom sidecar $p (ignored): $e")
-          Map.empty
-      }
-    sidecarCache.put(key, parsed)
-    parsed
-  }
-
-  /** Merged-view cache: per root, the union of all sidecars keyed by the
-    * exact sidecar LISTING — a new commit's sidecar (or an expiry) changes
-    * the listing and rebuilds; a steady-state table re-merges nothing, so
-    * a 10^4-sidecar 100-TB table pays one dir listing per plan, not an
-    * O(total entries) map union. */
-  private val mergedCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Map[String, Map[String, BloomFilter]])]()
+  private[graft] val store = new SidecarStore[Map[String, BloomFilter]](
+    "blooms", "b-", "bloom", SnapshotSidecars.readBlooms, _ ++ _)
 
   /** All bloom entries at `root`, merged across sidecars:
     * column -> (normFile -> bloom). Empty when the feature is unused
     * (one FS existence probe — the only cost a bloom-free table pays). */
-  def bloomsAt(root: String): Map[String, Map[String, BloomFilter]] = {
-    if (root.isEmpty) return Map.empty
-    try {
-      val dir = bloomsDir(root)
-      val conf = try SparkSession.active.sessionState.newHadoopConf()
-                 catch { case scala.util.control.NonFatal(_) =>
-                   new org.apache.hadoop.conf.Configuration() }
-      val fs = dir.getFileSystem(conf)
-      if (!fs.exists(dir)) return Map.empty
-      val sidecars = fs.listStatus(dir)
-        .filter(s => s.getPath.getName.startsWith("b-") &&
-          s.getPath.getName.endsWith(".json"))
-        .map(_.getPath).sortBy(_.getName).toSeq
-      if (sidecars.isEmpty) return Map.empty
-      val listKey = sidecars.map(_.getName).mkString("|")
-      val hit = mergedCache.get(root)
-      if (hit != null && hit._1 == listKey) return hit._2
-      val merged = sidecars.map(parseSidecar(fs, _))
-        .reduce { (a, b) =>
-          (a.keySet ++ b.keySet).map(c =>
-            c -> (a.getOrElse(c, Map.empty) ++ b.getOrElse(c, Map.empty))).toMap
-        }
-      if (mergedCache.size > 1024) mergedCache.clear()
-      mergedCache.put(root, (listKey, merged))
-      merged
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        log.warn(s"snapshotlog: bloom lookup failed at $root (ignored): $e")
-        Map.empty
-    }
-  }
+  def bloomsAt(root: String): Map[String, Map[String, BloomFilter]] =
+    store.at(root)
 
   /** The probe hash for value `v` of column type `dt`: XxHash64 over the
     * Catalyst literal — bit-identical to the build side's `xxhash64(col)`
@@ -299,80 +187,5 @@ private[graft] object SnapshotBlooms {
         else vs.exists(v => v == null || probe(a, v))
       case _ => true
     }
-  }
-
-  /** Build the value-bloom AND ngram sidecars for one commit's new files,
-    * CONCURRENTLY when both features are armed (r22, guide §2.6 — overlap
-    * independent jobs): the two builds are independent column-pruned Spark
-    * jobs over the same files reading DIFFERENT columns; serialized, each
-    * job's tail leaves the executors idle while the other waits. Two
-    * driver threads let the scheduler back-fill — same bytes, same
-    * sidecars, lower wall. Table props are read ONCE (here, unless the
-    * caller already holds them as `propsOpt`) and passed down. Tables with
-    * neither (the overwhelmingly common commit) return at once; tables
-    * with one feature run it inline — no thread is spawned unless both
-    * fire. Sidecar bytes are unchanged in every case. */
-  def writeBothSidecars(spark: SparkSession, root: String,
-                        newFiles: Seq[String], schema: StructType,
-                        rowsByFile: Map[String, Long],
-                        propsOpt: Option[Map[String, String]] = None): Unit = {
-    val props = propsOpt.getOrElse(
-      try SnapshotLog.tableProps(spark, root)
-      catch { case scala.util.control.NonFatal(_) => Map.empty[String, String] })
-    val doBloom = newFiles.nonEmpty && bloomColumns(props, schema).nonEmpty
-    val doNgram = newFiles.nonEmpty &&
-      SnapshotNgramBlooms.ngramColumns(props, schema).nonEmpty
-    if (doBloom && doNgram) {
-      val bloomT = new Thread(() =>
-        writeSidecar(spark, root, newFiles, schema, rowsByFile, Some(props)),
-        "graft-bloom-sidecar")
-      bloomT.setDaemon(true)
-      bloomT.start()
-      try SnapshotNgramBlooms.writeSidecar(spark, root, newFiles, schema,
-        Some(props))
-      finally bloomT.join()
-    } else if (doBloom)
-      writeSidecar(spark, root, newFiles, schema, rowsByFile, Some(props))
-    else if (doNgram)
-      SnapshotNgramBlooms.writeSidecar(spark, root, newFiles, schema,
-        Some(props))
-  }
-
-  /** Reclaim sidecars whose files are ALL provably dead: every file
-    * appears in `knownDead` (files of the snapshots being expired) and
-    * none is live. "Unknown" files keep the sidecar — they may belong to
-    * an IN-FLIGHT commit whose sidecar is written before its manifest
-    * publishes (reclaiming those would silently shed the new commit's
-    * bloom coverage). Returns the number deleted. */
-  def expireSidecars(spark: SparkSession, root: String,
-                     liveFiles: Set[String],
-                     knownDead: Set[String]): Int = {
-    try {
-      val dir = bloomsDir(root)
-      val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(dir)) return 0
-      var n = 0
-      fs.listStatus(dir)
-        .filter(s => s.getPath.getName.startsWith("b-") &&
-          s.getPath.getName.endsWith(".json"))
-        .foreach { s =>
-          val files = try {
-            om.readTree({
-              val in = fs.open(s.getPath)
-              try {
-                val buf = new Array[Byte](s.getLen.toInt)
-                in.readFully(0, buf); buf
-              } finally in.close()
-            }).get("files").fieldNames().asScala.toSeq
-          } catch { case scala.util.control.NonFatal(_) => Seq.empty[String] }
-          if (files.nonEmpty && !files.exists(liveFiles.contains) &&
-              files.forall(knownDead.contains)) {
-            fs.delete(s.getPath, false)
-            sidecarCache.remove(s.getPath.toString)
-            n += 1
-          }
-        }
-      n
-    } catch { case scala.util.control.NonFatal(_) => 0 }
   }
 }

@@ -1182,8 +1182,8 @@ object SnapshotLog {
     }
     val d = c.data
     if (d.files.nonEmpty) {
-      SnapshotBlooms.writeBothSidecars(spark, root, d.files, d.schema, d.rows,
-        Some(c.tblProps))
+      SnapshotSidecars.buildBlooms(spark, root, d.files, d.files, d.schema,
+        d.rows, c.tblProps)
       SnapshotNulls.record(spark, root, d.nulls)
       if (c.sortOn.nonEmpty) SnapshotSorts.record(spark, root, d.files, c.sortOn)
     }
@@ -3126,24 +3126,8 @@ object SnapshotLog {
     val ngramsNow = SnapshotNgramBlooms.ngramsAt(root)
     val nFiles = backfillable(ngramCols,
       (key, c) => ngramsNow.get(c).exists(_.contains(key)))
-    // overlap the two backfill builds (r22, guide §2.6) — independent
-    // column-pruned jobs, possibly over different file sets; same sidecar
-    // bytes as the sequential order
-    if (bFiles.nonEmpty && nFiles.nonEmpty) {
-      val bloomT = new Thread(() => SnapshotBlooms.writeSidecar(
-        spark, root, bFiles, schema, snap.rows, Some(props)),
-        "graft-bloom-backfill")
-      bloomT.setDaemon(true)
-      bloomT.start()
-      try SnapshotNgramBlooms.writeSidecar(spark, root, nFiles, schema,
-        Some(props))
-      finally bloomT.join()
-    } else if (bFiles.nonEmpty)
-      SnapshotBlooms.writeSidecar(spark, root, bFiles, schema, snap.rows,
-        Some(props))
-    else if (nFiles.nonEmpty)
-      SnapshotNgramBlooms.writeSidecar(spark, root, nFiles, schema,
-        Some(props))
+    SnapshotSidecars.buildBlooms(spark, root, bFiles, nFiles, schema,
+      snap.rows, props)
     (bFiles.size, nFiles.size)
   }
 
@@ -3895,15 +3879,12 @@ object SnapshotLog {
         v < oldestLive && !keepStats.contains(v)
       }.foreach { case (_, nm) => fs.delete(new Path(logDir(root), nm), false) }
       invalidateColStats(root)
-      // bloom/sort sidecars all of whose files PROVABLY died with the
+      // per-file sidecars all of whose files PROVABLY died with the
       // expired versions (files of an in-flight commit are unknown, not
       // dead — their sidecars stay)
       val deadFiles = (dead.flatMap(_.files) ++
         dead.flatMap(_.dels.values.flatten)).map(norm).toSet
-      SnapshotBlooms.expireSidecars(spark, root, liveFiles, deadFiles): Unit
-      SnapshotNgramBlooms.expireSidecars(spark, root, liveFiles, deadFiles): Unit
-      SnapshotSorts.expireSidecars(spark, root, liveFiles, deadFiles): Unit
-      SnapshotNulls.expireSidecars(spark, root, liveFiles, deadFiles): Unit
+      SnapshotSidecars.expire(spark, root, liveFiles, deadFiles): Unit
     }
     if (orphanScan) {
       val cutoff = System.currentTimeMillis() - orphanGraceMs

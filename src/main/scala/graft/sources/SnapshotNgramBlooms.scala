@@ -1,15 +1,11 @@
 package graft.sources
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
 import org.apache.spark.sql.sources.{And, EqualTo, Filter, Or, StringContains, StringEndsWith, StringStartsWith}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.BloomFilter
-
-import scala.jdk.CollectionConverters._
 
 /** PER-FILE CHARACTER-N-GRAM BLOOM FILTERS for substring-search file
   * skipping — the ClickHouse `ngrambf_v1` skipping-index idea (public
@@ -56,7 +52,6 @@ import scala.jdk.CollectionConverters._
   * positive at once (~fpp^m), so even a saturated bloom skips well. */
 private[graft] object SnapshotNgramBlooms {
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-  private val om = new ObjectMapper()
 
   val ColsProp = "write.ngrambloom.columns"
   val BitsProp = "write.ngrambloom.bits"
@@ -83,8 +78,6 @@ private[graft] object SnapshotNgramBlooms {
     math.min(8, math.max(3, props.get(GramProp).flatMap(v =>
       scala.util.Try(v.toInt).toOption).getOrElse(DefaultGram)))
 
-  private def ngramsDir(root: String) = new Path(root, "ngrams")
-
   /** N-gram-eligible columns of this commit: the property's names that
     * exist in the written schema as STRING columns. */
   def ngramColumns(props: Map[String, String],
@@ -100,10 +93,7 @@ private[graft] object SnapshotNgramBlooms {
     * failure must never fail the commit. */
   def writeSidecar(spark: SparkSession, root: String, newFiles: Seq[String],
                    schema: StructType,
-                   propsOpt: Option[Map[String, String]] = None): Unit = CommitTimings.time("ngramSidecar") {
-    val props = propsOpt.getOrElse(
-      try SnapshotLog.tableProps(spark, root)
-      catch { case scala.util.control.NonFatal(_) => Map.empty[String, String] })
+                   props: Map[String, String]): Unit = CommitTimings.time("ngramSidecar") {
     val cols = ngramColumns(props, schema)
     if (cols.isEmpty || newFiles.isEmpty) return
     try {
@@ -120,87 +110,61 @@ private[graft] object SnapshotNgramBlooms {
         .exists(_.trim.equalsIgnoreCase("auto"))
       val numBitsFixed = math.max(64L, props.get(BitsProp).flatMap(v =>
         scala.util.Try(v.toLong).toOption).getOrElse(DefaultBits))
-      val batchSize = math.max(1, props.get(BuildBatchProp).flatMap(v =>
-        scala.util.Try(v.toInt).toOption).getOrElse(DefaultBuildBatch))
       val gram = gramOf(props)
-      val fnName = "__graft_ngram_" +
-        java.util.UUID.randomUUID().toString.replace("-", "").take(16)
-      val fnId = org.apache.spark.sql.catalyst.FunctionIdentifier(fnName)
-      spark.sessionState.functionRegistry.registerFunction(
-        fnId,
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-          fnName),
-        (args: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          new org.apache.spark.sql.catalyst.expressions.aggregate
-            .BloomFilterAggregate(args.head, args(1), args(2)))
-      try newFiles.grouped(batchSize).foreach { batch =>
-        import org.apache.spark.sql.functions.{approx_count_distinct, col, expr, explode, max, regexp_replace}
-        val node = om.createObjectNode()
-        val colsArr = node.putArray("cols")
-        cols.foreach(f => colsArr.add(f.name))
-        node.put("gram", gram)
-        val colBits = node.putObject("colBits")
-        val filesNode = node.putObject("files")
-        // one pass per column: the trigram explode multiplies rows, so
-        // fusing columns would cross-multiply; ngram column sets are
-        // small (usually one text column)
-        cols.foreach { f =>
-          val c = s"`${f.name}`"
-          def tri = spark.read.schema(schema).parquet(batch: _*)
-            .select(
-              regexp_replace(col("_metadata.file_path"), "^file:/*", "/")
-                .as("__f"),
-              explode(expr(
-                s"CASE WHEN length($c) >= $gram THEN " +
-                s"transform(sequence(1, length($c) - ${gram - 1}), " +
-                s"i -> substring($c, i, $gram)) " +
-                "ELSE array() END")).as("__t"))
-          val numBits =
-            if (!autoBits) numBitsFixed
-            else {
-              val r = tri.groupBy(col("__f"))
-                .agg(approx_count_distinct(col("__t"), 0.02).as("__d"))
-                .agg(max(col("__d"))).head()
-              val maxDistinct = if (r.isNullAt(0)) 1L else r.getLong(0)
-              // 10% headroom over the 2%-rsd estimate (ADVICE r20): an
-              // undercount just below a power-of-two boundary would
-              // otherwise undersize the bloom and raise its FPR (degraded
-              // pruning — never wrong answers); the margin keeps estimator
-              // error from crossing a sizing boundary downward
-              val target = (1.1 * maxDistinct).toLong
-              var b = 1L << 12
-              while (b < 8L * target && b < (1L << 22)) b <<= 1
-              b
-            }
-          colBits.put(f.name, numBits)
-          // estimated items sized so numHashFunctions lands near the
-          // optimal k for a bloom filled to ~numBits/16 items (~11 hashes)
-          val estItems = math.max(1L, numBits / 16L)
-          val rows = tri.groupBy(col("__f"))
-            .agg(expr(s"$fnName(xxhash64(__t), ${estItems}L, ${numBits}L)")
-              .as("__b"))
-            .collect()
-          rows.foreach { r =>
-            val key = SnapshotLog.norm(r.getString(0))
-            val fNode =
-              if (filesNode.has(key))
-                filesNode.get(key).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-              else filesNode.putObject(key)
-            val bytes = r.getAs[Array[Byte]]("__b")
-            if (bytes != null)
-              fNode.put(f.name,
-                java.util.Base64.getEncoder.encodeToString(bytes)): Unit
+      SnapshotSidecars.inBloomBatches(spark, "ngram", newFiles,
+        SnapshotSidecars.batchSize(props, BuildBatchProp, DefaultBuildBatch)) {
+        (fnName, batch) =>
+          import org.apache.spark.sql.functions.{approx_count_distinct, col, expr, explode, max, regexp_replace}
+          val node = SnapshotSidecars.om.createObjectNode()
+          val colsArr = node.putArray("cols")
+          cols.foreach(f => colsArr.add(f.name))
+          node.put("gram", gram)
+          val colBits = node.putObject("colBits")
+          val filesNode = node.putObject("files")
+          // one pass per column: the trigram explode multiplies rows, so
+          // fusing columns would cross-multiply; ngram column sets are
+          // small (usually one text column)
+          cols.foreach { f =>
+            val c = s"`${f.name}`"
+            def tri = spark.read.schema(schema).parquet(batch: _*)
+              .select(
+                regexp_replace(col("_metadata.file_path"), "^file:/*", "/")
+                  .as("__f"),
+                explode(expr(
+                  s"CASE WHEN length($c) >= $gram THEN " +
+                  s"transform(sequence(1, length($c) - ${gram - 1}), " +
+                  s"i -> substring($c, i, $gram)) " +
+                  "ELSE array() END")).as("__t"))
+            val numBits =
+              if (!autoBits) numBitsFixed
+              else {
+                val r = tri.groupBy(col("__f"))
+                  .agg(approx_count_distinct(col("__t"), 0.02).as("__d"))
+                  .agg(max(col("__d"))).head()
+                val maxDistinct = if (r.isNullAt(0)) 1L else r.getLong(0)
+                // 10% headroom over the 2%-rsd estimate: an
+                // undercount just below a power-of-two boundary would
+                // otherwise undersize the bloom and raise its FPR (degraded
+                // pruning — never wrong answers); the margin keeps estimator
+                // error from crossing a sizing boundary downward
+                val target = (1.1 * maxDistinct).toLong
+                var b = 1L << 12
+                while (b < 8L * target && b < (1L << 22)) b <<= 1
+                b
+              }
+            colBits.put(f.name, numBits)
+            // estimated items sized so numHashFunctions lands near the
+            // optimal k for a bloom filled to ~numBits/16 items (~11 hashes)
+            val estItems = math.max(1L, numBits / 16L)
+            tri.groupBy(col("__f"))
+              .agg(expr(s"$fnName(xxhash64(__t), ${estItems}L, ${numBits}L)")
+                .as("__b"))
+              .collect()
+              .foreach(r => SnapshotSidecars.putBloom(filesNode, r.getString(0),
+                f.name, r.getAs[Array[Byte]]("__b")))
           }
-        }
-        val dir = ngramsDir(root)
-        val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-        fs.mkdirs(dir)
-        val dest = new Path(dir,
-          "n-" + java.util.UUID.randomUUID().toString.take(12) + ".json")
-        val out = fs.create(dest, false)
-        try out.write(om.writeValueAsBytes(node)) finally out.close()
-      } finally spark.sessionState.functionRegistry.dropFunction(fnId)
+          store.publish(spark, root, node)
+      }
     } catch {
       case scala.util.control.NonFatal(e) =>
         log.warn(s"snapshotlog: ngram sidecar write failed at $root " +
@@ -210,89 +174,26 @@ private[graft] object SnapshotNgramBlooms {
 
   // ---- read side ----
 
-  private val sidecarCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, Map[String, (Int, BloomFilter)]]]()
-
-  private def parseSidecar(fs: FileSystem, p: Path)
+  /** Each sidecar carries the gram it was built with (a sidecar without
+    * one is a trigram build); the probe windows per file to that
+    * gram, so a knob change never mis-probes. A gram outside [3, 8] is
+    * unprobeable: its sidecar reads as empty. */
+  private def readGrams(node: com.fasterxml.jackson.databind.JsonNode)
       : Map[String, Map[String, (Int, BloomFilter)]] = {
-    val key = p.toString
-    val hit = sidecarCache.get(key)
-    if (hit != null) return hit
-    val parsed: Map[String, Map[String, (Int, BloomFilter)]] =
-      try {
-        val in = fs.open(p)
-        val bytes = try {
-          val len = fs.getFileStatus(p).getLen.toInt
-          val buf = new Array[Byte](len)
-          in.readFully(0, buf); buf
-        } finally in.close()
-        val node = om.readTree(bytes)
-        // each sidecar carries the gram it was built with (pre-r19
-        // sidecars omit it: all were trigram builds); the probe windows
-        // per-file to that gram, so a knob change never mis-probes
-        val gram =
-          if (node.has("gram")) node.get("gram").asInt() else DefaultGram
-        if (gram < 3 || gram > 8) Map.empty // unprobeable: ignore
-        else {
-          val acc = scala.collection.mutable.Map[String, scala.collection.mutable.Map[String, (Int, BloomFilter)]]()
-          node.get("cols").elements().asScala.map(_.asText())
-            .foreach(c => acc(c) = scala.collection.mutable.Map.empty)
-          node.get("files").fields().asScala.foreach { fe =>
-            val file = fe.getKey
-            fe.getValue.fields().asScala.foreach { ce =>
-              val bf = BloomFilter.readFrom(new java.io.ByteArrayInputStream(
-                java.util.Base64.getDecoder.decode(ce.getValue.asText())))
-              acc.getOrElseUpdate(ce.getKey,
-                scala.collection.mutable.Map.empty)(file) = (gram, bf)
-            }
-          }
-          acc.view.mapValues(_.toMap).toMap
-        }
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          log.warn(s"snapshotlog: unreadable ngram sidecar $p (ignored): $e")
-          Map.empty
-      }
-    sidecarCache.put(key, parsed)
-    parsed
+    val gram = if (node.has("gram")) node.get("gram").asInt() else DefaultGram
+    if (gram < 3 || gram > 8) Map.empty
+    else SnapshotSidecars.readBlooms(node).map { case (c, perFile) =>
+      c -> perFile.map { case (f, bf) => f -> (gram, bf) }
+    }
   }
 
-  private val mergedCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Map[String, Map[String, (Int, BloomFilter)]])]()
+  private[graft] val store = new SidecarStore[Map[String, (Int, BloomFilter)]](
+    "ngrams", "n-", "ngram", readGrams, _ ++ _)
 
   /** All ngram-bloom entries at `root`, merged across sidecars:
     * column -> (normFile -> (gram, bloom)). */
-  def ngramsAt(root: String): Map[String, Map[String, (Int, BloomFilter)]] = {
-    if (root.isEmpty) return Map.empty
-    try {
-      val dir = ngramsDir(root)
-      val conf = try SparkSession.active.sessionState.newHadoopConf()
-                 catch { case scala.util.control.NonFatal(_) =>
-                   new org.apache.hadoop.conf.Configuration() }
-      val fs = dir.getFileSystem(conf)
-      if (!fs.exists(dir)) return Map.empty
-      val sidecars = fs.listStatus(dir)
-        .filter(s => s.getPath.getName.startsWith("n-") &&
-          s.getPath.getName.endsWith(".json"))
-        .map(_.getPath).sortBy(_.getName).toSeq
-      if (sidecars.isEmpty) return Map.empty
-      val listKey = sidecars.map(_.getName).mkString("|")
-      val hit = mergedCache.get(root)
-      if (hit != null && hit._1 == listKey) return hit._2
-      val merged = sidecars.map(parseSidecar(fs, _))
-        .reduce { (a, b) =>
-          (a.keySet ++ b.keySet).map(c =>
-            c -> (a.getOrElse(c, Map.empty) ++ b.getOrElse(c, Map.empty))).toMap
-        }
-      if (mergedCache.size > 1024) mergedCache.clear()
-      mergedCache.put(root, (listKey, merged))
-      merged
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        log.warn(s"snapshotlog: ngram lookup failed at $root (ignored): $e")
-        Map.empty
-    }
-  }
+  def ngramsAt(root: String): Map[String, Map[String, (Int, BloomFilter)]] =
+    store.at(root)
 
   /** Does this filter tree contain a shape the ngram blooms could prune
     * (substring evidence of length >= gram on SOME column)? Used both to
@@ -383,39 +284,5 @@ private[graft] object SnapshotNgramBlooms {
       case EqualTo(a, v: String) => probe(a, v)
       case _ => true
     }
-  }
-
-  /** Reclaim sidecars whose files are ALL provably dead — same in-flight
-    * protection as [[SnapshotBlooms.expireSidecars]]. */
-  def expireSidecars(spark: SparkSession, root: String,
-                     liveFiles: Set[String],
-                     knownDead: Set[String]): Int = {
-    try {
-      val dir = ngramsDir(root)
-      val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(dir)) return 0
-      var n = 0
-      fs.listStatus(dir)
-        .filter(s => s.getPath.getName.startsWith("n-") &&
-          s.getPath.getName.endsWith(".json"))
-        .foreach { s =>
-          val files = try {
-            om.readTree({
-              val in = fs.open(s.getPath)
-              try {
-                val buf = new Array[Byte](s.getLen.toInt)
-                in.readFully(0, buf); buf
-              } finally in.close()
-            }).get("files").fieldNames().asScala.toSeq
-          } catch { case scala.util.control.NonFatal(_) => Seq.empty[String] }
-          if (files.nonEmpty && !files.exists(liveFiles.contains) &&
-              files.forall(knownDead.contains)) {
-            fs.delete(s.getPath, false)
-            sidecarCache.remove(s.getPath.toString)
-            n += 1
-          }
-        }
-      n
-    } catch { case scala.util.control.NonFatal(_) => 0 }
   }
 }

@@ -1,17 +1,15 @@
 package graft.sources
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 import scala.jdk.CollectionConverters._
 
 /** PER-FILE NULL-VALUE COUNTS — Iceberg's `null_value_counts` manifest
-  * field re-expressed as an immutable sidecar (same discipline as
-  * [[SnapshotBlooms]]/[[SnapshotSorts]]: data files are uuid-named and
-  * never rewritten in place, so a (file, column) → nulls fact is valid
-  * for every snapshot containing the file, time travel included, and
-  * survives manifest expiry).
+  * field re-expressed as an immutable sidecar (kept in a [[SidecarStore]]
+  * like [[SnapshotBlooms]]/[[SnapshotSorts]]: data files are uuid-named
+  * and never rewritten in place, so a (file, column) → nulls fact is
+  * valid for every snapshot containing the file, time travel included,
+  * and survives manifest expiry).
   *
   * Why they exist: manifest row counts bound how many ROWS a file holds,
   * but top-k file skipping needs how many NON-NULL rows of the ordering
@@ -22,125 +20,28 @@ import scala.jdk.CollectionConverters._
   * numNulls is simply absent (readers treat absent as unknown and stay
   * conservative). */
 private[graft] object SnapshotNulls {
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-  private val om = new ObjectMapper()
+  private[graft] val store = new SidecarStore[Map[String, Long]](
+    "nulls", "n-", "null-count", node =>
+      node.get("files").fields().asScala.map { fe =>
+        fe.getKey -> fe.getValue.fields().asScala
+          .map(ce => ce.getKey -> ce.getValue.asLong()).toMap
+      }.toMap)
 
-  private def nullsDir(root: String) = new Path(root, "nulls")
-
-  /** Publish one immutable sidecar for a commit's new files. NonFatal-
-    * guarded: an accelerator must never fail the durable commit. */
+  /** Publish one immutable sidecar for a commit's new files. */
   def record(spark: SparkSession, root: String,
              nulls: Map[String, Map[String, Long]]): Unit = {
     val nonEmpty = nulls.filter(_._2.nonEmpty)
     if (nonEmpty.isEmpty) return
-    try {
-      val node = om.createObjectNode()
-      val fNode = node.putObject("files")
-      nonEmpty.foreach { case (f, cols) =>
-        val cNode = fNode.putObject(SnapshotLog.norm(f))
-        cols.foreach { case (c, n) => cNode.put(c, n) }
-      }
-      val dir = nullsDir(root)
-      val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-      fs.mkdirs(dir)
-      val dest = new Path(dir,
-        "n-" + java.util.UUID.randomUUID().toString.take(12) + ".json")
-      val out = fs.create(dest, false)
-      try out.write(om.writeValueAsBytes(node)) finally out.close()
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        log.warn(s"snapshotlog: null-count sidecar write failed at $root " +
-          s"(top-k skipping unavailable for these files, commit unaffected): $e")
+    val node = SnapshotSidecars.om.createObjectNode()
+    val fNode = node.putObject("files")
+    nonEmpty.foreach { case (f, cols) =>
+      val cNode = fNode.putObject(SnapshotLog.norm(f))
+      cols.foreach { case (c, n) => cNode.put(c, n) }
     }
+    store.publish(spark, root, node)
   }
-
-  /** Immutable-sidecar parse cache (path-keyed, per JVM). */
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    String, Map[String, Map[String, Long]]]()
-
-  private def parse(fs: FileSystem, p: Path): Map[String, Map[String, Long]] = {
-    val key = p.toString
-    val hit = cache.get(key)
-    if (hit != null) return hit
-    val parsed: Map[String, Map[String, Long]] =
-      try {
-        val in = fs.open(p)
-        val bytes = try {
-          val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-          in.readFully(0, buf); buf
-        } finally in.close()
-        om.readTree(bytes).get("files").fields().asScala.map { fe =>
-          fe.getKey -> fe.getValue.fields().asScala
-            .map(ce => ce.getKey -> ce.getValue.asLong()).toMap
-        }.toMap
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          log.warn(s"snapshotlog: unreadable nulls sidecar $p (ignored): $e")
-          Map.empty
-      }
-    cache.put(key, parsed)
-    parsed
-  }
-
-  /** Merged-view cache keyed by the exact sidecar listing. */
-  private val mergedCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Map[String, Map[String, Long]])]()
 
   /** normFile → (column → null count), merged across sidecars; empty when
     * the table never recorded any (one FS existence probe). */
-  def nullsAt(root: String): Map[String, Map[String, Long]] = {
-    if (root.isEmpty) return Map.empty
-    try {
-      val dir = nullsDir(root)
-      val conf = try SparkSession.active.sessionState.newHadoopConf()
-                 catch { case scala.util.control.NonFatal(_) =>
-                   new org.apache.hadoop.conf.Configuration() }
-      val fs = dir.getFileSystem(conf)
-      if (!fs.exists(dir)) return Map.empty
-      val sidecars = fs.listStatus(dir)
-        .filter(s => s.getPath.getName.startsWith("n-") &&
-          s.getPath.getName.endsWith(".json"))
-        .map(_.getPath).sortBy(_.getName).toSeq
-      if (sidecars.isEmpty) return Map.empty
-      val listKey = sidecars.map(_.getName).mkString("|")
-      val hit = mergedCache.get(root)
-      if (hit != null && hit._1 == listKey) return hit._2
-      val merged = sidecars.map(parse(fs, _))
-        .foldLeft(Map.empty[String, Map[String, Long]])(_ ++ _)
-      if (mergedCache.size > 1024) mergedCache.clear()
-      mergedCache.put(root, (listKey, merged))
-      merged
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        log.warn(s"snapshotlog: null-count lookup failed at $root (ignored): $e")
-        Map.empty
-    }
-  }
-
-  /** Expiry hook: reclaim sidecars whose files are ALL provably dead
-    * (every file in `knownDead`, none live) — unknown files may belong
-    * to an in-flight commit whose sidecar published before its manifest. */
-  def expireSidecars(spark: SparkSession, root: String,
-                     liveFiles: Set[String],
-                     knownDead: Set[String]): Int = {
-    try {
-      val dir = nullsDir(root)
-      val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(dir)) return 0
-      var n = 0
-      fs.listStatus(dir)
-        .filter(s => s.getPath.getName.startsWith("n-") &&
-          s.getPath.getName.endsWith(".json"))
-        .foreach { s =>
-          val files = parse(fs, s.getPath).keySet
-          if (files.nonEmpty && !files.exists(liveFiles.contains) &&
-              files.forall(knownDead.contains)) {
-            fs.delete(s.getPath, false)
-            cache.remove(s.getPath.toString)
-            n += 1
-          }
-        }
-      n
-    } catch { case scala.util.control.NonFatal(_) => 0 }
-  }
+  def nullsAt(root: String): Map[String, Map[String, Long]] = store.at(root)
 }

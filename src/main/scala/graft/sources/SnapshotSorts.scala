@@ -1,7 +1,5 @@
 package graft.sources
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 import scala.jdk.CollectionConverters._
@@ -22,128 +20,27 @@ import scala.jdk.CollectionConverters._
   * specific version's manifest. Readers missing an entry simply report no
   * ordering (Spark then sorts — never wrong, just unskipped). */
 private[graft] object SnapshotSorts {
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-  private val om = new ObjectMapper()
-
-  private def sortsDir(root: String) = new Path(root, "sorts")
+  private[graft] val store = new SidecarStore[Seq[String]](
+    "sorts", "s-", "sort-order", { node =>
+      val order = node.get("order").elements().asScala.map(_.asText()).toSeq
+      node.get("files").elements().asScala.map(f => f.asText() -> order).toMap
+    })
 
   /** Record that each of `files` is sorted by `order` (ascending, nulls
     * first — Spark's sortWithinPartitions default). One immutable sidecar
-    * per rewrite; NonFatal-guarded (metadata accelerator, never fails the
-    * commit). */
+    * per rewrite. */
   def record(spark: SparkSession, root: String, files: Seq[String],
              order: Seq[String]): Unit = {
     if (files.isEmpty || order.isEmpty) return
-    try {
-      val node = om.createObjectNode()
-      val oArr = node.putArray("order")
-      order.foreach(oArr.add)
-      val fArr = node.putArray("files")
-      files.foreach(f => fArr.add(SnapshotLog.norm(f)))
-      val dir = sortsDir(root)
-      val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-      fs.mkdirs(dir)
-      val dest = new Path(dir,
-        "s-" + java.util.UUID.randomUUID().toString.take(12) + ".json")
-      val out = fs.create(dest, false)
-      try out.write(om.writeValueAsBytes(node)) finally out.close()
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        log.warn(s"snapshotlog: sort-order sidecar write failed at $root " +
-          s"(ordering unreported, commits unaffected): $e")
-    }
+    val node = SnapshotSidecars.om.createObjectNode()
+    val oArr = node.putArray("order")
+    order.foreach(oArr.add)
+    val fArr = node.putArray("files")
+    files.foreach(f => fArr.add(SnapshotLog.norm(f)))
+    store.publish(spark, root, node)
   }
-
-  /** Immutable-sidecar parse cache (path-keyed, per JVM). */
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[String, Seq[String]]]()
-
-  private def parse(fs: FileSystem, p: Path): Map[String, Seq[String]] = {
-    val key = p.toString
-    val hit = cache.get(key)
-    if (hit != null) return hit
-    val parsed: Map[String, Seq[String]] =
-      try {
-        val in = fs.open(p)
-        val bytes = try {
-          val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-          in.readFully(0, buf); buf
-        } finally in.close()
-        val node = om.readTree(bytes)
-        val order = node.get("order").elements().asScala.map(_.asText()).toSeq
-        node.get("files").elements().asScala
-          .map(f => f.asText() -> order).toMap
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          log.warn(s"snapshotlog: unreadable sort sidecar $p (ignored): $e")
-          Map.empty
-      }
-    cache.put(key, parsed)
-    parsed
-  }
-
-  /** Merged-view cache keyed by the exact sidecar listing (see
-    * [[SnapshotBlooms]] — same rationale: steady-state plans re-merge
-    * nothing). */
-  private val mergedCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Map[String, Seq[String]])]()
 
   /** normFile -> sort columns, merged across sidecars; empty when the
     * table never recorded one (one FS existence probe). */
-  def sortsAt(root: String): Map[String, Seq[String]] = {
-    if (root.isEmpty) return Map.empty
-    try {
-      val dir = sortsDir(root)
-      val conf = try SparkSession.active.sessionState.newHadoopConf()
-                 catch { case scala.util.control.NonFatal(_) =>
-                   new org.apache.hadoop.conf.Configuration() }
-      val fs = dir.getFileSystem(conf)
-      if (!fs.exists(dir)) return Map.empty
-      val sidecars = fs.listStatus(dir)
-        .filter(s => s.getPath.getName.startsWith("s-") &&
-          s.getPath.getName.endsWith(".json"))
-        .map(_.getPath).sortBy(_.getName).toSeq
-      if (sidecars.isEmpty) return Map.empty
-      val listKey = sidecars.map(_.getName).mkString("|")
-      val hit = mergedCache.get(root)
-      if (hit != null && hit._1 == listKey) return hit._2
-      val merged = sidecars.map(parse(fs, _))
-        .foldLeft(Map.empty[String, Seq[String]])(_ ++ _)
-      if (mergedCache.size > 1024) mergedCache.clear()
-      mergedCache.put(root, (listKey, merged))
-      merged
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        log.warn(s"snapshotlog: sort-order lookup failed at $root " +
-          s"(ignored): $e")
-        Map.empty
-    }
-  }
-
-  /** Expiry hook: reclaim sidecars whose files are ALL provably dead
-    * (in `knownDead`, none live) — unknown files may belong to an
-    * in-flight commit whose sidecar published before its manifest. */
-  def expireSidecars(spark: SparkSession, root: String,
-                     liveFiles: Set[String],
-                     knownDead: Set[String]): Int = {
-    try {
-      val dir = sortsDir(root)
-      val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(dir)) return 0
-      var n = 0
-      fs.listStatus(dir)
-        .filter(s => s.getPath.getName.startsWith("s-") &&
-          s.getPath.getName.endsWith(".json"))
-        .foreach { s =>
-          val files = parse(fs, s.getPath).keySet
-          if (files.nonEmpty && !files.exists(liveFiles.contains) &&
-              files.forall(knownDead.contains)) {
-            fs.delete(s.getPath, false)
-            cache.remove(s.getPath.toString)
-            n += 1
-          }
-        }
-      n
-    } catch { case scala.util.control.NonFatal(_) => 0 }
-  }
+  def sortsAt(root: String): Map[String, Seq[String]] = store.at(root)
 }
