@@ -59,10 +59,14 @@ import scala.jdk.CollectionConverters._
   * footers the write already produced, never a second data scan) plus one
   * small JSON PUT; a version read plans exactly the manifest's files (no
   * directory listing storm); time travel is manifest selection —
-  * O(versions) driver-side metadata, never a data scan. The planner-
-  * integrated read path is `spark.read.format("snapshotlog")`
-  * ([[SnapshotLogSource]]), which prunes files against these stats for
-  * ANY pushed predicate.
+  * O(versions) driver-side metadata, never a data scan.
+  *
+  * Every batch read of a snapshot's data files — `read`, `readPruned`,
+  * `readIncremental`, `changes`, compaction input, copy-on-write DELETE
+  * and `spark.read.format("snapshotlog")` — goes through the one DSv2
+  * scan ([[SnapshotLogScan]], via [[scan]]). Its readers apply merge-on-
+  * read deletes, field-id renames and column defaults per file, and
+  * Catalyst pushes any predicate into its manifest-stats pruning.
   */
 object SnapshotLog {
 
@@ -192,19 +196,6 @@ object SnapshotLog {
         case _ => Some(name) // legacy file or column: name-based
       }
     }
-
-    /** True iff any live file resolves any current column to a DIFFERENT
-      * physical name (or a forced null-fill) — the signal that name-based
-      * bulk reads would be wrong and reads must go through id-aware
-      * resolution. */
-    def renameDivergent: Boolean =
-      fids.nonEmpty && {
-        val names = schema.fieldNames
-        files.exists { f =>
-          colIds.contains(SnapshotLog.norm(f)) &&
-            names.exists(n => !physName(f, n).contains(n))
-        }
-      }
   }
 
   private val om = new ObjectMapper()
@@ -2501,52 +2492,33 @@ object SnapshotLog {
   }
 
   /** Read a snapshot: the latest, a pinned version, or AS-OF a timestamp
-    * (largest commitTsMs <= asOfTsMs — Iceberg's timestamp-travel rule).
-    * mergeSchema unions the column sets across data files, so versions
-    * written before an additive schema change read the new column as null
-    * — the reference's schema-evolution read semantics. This is the bulk-
-    * scan path (Spark's vectorized parquet reader over the pinned file
-    * list); `spark.read.format("snapshotlog")` is the planner-integrated
-    * path with manifest-stats pruning for arbitrary predicates. */
+    * (largest commitTsMs <= asOfTsMs — Iceberg's timestamp-travel rule),
+    * under that snapshot's schema: files written before an additive
+    * schema change serve the new column's default (else null), renamed
+    * columns resolve through field ids, dropped columns stay hidden, and
+    * merge-on-read deletes apply. A [[scan]] of the picked snapshot, so
+    * filters on the result prune files from manifest stats. */
   def read(spark: SparkSession, root: String,
            asOfVersion: Option[Int] = None,
-           asOfTsMs: Option[Long] = None): DataFrame = {
-    val snap = pick(spark, root, asOfVersion, asOfTsMs)
-    if (snap.files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        snap.schema)
-    else if (snap.renameDivergent || defaultsNeedConform(snap))
-      readConformed(spark, snap, snap.files)
-    else {
-      // Read under the snapshot's CURRENT schema, not mergeSchema over the
-      // raw files: after a metadata-only dropColumn the physical column
-      // still lives in the data files, and a mergeSchema union would
-      // resurface it (re-exposing dropped — possibly governed — data).
-      // Explicit schema selects by name: dropped physicals are ignored,
-      // columns absent from pre-evolution files null-fill, and the footer-
-      // sampling pass mergeSchema needs is skipped.
-      val raw = spark.read.schema(SnapshotLogSource.nullable(snap.schema))
-        .parquet(snap.files: _*)
-      if (snap.dels.isEmpty) raw else applyDels(spark, raw, snap.dels)
-    }
-  }
+           asOfTsMs: Option[Long] = None): DataFrame =
+    scan(spark, root, pick(spark, root, asOfVersion, asOfTsMs))
 
-  /** True when a column with a declared default is physically absent
-    * from some live file — the bulk supplied-schema parquet read would
-    * null-fill it (Spark's existence-default machinery does not ride a
-    * DataFrameReader schema), so the per-file-group conformed read must
-    * serve the default instead. */
-  private[sources] def defaultsNeedConform(snap: Snapshot,
-      filesOf: Option[Seq[String]] = None): Boolean = {
-    val k = org.apache.spark.sql.catalyst.util.ResolveDefaultColumns
-      .EXISTS_DEFAULT_COLUMN_METADATA_KEY
-    val defaulted = snap.schema.fields.filter(_.metadata.contains(k))
-    defaulted.nonEmpty && filesOf.getOrElse(snap.files).exists { f =>
-      val cs = snap.cols.get(norm(f))
-      defaulted.exists(fd =>
-        !snap.physName(f, fd.name).exists(p => cs.forall(_.contains(p))) ||
-          cs.isEmpty)
-    }
+  /** The DSv2 scan of `snap`'s files ([[SnapshotLogScan]]): the one
+    * reader of snapshot data. It takes the snapshot the caller picked, so
+    * the log is not listed or parsed again. */
+  private[sources] def scan(spark: SparkSession, root: String,
+                            snap: Snapshot): DataFrame =
+    org.apache.spark.sql.GraftSqlShim.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+        .create(new SnapshotLogTable(root, snap), None, None))
+
+  /** `snap` narrowed to `files`: its per-file maps (stats, sizes, deletes,
+    * field ids, …) keep only those files' entries. `files` may name files
+    * `snap` no longer holds (an incremental read's appended-then-replaced
+    * files); they read with no recorded metadata. */
+  private[sources] def restrict(snap: Snapshot, files: Seq[String]): Snapshot = {
+    val keep = files.map(norm).toSet
+    snap.retain(keep).copy(files = files)
   }
 
   /** Fill expression for an output column a file/version predates: its
@@ -2559,59 +2531,6 @@ object SnapshotLog {
     if (f.metadata.contains(k))
       expr(f.metadata.getString(k)).cast(f.dataType)
     else org.apache.spark.sql.functions.lit(null).cast(f.dataType)
-  }
-
-  /** Bulk-read `files` of snapshot `cur` conformed to the CURRENT schema
-    * with id-based physical-name resolution (renamed columns read from
-    * their old physical names, dropped-then-readded columns null-fill)
-    * and MoR deletes applied. Per-file select+alias union — used only on
-    * rename-divergent tables where a name-based mergeSchema read would be
-    * WRONG; the planner-integrated DSv2 path resolves per file without
-    * this plan-size cost and remains the scan of choice. */
-  private[sources] def readConformed(spark: SparkSession, cur: Snapshot,
-                                     files: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val schema = cur.schema
-    // Files sharing (physical projection, delete list) read as ONE
-    // relation with the read schema SUPPLIED from manifest metadata —
-    // zero plan-time footer opens (schema inference per file was the
-    // dominant cost of a changelog plan: one driver round-trip per file).
-    val grouped = files.map { f =>
-      val key = norm(f)
-      val present = cur.cols.get(key).map(_.toSet)
-      // per OUTPUT field: physical name to read, or null-fill
-      val phys: Seq[Option[String]] = schema.fields.toSeq.map { fd =>
-        cur.physName(f, fd.name).filter(p => present.forall(_.contains(p)))
-      }
-      (phys, cur.dels.getOrElse(key, Seq.empty), cur.cols.contains(key)) -> f
-    }.groupBy(_._1).map { case ((phys, dels, hasCols), fs) =>
-      (phys, dels, hasCols, fs.map(_._2))
-    }
-    grouped.map { case (phys, dels, hasCols, fs) =>
-      // equality-delete KEY columns must be readable even when the
-      // current schema no longer carries them (a key column dropped
-      // after the delete staged): a supplied schema missing a key would
-      // fail applyDels — fall back to footer inference for that group
-      val hconf = spark.sessionState.newHadoopConf()
-      val eqKeys = dels.flatMap(df =>
-        SnapshotDeletes.eqKeysOf(df, hconf)).distinct
-      val readFields = schema.fields.toSeq.zip(phys).collect {
-        case (fd, Some(p)) => StructField(p, fd.dataType, nullable = true)
-      }
-      val suppliedNames = readFields.map(_.name).toSet
-      val raw =
-        if (hasCols && eqKeys.forall(suppliedNames.contains))
-          spark.read.schema(StructType(readFields)).parquet(fs: _*)
-        else spark.read.parquet(fs: _*) // legacy manifest / dropped key: infer
-      val withDels =
-        if (dels.isEmpty) raw
-        else applyDels(spark, raw, fs.map(f => norm(f) -> dels).toMap)
-      val sel = schema.fields.toSeq.zip(phys).map {
-        case (fd, Some(p)) => col(p).as(fd.name)
-        case (fd, None) => absentFillCol(fd).as(fd.name)
-      }
-      withDels.select(sel: _*)
-    }.reduce(_ unionByName _)
   }
 
   /** CDC CHANGELOG between two mainline versions (Iceberg
@@ -2705,7 +2624,7 @@ object SnapshotLog {
         stats = Map.empty, version = fromVersion))
     val endFids = fidsOf(inRange.last)
     def visible(s: Snapshot, files: Seq[String]): DataFrame =
-      if (files.isEmpty) emptyDf(s.schema) else readConformed(spark, s, files)
+      scan(spark, root, restrict(s, files))
     // conform a transition's rows (read under snapshot `at`'s schema) to
     // the output schema, resolving RENAMES through the stable field ids:
     // an output column renamed after this transition reads from its
@@ -2870,74 +2789,6 @@ object SnapshotLog {
         else col(rC).getField(n).as(n)) ++
         Seq(col(rC).getField("_change_type").as("_change_type"),
           col("_commit_version"), col("_commit_ts_ms"))): _*)
-  }
-
-  /** Apply merge-on-read positional deletes to a raw parquet read of the
-    * snapshot's data files: anti-join on (file, ordinal) against the
-    * delete files — distributed, broadcast when the delete set is small
-    * (it is: deletes are trickle-DML residue that compaction folds away).
-    * `df` must be a direct parquet read so `_metadata` resolves. */
-  private[sources] def applyDels(spark: SparkSession, df: DataFrame,
-                                 dels: Map[String, Seq[String]]): DataFrame = {
-    import org.apache.spark.sql.functions.{array, broadcast, col, explode, lit, regexp_replace}
-    // footer schemas from the per-JVM cache; plan-time spark.read
-    // inference here cost one driver round-trip per delete file
-    val hconf = spark.sessionState.newHadoopConf()
-    def schemaOf(f: String): Seq[String] = SnapshotDeletes.schemaOf(f, hconf)
-    val delFiles = dels.values.flatten.toSeq.distinct
-    val (dvFiles, parquetDels) = delFiles.partition(SnapshotDeletes.isVector)
-    val (posFiles, eqFiles) =
-      parquetDels.partition(schemaOf(_) == Seq("file_path", "pos"))
-    val cols = df.columns.toSeq
-    var out = df
-      .withColumn("__file", regexp_replace(col("_metadata.file_path"), "^file:/*", "/"))
-    if (posFiles.nonEmpty || dvFiles.nonEmpty) {
-      val posRows = if (posFiles.isEmpty) None else Some(
-        spark.read.schema(StructType(Seq(
-            StructField("file_path", StringType), StructField("pos", LongType))))
-          .parquet(posFiles: _*)
-          .select(col("file_path").as("__del_file"), col("pos").as("__del_pos")))
-      // deletion vectors expand EXECUTOR-SIDE: each (data file, dv) pair
-      // maps to that file's own ordinals (the manifest scopes a vector to
-      // exactly one data file), bounded by the deleted-row count
-      val dvRows = if (dvFiles.isEmpty) None else {
-        val dvSet = dvFiles.map(norm).toSet
-        val dvPairs = dels.toSeq.flatMap { case (f, ds) =>
-          ds.filter(d => dvSet.contains(norm(d))).map(dv => (norm(f), dv))
-        }.distinct
-        val hconf = new org.apache.spark.util.SerializableConfiguration(
-          spark.sessionState.newHadoopConf())
-        import spark.implicits._
-        Some(spark.createDataset(dvPairs).flatMap { case (f, dv) =>
-          SnapshotDeletes.loadVector(dv, hconf.value).iterator.map(p => (f, p))
-        }.toDF("__del_file", "__del_pos"))
-      }
-      val delRows = (posRows.toSeq ++ dvRows.toSeq).reduce(_ unionByName _)
-      out = out
-        .withColumn("__pos", col("_metadata.row_index"))
-        .join(broadcast(delRows),
-          col("__file") === col("__del_file") && col("__pos") === col("__del_pos"),
-          "left_anti")
-    }
-    // equality delete files: anti-join on the key columns, SCOPED to the
-    // data files the manifest maps them to (later appends are unaffected)
-    eqFiles.foreach { ef =>
-      val scope = dels.collect { case (f, ds) if ds.contains(ef) => f }.toSeq
-      val keyCols = schemaOf(ef)
-      // key types come from the data frame itself (delete keys conform to
-      // the table schema at write time) — no footer inference needed
-      val keySchema = StructType(keyCols.map(k =>
-        df.schema.find(_.name == k).map(_.copy(nullable = true))
-          .getOrElse(StructField(k, StringType))))
-      val keyed = spark.read.schema(keySchema).parquet(ef)
-        .withColumn("__del_file", explode(array(scope.map(lit): _*)))
-      // plain === : a null key component yields an unmatched (kept) row,
-      // the same null-never-matches rule the row reader applies
-      val cond = (keyCols.map(k => out(k) === keyed(k)) :+
-        (out("__file") === keyed("__del_file"))).reduce(_ && _)
-      out = out.join(broadcast(keyed), cond, "left_anti")
-    }
-    out.select(cols.map(col): _*)
   }
 
   /** Write positional-delete parquet(s) from `matched` (a frame exposing
@@ -3365,34 +3216,21 @@ object SnapshotLog {
   private[sources] def rangeMayMatch(stat: (Any, Any), lo: Any, hi: Any): Boolean =
     cmp(stat._2, lo) >= 0 && cmp(stat._1, hi) <= 0
 
-  /** Stats-pruned single-column range read — the pre-DSv2 API, kept for
-    * callers that already know their probe column. New code should prefer
-    * `spark.read.format("snapshotlog").load(root).filter(...)`
-    * ([[SnapshotLogSource]]), where Catalyst pushes ARBITRARY predicates
-    * into the same manifest-stats pruning. For a timestamp column, pass
-    * `lo`/`hi` as epoch-MICROSECOND longs (the unit the manifest records);
-    * the residual filter compares real timestamps so Catalyst still pushes
-    * it into the kept scans. At 100 TB this is THE scan-pruning mechanism:
-    * a time- or key-clustered table answers a range probe by opening a
-    * handful of files, decided entirely from driver-side manifest metadata. */
+  /** Single-column range read: [[read]] plus the filter
+    * `lo <= colName <= hi`, which Catalyst pushes into the scan's
+    * manifest-stats pruning, so only files whose stats intersect the
+    * range open. Deletes, renames and defaults apply as in [[read]].
+    * `spark.read.format("snapshotlog").load(root).filter(...)` prunes the
+    * same way for any predicate. For a timestamp column, pass `lo`/`hi` as
+    * epoch-MICROSECOND longs (the unit the manifest records); the filter
+    * compares real timestamps. */
   def readPruned(spark: SparkSession, root: String, colName: String,
                  lo: Any, hi: Any, asOfVersion: Option[Int] = None): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit, timestamp_micros}
     val snap = pick(spark, root, asOfVersion, None)
-    val schema = snap.schema
-    val isTs = schema.find(_.name == colName).exists(f =>
+    val isTs = snap.schema.find(_.name == colName).exists(f =>
       f.dataType == TimestampType || f.dataType == TimestampNTZType)
-    val kept = snap.files.filter { f =>
-      snap.stats.get(norm(f)).flatMap(_.get(colName)) match {
-        case Some(stat) => rangeMayMatch(stat, lo, hi)
-        case None => true
-      }
-    }
-    val base =
-      if (kept.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.option("mergeSchema", "true").parquet(kept: _*)
+    val base = scan(spark, root, snap)
     if (isTs) {
       val c = col(colName).cast("timestamp")
       base.filter(c >= timestamp_micros(lit(lo)) && c <= timestamp_micros(lit(hi)))
@@ -3499,18 +3337,12 @@ object SnapshotLog {
     val tblProps = tablePropsOrEmpty(spark, root)
     val numOut = math.max(1L,
       (small.map(sizeOf).sum + targetBytes - 1) / targetBytes).toInt
-    // the rewrite conforms every output file to the current table schema:
-    // columns absent from pre-evolution files fill their declared DEFAULT
-    // (else null) — a raw supplied-schema read would MATERIALIZE null into
-    // the rewritten file and silently lose the default forever; merge-on-
-    // read deletes on the rewritten files are applied here (the fold: the
-    // output files carry no delete baggage)
-    val smallDels = cur.dels.view.filterKeys(k => small.exists(f => norm(f) == k)).toMap
-    val input =
-      if (cur.renameDivergent || defaultsNeedConform(cur, Some(small)))
-        readConformed(spark, cur, small)
-      else if (smallDels.isEmpty) spark.read.schema(schema).parquet(small: _*)
-      else applyDels(spark, spark.read.schema(schema).parquet(small: _*), smallDels)
+    // the scan conforms every output file to the current table schema
+    // (columns absent from pre-evolution files fill their declared
+    // default, renamed columns resolve by field id) and applies the
+    // rewritten files' merge-on-read deletes: the output files carry no
+    // delete baggage
+    val input = scan(spark, root, restrict(cur, small))
     // a hidden-partitioned table's compaction PRESERVES the layout
     // (Iceberg's per-partition compaction): outputs are re-laid by the
     // ACTIVE spec with fresh partition tuples, so pruning keeps working
@@ -3993,20 +3825,22 @@ object SnapshotLog {
   /** Incremental batch read: the rows APPENDED in `(fromVersion,
     * toVersion]` (toVersion defaults to the current head). The change-feed
     * primitive: a downstream consumer that remembers its last version reads
-    * exactly the new data, never re-scans the table. Schema is the
-    * toVersion snapshot's (additive evolution null-fills older files). */
+    * exactly the new data, never re-scans the table. A scan of the
+    * toVersion snapshot restricted to the appended files — the same
+    * definition as the `fromVersion` read option — so its schema, deletes
+    * and renames are the toVersion snapshot's. */
   def readIncremental(spark: SparkSession, root: String, fromVersion: Int,
                       toVersion: Option[Int] = None,
-                      skipNonAppends: Boolean = false): DataFrame = {
-    val to = toVersion.getOrElse(pick(spark, root, None, None).version)
-    val files = addedFiles(spark, root, fromVersion, to, skipNonAppends)
-      .flatMap(_._2)
-    val schema = pick(spark, root, Some(to), None).schema
-    if (files.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.option("mergeSchema", "true").parquet(files: _*)
-  }
+                      skipNonAppends: Boolean = false): DataFrame =
+    scan(spark, root, appendedSince(spark, root,
+      pick(spark, root, toVersion, None), fromVersion, skipNonAppends))
+
+  /** `snap` restricted to the files appended in `(fromVersion,
+    * snap.version]` ([[addedFiles]]). */
+  private[sources] def appendedSince(spark: SparkSession, root: String,
+      snap: Snapshot, fromVersion: Int, skipNonAppends: Boolean): Snapshot =
+    restrict(snap, addedFiles(spark, root, fromVersion, snap.version,
+      skipNonAppends).flatMap(_._2))
 
   /** DESCRIBE HISTORY analog: the snapshot log itself as a DataFrame
     * (version, operation, commit_ts_ms, n_files) — metadata only. */

@@ -52,11 +52,13 @@ import scala.jdk.CollectionConverters._
   * broadcast-eligible from METADATA, before any file is opened.
   *
   * Scale posture: planning is O(files-in-manifest) driver-side metadata;
-  * each surviving file is one input partition read by a self-contained
-  * parquet reader (footer projection + per-row materialization). The
-  * bulk-scan path for full-table reads remains `SnapshotLog.read`
-  * (Spark's vectorized reader over the pinned file list); this scan is the
-  * probe path, where file skipping dominates decode speed.
+  * each surviving file (or byte range of a large one) is one input
+  * partition, read by Spark's vectorized parquet reader when every kept
+  * file holds every required column under its own name, else by a
+  * parquet-mr row reader. Both apply the file's merge-on-read deletes,
+  * field-id renames and column defaults. This is the one read path for
+  * snapshot data: `SnapshotLog.read` and the other programmatic reads
+  * plan this scan too.
   */
 class SnapshotLogSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "snapshotlog"
@@ -110,14 +112,8 @@ object SnapshotLogSource {
       opt(opts, "asOfTimestampMs").map(_.toLong))
     opt(opts, "fromVersion").map(_.toInt) match {
       case None => snap
-      case Some(from) =>
-        val skip = opt(opts, "skipNonAppends").exists(_.toBoolean)
-        val added = SnapshotLog.addedFiles(spark, root, from, snap.version, skip)
-          .flatMap(_._2)
-        val keep = added.map(SnapshotLog.norm).toSet
-        snap.copy(files = added,
-          stats = snap.stats.view.filterKeys(keep.contains).toMap,
-          sizes = snap.sizes.view.filterKeys(keep.contains).toMap)
+      case Some(from) => SnapshotLog.appendedSince(spark, root, snap, from,
+        opt(opts, "skipNonAppends").exists(_.toBoolean))
     }
   }
 }
@@ -233,7 +229,6 @@ private[sources] class SnapshotLogTable(root: String,
         SnapshotLog.nextCommitTs(spark, root))
       return
     }
-    val schema = cur.schema
     // same pruning as the scan (field-id stats rekey + blooms included)
     val touched = SnapshotLogScanBuilder.prune(cur, cur.files, filters, root)
     if (touched.isEmpty) return // stats prove nothing matches: no-op
@@ -241,21 +236,11 @@ private[sources] class SnapshotLogTable(root: String,
       throw new UnsupportedOperationException(
         s"snapshotlog: cannot translate delete filter $f")))
       .reduceOption(_ && _).getOrElse(lit(true))
-    // apply any merge-on-read dels first (a positionally deleted row must
-    // not be resurrected into the rewritten files), and resolve renamed
-    // columns by field id when the table has diverged physical names
-    val touchedDels = cur.dels.view
-      .filterKeys(k => touched.exists(f => SnapshotLog.norm(f) == k)).toMap
-    val conformed =
-      if (cur.renameDivergent ||
-          SnapshotLog.defaultsNeedConform(cur, Some(touched)))
-        SnapshotLog.readConformed(spark, cur, touched)
-      else {
-        val rawTouched = spark.read.schema(schema).parquet(touched: _*)
-        if (touchedDels.isEmpty) rawTouched
-        else SnapshotLog.applyDels(spark, rawTouched, touchedDels)
-      }
-    val keep = conformed.filter(not(coalesce(cond, lit(false))))
+    // the scan applies the touched files' merge-on-read deletes (a deleted
+    // row must not be resurrected into the rewritten files) and resolves
+    // renamed columns by field id
+    val keep = SnapshotLog.scan(spark, root, SnapshotLog.restrict(cur, touched))
+      .filter(not(coalesce(cond, lit(false))))
     SnapshotLog.rewriteTouched(spark, root, cur, touched, keep,
       SnapshotLog.nextCommitTs(spark, root)): Unit
   }
@@ -1417,7 +1402,8 @@ private[graft] class SnapshotLogScan(snap: SnapshotLog.Snapshot,
     reportedOrdering
 
   override def createReaderFactory(): PartitionReaderFactory =
-    SnapshotLogReaderFactory(required.json, Some(snap.schema.json))
+    SnapshotLogReaderFactory(required.json, Some(snap.schema.json),
+      SnapshotLogReaderFactory.broadcastConf())
 
   /** Post-pruning size/rows from manifest metadata — a pruned probe of a
     * huge table reads as broadcast-small BEFORE any file is opened — plus
@@ -1615,7 +1601,8 @@ private[sources] class SnapshotLogMicroBatchStream(root: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    SnapshotLogReaderFactory(required.json)
+    SnapshotLogReaderFactory(required.json, None,
+      SnapshotLogReaderFactory.broadcastConf())
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -1650,17 +1637,32 @@ private[sources] case class SnapshotFilePartition(file: String,
 private[sources] object SnapshotLogReaderFactory {
   /** Driver-side capture of the session Hadoop conf for executor-side
     * readers (s3a credentials, filesystem tuning — a bare
-    * `new Configuration()` would drop them on a real cluster). */
-  def sessionConf(): org.apache.spark.util.SerializableConfiguration =
-    new org.apache.spark.util.SerializableConfiguration(
-      SparkSession.active.sessionState.newHadoopConf())
+    * `new Configuration()` would drop them on a real cluster), broadcast
+    * once per scan as Spark's `ParquetScan` does: each task then fetches
+    * the executor's cached copy instead of deserializing the whole conf
+    * carried inside the factory. */
+  def broadcastConf()
+      : org.apache.spark.broadcast.Broadcast[org.apache.spark.util.SerializableConfiguration] = {
+    val spark = SparkSession.active
+    spark.sparkContext.broadcast(new org.apache.spark.util.SerializableConfiguration(
+      spark.sessionState.newHadoopConf()))
+  }
+
+  /** Publish `file` (its byte `range`, if split) as the task's current
+    * input file for `input_file_name()`, as Spark's file readers do when
+    * they open a file; the reader unsets it on close. */
+  def setInputFile(file: String, range: Option[(Long, Long)]): Unit =
+    org.apache.spark.sql.GraftSqlShim.setInputFile(new Path(file).toUri.toString,
+      range.fold(0L)(_._1), range.fold(-1L)(r => r._2 - r._1))
 }
 
 private[sources] case class SnapshotLogReaderFactory(requiredJson: String,
-    tableJson: Option[String] = None,
-    conf: org.apache.spark.util.SerializableConfiguration =
-      SnapshotLogReaderFactory.sessionConf())
+    tableJson: Option[String],
+    sessionConf: org.apache.spark.broadcast.Broadcast[
+      org.apache.spark.util.SerializableConfiguration])
     extends PartitionReaderFactory {
+  def conf: org.apache.spark.util.SerializableConfiguration = sessionConf.value
+
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[SnapshotFilePartition]
     // existence defaults live on the TABLE schema's field metadata (the
@@ -1940,10 +1942,14 @@ private[sources] class SnapshotVectorReader(file: String, required: StructType,
     case _ => 0L
   }
 
-  private val reader =
-    new org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader(
-      null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, 4096)
-  locally {
+  // opened on the first next(), as Spark's FilePartitionReader opens its
+  // files: the footer read then falls inside the task's input metrics
+  private var reader
+      : org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader = _
+  private def open(): Unit = {
+    reader =
+      new org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader(
+        null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, 4096)
     // split-based initialize: unlike the (path, columns) helper — which
     // builds a BARE Configuration internally — this path reads the
     // TaskAttemptContext's conf, so the SESSION hadoop conf (s3a
@@ -1983,6 +1989,7 @@ private[sources] class SnapshotVectorReader(file: String, required: StructType,
       c, new org.apache.hadoop.mapreduce.TaskAttemptID())
     reader.initialize(split, ctx)
     reader.enableReturningBatches()
+    SnapshotLogReaderFactory.setInputFile(file, range)
   }
 
   private var out: ColumnarBatch = _
@@ -2078,6 +2085,7 @@ private[sources] class SnapshotVectorReader(file: String, required: StructType,
   }
 
   override def next(): Boolean = {
+    if (reader == null) open()
     while (reader.nextKeyValue()) {
       val src = reader.getCurrentValue.asInstanceOf[ColumnarBatch]
       val n = src.numRows()
@@ -2117,7 +2125,10 @@ private[sources] class SnapshotVectorReader(file: String, required: StructType,
 
   override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = out
 
-  override def close(): Unit = reader.close()
+  override def close(): Unit = {
+    org.apache.spark.sql.GraftSqlShim.unsetInputFile()
+    if (reader != null) reader.close()
+  }
 }
 
 /** Reads one immutable data file into `InternalRow`s through the public
@@ -2126,9 +2137,8 @@ private[sources] class SnapshotVectorReader(file: String, required: StructType,
   * (the manifest carries the CURRENT schema; old files predate additive
   * columns). An empty effective projection (COUNT(*), or a file with none
   * of the required columns) emits footer row counts without opening a
-  * single data page. Runs with a default Hadoop conf — correct for file:
-  * roots (this environment); a cluster deployment would broadcast the
-  * session conf alongside the factory. */
+  * single data page. Runs under the session Hadoop conf the factory
+  * broadcasts (a bare default conf when constructed without one). */
 private[sources] class SnapshotFileReader(file: String, required: StructType,
     deleteFiles: Seq[String] = Nil,
     physMap: Map[String, String] = Map.empty,
@@ -2234,6 +2244,7 @@ private[sources] class SnapshotFileReader(file: String, required: StructType,
         .withConf(conf)
       reader = range.fold(b)(r => b.withFileRange(r._1, r._2)).build()
     }
+    SnapshotLogReaderFactory.setInputFile(file, range)
   }
 
   /** Canonical value space shared by data rows and delete keys (both
@@ -2423,5 +2434,8 @@ private[sources] class SnapshotFileReader(file: String, required: StructType,
       s"snapshotlog reader: unsupported column type $other")
   }
 
-  override def close(): Unit = if (reader != null) reader.close()
+  override def close(): Unit = {
+    org.apache.spark.sql.GraftSqlShim.unsetInputFile()
+    if (reader != null) reader.close()
+  }
 }

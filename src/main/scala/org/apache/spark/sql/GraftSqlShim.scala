@@ -12,6 +12,16 @@ object GraftSqlShim {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** The task's current input file for `input_file_name()` and
+    * `input_file_block_start/length()` (Spark's `InputFileBlockHolder`,
+    * `private[spark]`). A reader sets it when it opens a file and unsets
+    * it when it closes, as Spark's own file readers do; `length` -1 means
+    * the whole file. */
+  def setInputFile(path: String, start: Long, length: Long): Unit =
+    org.apache.spark.rdd.InputFileBlockHolder.set(path, start, length)
+  def unsetInputFile(): Unit =
+    org.apache.spark.rdd.InputFileBlockHolder.unset()
+
   /** `c`, declared non-nullable: Catalyst's own `AssertNotNull`, for a
     * value the caller knows is never null but whose expression (a map
     * lookup, say) Catalyst types as nullable. Fails the task if a null

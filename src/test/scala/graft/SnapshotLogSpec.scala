@@ -107,10 +107,10 @@ class SnapshotLogSpec extends AnyFunSuite {
     SnapshotLog.commit(Seq(3).toDF("x"), root, overwrite = false, 200L)
     def norm(p: String) = p.replaceFirst("^file:/*", "/")
     val snaps = SnapshotLog.snapshots(spark, root)
-    val v1Scan = SnapshotLog.read(spark, root, Some(1)).inputFiles.map(norm).toSet
+    val v1Scan = v2Scan(SnapshotLog.read(spark, root, Some(1))).keptFiles.map(norm).toSet
     assert(v1Scan === snaps(0).files.map(norm).toSet,
       "v1 read must scan the v1 manifest's files, nothing else")
-    val curScan = SnapshotLog.read(spark, root).inputFiles.map(norm).toSet
+    val curScan = v2Scan(SnapshotLog.read(spark, root)).keptFiles.map(norm).toSet
     assert(curScan === snaps(1).files.map(norm).toSet)
     assert(v1Scan.subsetOf(curScan) && curScan.size > v1Scan.size)
   }
@@ -142,22 +142,23 @@ class SnapshotLogSpec extends AnyFunSuite {
     assert(SnapshotLog.snapshots(spark, root).last.files.size === 8)
     // numeric range inside slice "c": only that commit's 2 files open
     val pr = SnapshotLog.readPruned(spark, root, "k", 210L, 240L)
-    assert(pr.inputFiles.length === 2,
-      s"expected 2 files after stats pruning, got ${pr.inputFiles.length}")
-    val brute = SnapshotLog.read(spark, root)
-      .filter(col("k") >= 210 && col("k") <= 240)
+    val prFiles = v2Scan(pr).keptFiles.size
+    assert(prFiles === 2, s"expected 2 files after stats pruning, got $prFiles")
+    // unpruned reference: every row, filtered here rather than in a scan
+    val brute = SnapshotLog.read(spark, root).select("k").as[Long].collect()
+      .filter(k => k >= 210 && k <= 240)
     assert(pr.select("k").as[Long].collect().sorted.toSeq ===
-      brute.select("k").as[Long].collect().sorted.toSeq)
+      brute.sorted.toSeq)
     // string-column pruning uses lexicographic bounds
     val prs = SnapshotLog.readPruned(spark, root, "tag", "b", "b")
-    assert(prs.inputFiles.length === 2)
+    assert(v2Scan(prs).keptFiles.size === 2)
     assert(prs.count() === 50)
     // a range spanning two slices opens exactly their 4 files
-    assert(SnapshotLog.readPruned(spark, root, "k", 140L, 210L)
-      .inputFiles.length === 4)
+    assert(v2Scan(SnapshotLog.readPruned(spark, root, "k", 140L, 210L))
+      .keptFiles.size === 4)
     // out-of-range probe opens nothing and returns empty with the schema
     val none = SnapshotLog.readPruned(spark, root, "k", 9000L, 9999L)
-    assert(none.inputFiles.isEmpty && none.count() === 0)
+    assert(v2Scan(none).keptFiles.isEmpty && none.count() === 0)
     assert(none.columns.toSeq === Seq("k", "tag"))
   }
 
@@ -175,17 +176,18 @@ class SnapshotLogSpec extends AnyFunSuite {
     // probe inside day 2 (epoch-µs bounds, as documented)
     val pr = SnapshotLog.readPruned(spark, root, "ts",
       2 * dayUs, 2 * dayUs + 3600L * 1000000L)
-    assert(pr.inputFiles.length === 2,
-      s"time probe should open one slice (2 files), got ${pr.inputFiles.length}")
+    val prFiles = v2Scan(pr).keptFiles.size
+    assert(prFiles === 2, s"time probe should open one slice (2 files), got $prFiles")
+    // unpruned reference: every row's epoch-µs, filtered here
     val brute = SnapshotLog.read(spark, root)
-      .filter(col("ts") >= timestamp_micros(lit(2 * dayUs)) &&
-        col("ts") <= timestamp_micros(lit(2 * dayUs + 3600L * 1000000L)))
-    assert(pr.count() === brute.count() && pr.count() > 0)
+      .select(unix_micros(col("ts"))).as[Long].collect()
+      .count(us => us >= 2 * dayUs && us <= 2 * dayUs + 3600L * 1000000L)
+    assert(pr.count() === brute && pr.count() > 0)
     // spanning probe (day-1 00:30 .. day-2 00:30 — each slice populates
     // its day's first hour) opens both touched slices
-    assert(SnapshotLog.readPruned(spark, root, "ts",
-      dayUs + 1800L * 1000000L, 2 * dayUs + 1800L * 1000000L)
-      .inputFiles.length === 4)
+    assert(v2Scan(SnapshotLog.readPruned(spark, root, "ts",
+      dayUs + 1800L * 1000000L, 2 * dayUs + 1800L * 1000000L))
+      .keptFiles.size === 4)
   }
 
   test("readPruned equals the unpruned filter on random data and probes") {
@@ -198,17 +200,17 @@ class SnapshotLogSpec extends AnyFunSuite {
         .toDF("k", "v")
       SnapshotLog.commit(df, root, overwrite = i == 0, 100L * (i + 1))
     }
-    val full = SnapshotLog.read(spark, root)
+    // unpruned reference: every row, filtered here rather than in a scan
+    val full = SnapshotLog.read(spark, root).as[(Long, Double)].collect()
     for (_ <- 0 until 20) {
       val a = rnd.nextInt(1100).toLong - 50
       val b = a + rnd.nextInt(300)
       val pruned = SnapshotLog.readPruned(spark, root, "k", a, b)
         .agg(count(lit(1)), sum(col("v"))).collect()(0)
-      val brute = full.filter(col("k") >= a && col("k") <= b)
-        .agg(count(lit(1)), sum(col("v"))).collect()(0)
-      assert(pruned.getLong(0) === brute.getLong(0), s"count differs for [$a,$b]")
-      if (brute.getLong(0) > 0)
-        assert(math.abs(pruned.getDouble(1) - brute.getDouble(1)) < 1e-9,
+      val brute = full.filter { case (k, _) => k >= a && k <= b }
+      assert(pruned.getLong(0) === brute.length, s"count differs for [$a,$b]")
+      if (brute.nonEmpty)
+        assert(math.abs(pruned.getDouble(1) - brute.map(_._2).sum) < 1e-9,
           s"sum differs for [$a,$b]")
     }
   }
@@ -294,9 +296,8 @@ class SnapshotLogSpec extends AnyFunSuite {
     assert(r4.count() === 200)
 
     // residual exactness: pruning never changes values, only skips files
-    val brute = SnapshotLog.read(spark, root)
-      .filter(col("k") >= 210 && col("k") <= 240)
-      .agg(sum("v")).collect()(0).getDouble(0)
+    val brute = SnapshotLog.read(spark, root).as[(Long, String, Double)]
+      .collect().collect { case (k, _, v) if k >= 210 && k <= 240 => v }.sum
     val got = r1.agg(sum("v")).collect()(0).getDouble(0)
     assert(math.abs(brute - got) < 1e-9)
 
