@@ -109,10 +109,9 @@ object SnapshotLog {
       // are recorded as the empty-marker and never pruned
       parts: Map[String, Seq[String]] = Map.empty,
       // per-file physical column names (footer walk records them for
-      // free): lets the planner decide VECTORIZED vs row reads per file
-      // without reopening footers — a pre-evolution file missing a
-      // required column takes the null-filling row reader, everything
-      // else the columnar one. Absent for old manifests (row reader).
+      // free): with `colIds`, field-id resolution finds each column's
+      // name in a file without reopening its footer ([[physName]]).
+      // Absent for old manifests (name-based reads).
       cols: Map[String, Seq[String]] = Map.empty,
       // merge-on-read position deletes (Iceberg positional delete files):
       // norm(data file) -> the delete parquet files (file_path, pos) that
@@ -566,13 +565,9 @@ object SnapshotLog {
     * writes standard TIMESTAMP_MICROS — Sessions.build pins
     * outputTimestampType). String bounds use parquet's unsigned-byte order,
     * which matches UTF8String ordering and equals java.lang.String order
-    * for the ASCII range the fixtures use. */
-  private[sources] def footerStats(conf: Configuration, files: Seq[String],
-                          schema: StructType): Map[String, Map[String, (Any, Any)]] =
-    footerMeta(conf, files, schema)._1
-
-  /** One footer walk yielding per-file min/max stats, the file's physical
-    * column list, row counts, AND per-column null counts (Iceberg's
+    * for the ASCII range the fixtures use.
+    *
+    * The same footer walk yields the file's physical column list, row counts, AND per-column null counts (Iceberg's
     * null_value_counts — the missing piece for top-k file skipping, where
     * "this file holds N rows ≥ T" must mean N NON-NULL rows). A column
     * whose blocks don't all set numNulls is absent from the nulls map
@@ -1467,9 +1462,8 @@ object SnapshotLog {
   /** ADD COLUMN with an optional DEFAULT (Iceberg v3 initial-default /
     * SQL standard column default): the default rides the field's
     * metadata under Spark's OWN convention (`EXISTS_DEFAULT` fills the
-    * column for pre-evolution files — Spark's parquet readers honor it
-    * natively on the bulk path, and the DSv2 row reader fills it for
-    * files the manifest says predate the column; `CURRENT_DEFAULT` makes
+    * column for pre-evolution files — both snapshot readers serve it for
+    * files that predate the column; `CURRENT_DEFAULT` makes
     * INSERTs that omit the column take the default at analysis time).
     * The default must be a foldable literal expression of a castable
     * type — validated HERE so a bad default is a commit-time error, not

@@ -52,11 +52,12 @@ import scala.jdk.CollectionConverters._
   * broadcast-eligible from METADATA, before any file is opened.
   *
   * Scale posture: planning is O(files-in-manifest) driver-side metadata;
-  * each surviving file (or byte range of a large one) is one input
-  * partition, read by Spark's vectorized parquet reader when every kept
-  * file holds every required column under its own name, else by a
-  * parquet-mr row reader. Both apply the file's merge-on-read deletes,
-  * field-id renames and column defaults. This is the one read path for
+  * each surviving file (or byte range of a large one) is one slice, and
+  * small slices share a task as in Spark's file source. Slices are read
+  * by Spark's vectorized parquet reader, or by a parquet-mr row reader
+  * for the `_file`/`_pos` metadata columns and the few cases
+  * [[SnapshotLogScan.columnarOk]] names. Both apply the file's
+  * merge-on-read deletes, field-id renames and column defaults. This is the one read path for
   * snapshot data: `SnapshotLog.read` and the other programmatic reads
   * plan this scan too.
   */
@@ -595,6 +596,39 @@ private[graft] object SnapshotLogScan {
   def splitTargetBytes: Long =
     java.lang.Long.getLong("graft.snapshotlog.split.targetBytes", 128L << 20)
 
+  /** Spark's `FilePartition` packing over file slices, in file order:
+    * a task takes slices while its bytes, counting `openCostInBytes` per
+    * slice, stay within `min(maxPartitionBytes, max(openCost, total /
+    * parallelism))`. A few files each keep their own task; hundreds of
+    * small files share a few. A slice of unknown size (`None`: the
+    * caller passes it for each range of a split file, already sized to
+    * a task) takes a task alone. */
+  def pack(parts: Seq[SnapshotFilePartition],
+           size: SnapshotFilePartition => Option[Long]): Array[InputPartition] = {
+    val spark = SparkSession.active
+    val conf = spark.sessionState.conf
+    val open = conf.filesOpenCostInBytes
+    def sizeOf(p: SnapshotFilePartition): Long =
+      size(p).getOrElse(conf.filesMaxPartitionBytes)
+    val total = parts.map(sizeOf(_) + open).sum
+    val maxSplit = math.min(conf.filesMaxPartitionBytes, math.max(open,
+      total / conf.filesMinPartitionNum.getOrElse(spark.sparkContext.defaultParallelism)))
+    val out = scala.collection.mutable.ArrayBuffer[InputPartition]()
+    val cur = scala.collection.mutable.ArrayBuffer[SnapshotFilePartition]()
+    var curSize = 0L
+    def close(): Unit = if (cur.nonEmpty) {
+      out += (if (cur.size == 1) cur.head else SnapshotPackedPartition(cur.toSeq))
+      cur.clear(); curSize = 0L
+    }
+    parts.foreach { p =>
+      if (curSize + sizeOf(p) > maxSplit) close()
+      curSize += sizeOf(p) + open
+      cur += p
+    }
+    close()
+    out.toArray
+  }
+
   /** Backstop against a pathological size/target ratio. */
   def maxSplitsPerFile: Int =
     Integer.getInteger("graft.snapshotlog.split.maxPerFile", 256)
@@ -1127,15 +1161,22 @@ private[graft] class SnapshotLogScan(snap: SnapshotLog.Snapshot,
         liveKept = SnapshotLogScanBuilder.prune(snap, liveKept, Array(f), root)
     }
 
-  /** VECTORIZED when every kept file physically holds every required
-    * column (decided from the manifest's recorded column lists — no
-    * footer reopens): the scan then runs Spark's own vectorized parquet
-    * reader and feeds ColumnarBatches into whole-stage codegen. Files
-    * predating an additive schema change (or manifests predating the
-    * `cols` field, or projections touching `_file`) take the row reader,
-    * which null-fills. The mode is scan-uniform because Spark requires
-    * one answer per scan. */
-  protected def columnarOk(files: Seq[String]): Boolean =
+  /** VECTORIZED unless a projection or delete needs the row reader: the
+    * scan then runs Spark's own vectorized parquet reader and feeds
+    * ColumnarBatches into whole-stage codegen. The vectorized reader
+    * resolves renamed columns through the file's field-id map and serves
+    * a column a file predates as its declared default, else null, as the
+    * row reader does. The row reader remains for the `_file`/`_pos`
+    * metadata columns, equality-delete keys the vectors cannot probe
+    * bit-identically, nested columns of files carrying deletes, and
+    * nested columns with a declared default. The mode is scan-uniform
+    * because Spark requires one answer per scan. */
+  protected def columnarOk(files: Seq[String]): Boolean = {
+    def flat(dt: DataType): Boolean = dt match {
+      case _: StructType | _: ArrayType | _: MapType => false
+      case _ => true
+    }
+    val nested = required.fields.filterNot(f => flat(f.dataType))
     required.fields.nonEmpty &&
       !required.fieldNames.contains("_file") &&
       !required.fieldNames.contains("_pos") &&
@@ -1148,19 +1189,13 @@ private[graft] class SnapshotLogScan(snap: SnapshotLog.Snapshot,
           snap.schema.fields.find(_.name == k)
             .exists(fd => SnapshotDeletes.vectorCanonical(fd.dataType)))
       } &&
-      // nested projections go through the row-based Group reader; the
-      // flat primitives stay on the vectorized ColumnarBatch path
-      required.fields.forall(f => f.dataType match {
-        case _: StructType | _: ArrayType | _: MapType => false
-        case _ => true
-      }) &&
-      // field-id resolution: vectorized only when every required column
-      // resolves to ITS OWN name in the file (no rename remap in play)
-      files.forall(f => physMapFor(f).isEmpty) &&
-      files.forall { f =>
-        snap.cols.get(SnapshotLog.norm(f))
-          .exists(cs => required.fieldNames.forall(cs.contains))
-      }
+      // a batch that drops deleted rows is copied column by column, for
+      // flat types only; Spark's vectors fill only flat defaults
+      (nested.isEmpty || files.forall(f => !snap.dels.contains(SnapshotLog.norm(f)))) &&
+      nested.forall(f => snap.schema.fields.find(_.name == f.name).forall(
+        !_.metadata.contains(org.apache.spark.sql.catalyst.util
+          .ResolveDefaultColumns.EXISTS_DEFAULT_COLUMN_METADATA_KEY)))
+  }
 
   /** Equality-delete KEY columns (current schema names) that apply to
     * data file `f` — the delete parquet's schema IS its key list. One
@@ -1185,8 +1220,7 @@ private[graft] class SnapshotLogScan(snap: SnapshotLog.Snapshot,
     * AFTER the rename keys on the NEW name — without the remap the
     * reader's name-based applicability check would silently drop the
     * delete and deleted rows would resurrect. A non-identity key entry
-    * here also refuses columnar (columnarOk's isEmpty guard), routing
-    * the file to the row reader, which honors the remap. */
+    * here remaps the key in both readers. */
   protected def physMapFor(f: String): Map[String, String] =
     if (snap.fids.isEmpty) Map.empty
     else (required.fields.iterator.map(_.name)
@@ -1231,12 +1265,18 @@ private[graft] class SnapshotLogScan(snap: SnapshotLog.Snapshot,
           Some((i * step, math.min((i + 1L) * step, size))))
       }
     }
-    files.flatMap { f =>
+    val parts = files.flatMap { f =>
       val dels = snap.dels.getOrElse(SnapshotLog.norm(f), Nil)
       val pm = physMapFor(f)
       val pk = keys.flatMap(_.get(SnapshotLog.norm(f)))
       ranges(f).map(r => SnapshotFilePartition(f, columnar, dels, pm, pk, r))
-    }.toArray
+    }
+    // PACK small files into one task, as Spark's file source does, except
+    // under KeyGroupedPartitioning (each task carries its tuple) or a
+    // reported ordering (one file per task is its proof)
+    if (keys.nonEmpty || reportedOrdering.nonEmpty) parts.toArray
+    else SnapshotLogScan.pack(parts, p =>
+      if (p.range.isDefined) None else snap.sizes.get(SnapshotLog.norm(p.file)))
   }
 
   // ---- STORAGE-PARTITIONED JOIN (Iceberg SPJ analog): when every kept
@@ -1634,7 +1674,43 @@ private[sources] case class SnapshotFilePartition(file: String,
       .GenericInternalRow(vs.toArray)).orNull
 }
 
+/** Several small files read in one task, one after another. */
+private[sources] case class SnapshotPackedPartition(parts: Seq[SnapshotFilePartition])
+    extends InputPartition
+
 private[sources] object SnapshotLogReaderFactory {
+  /** Physical column name to read for column `n` in a file with the
+    * planner's rename map `physMap`: None = the file predates the
+    * column's field id (its value is the column's default, else null). */
+  def phys(physMap: Map[String, String], n: String): Option[String] =
+    physMap.get(n) match {
+      case Some("") => None
+      case Some(p) => Some(p)
+      case None => Some(n)
+    }
+
+  /** The reader of one task: its file's, or its packed files' readers
+    * chained, each opened when the one before it closes. */
+  def chain[T](partition: InputPartition,
+               open: SnapshotFilePartition => PartitionReader[T]): PartitionReader[T] =
+    partition match {
+      case p: SnapshotFilePartition => open(p)
+      case SnapshotPackedPartition(parts) => new PartitionReader[T] {
+        private val it = parts.iterator
+        private var cur: PartitionReader[T] = _
+        override def next(): Boolean = {
+          while (cur != null || it.hasNext) {
+            if (cur == null) cur = open(it.next())
+            if (cur.next()) return true
+            cur.close(); cur = null
+          }
+          false
+        }
+        override def get(): T = cur.get()
+        override def close(): Unit = if (cur != null) { cur.close(); cur = null }
+      }
+    }
+
   /** Driver-side capture of the session Hadoop conf for executor-side
     * readers (s3a credentials, filesystem tuning — a bare
     * `new Configuration()` would drop them on a real cluster), broadcast
@@ -1663,8 +1739,10 @@ private[sources] case class SnapshotLogReaderFactory(requiredJson: String,
     extends PartitionReaderFactory {
   def conf: org.apache.spark.util.SerializableConfiguration = sessionConf.value
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[SnapshotFilePartition]
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    SnapshotLogReaderFactory.chain(partition, rowReader)
+
+  private def rowReader(p: SnapshotFilePartition): PartitionReader[InternalRow] = {
     // existence defaults live on the TABLE schema's field metadata (the
     // pruned `required` may have shed it through Spark's attribute plumbing)
     val table = DataType.fromJson(tableJson.getOrElse(requiredJson))
@@ -1679,17 +1757,17 @@ private[sources] case class SnapshotLogReaderFactory(requiredJson: String,
   }
 
   override def supportColumnarReads(partition: InputPartition): Boolean =
-    partition.asInstanceOf[SnapshotFilePartition].columnar
+    partition match {
+      case p: SnapshotFilePartition => p.columnar
+      case p: SnapshotPackedPartition => p.parts.head.columnar
+    }
 
   override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val p = partition.asInstanceOf[SnapshotFilePartition]
-    new SnapshotVectorReader(p.file,
+      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+    SnapshotLogReaderFactory.chain(partition, p => new SnapshotVectorReader(p.file,
       DataType.fromJson(requiredJson).asInstanceOf[StructType],
-      DataType.fromJson(tableJson.getOrElse(requiredJson))
-        .asInstanceOf[StructType],
-      p.deletes, Some(conf.value), p.range)
-  }
+      DataType.fromJson(tableJson.getOrElse(requiredJson)).asInstanceOf[StructType],
+      p.deletes, p.physMap, Some(conf.value), p.range))
 }
 
 /** Shared merge-on-read delete-file mechanics for BOTH reader paths.
@@ -1865,8 +1943,9 @@ private[sources] object SnapshotDeletes {
 /** Vectorized read of one data file through Spark's own
   * `VectorizedParquetRecordReader` — the same decode path `spark.read
   * .parquet` uses (ColumnarBatch output, whole-stage codegen consumes
-  * the vectors directly). Planned only for files the manifest proves
-  * hold every required column.
+  * the vectors directly). Columns resolve by field id like the row
+  * reader's: renamed columns read their physical name, and a column the
+  * file lacks serves its declared default, else null.
   *
   * DELETE-AWARE (Iceberg's vectorized-read-with-deletion-vectors
   * analog): a file carrying merge-on-read deletes stays on this path.
@@ -1882,6 +1961,7 @@ private[sources] object SnapshotDeletes {
 private[sources] class SnapshotVectorReader(file: String, required: StructType,
     tableSchema: StructType,
     deleteFiles: Seq[String] = Nil,
+    physMap: Map[String, String] = Map.empty,
     hadoopConf: Option[Configuration] = None,
     range: Option[(Long, Long)] = None)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
@@ -1904,9 +1984,10 @@ private[sources] class SnapshotVectorReader(file: String, required: StructType,
         .map(_.getName).toSet
       finally r.close()
     }
+  private def phys(n: String) = SnapshotLogReaderFactory.phys(physMap, n)
   private val eqApplicable: Seq[(String, Seq[String])] = eqDeleteFiles
     .map(df => df -> SnapshotDeletes.schemaOf(df, conf))
-    .filter(_._2.forall(fileFields.contains))
+    .filter(_._2.forall(k => phys(k).exists(fileFields.contains)))
 
   // the parquet projection: required columns first, then any eq-key
   // columns the query pruned away (read for the probe, dropped from the
@@ -1956,13 +2037,21 @@ private[sources] class SnapshotVectorReader(file: String, required: StructType,
     // credentials, fs tuning) reaches the vectorized read on a real
     // cluster. The projection travels as Spark's requested-schema conf
     // (required columns first, then hidden eq-key extras — batch column
-    // order follows this struct), and columns missing from a file
-    // null-fill via the reader's own constant-null vectors.
+    // order follows this struct). Each column is requested under its
+    // physical name in this file; a column the file lacks (or predates,
+    // under a name no file holds) fills from the reader's constant
+    // vectors with the existence default the table field declares, else
+    // null. Nested fields are requested nullable: the reader refuses a
+    // non-nullable field a file lacks, which older files of a struct that
+    // gained fields do.
     val readStruct = StructType(readCols.map { n =>
-      required.fields.find(_.name == n)
+      val f = required.fields.find(_.name == n)
         .getOrElse(tableSchema.fields.find(_.name == n).getOrElse(
           throw new IllegalStateException(s"snapshotlog: no schema for $n")))
-    }.map(f => StructField(f.name, f.dataType, nullable = true)))
+      StructField(phys(n).getOrElse(s"__graft_absent_$n"),
+        org.apache.spark.sql.GraftSqlShim.asNullable(f.dataType), nullable = true,
+        tableSchema.fields.find(_.name == n).fold(f.metadata)(_.metadata))
+    })
     val c = new Configuration(conf)
     c.set(org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
       .SPARK_ROW_REQUESTED_SCHEMA, readStruct.json)
@@ -2018,64 +2107,28 @@ private[sources] class SnapshotVectorReader(file: String, required: StructType,
     while (c < required.length) {
       val sv = src.column(c)
       val dv = vecs(c)
-      val n = keep.length
+      // surviving row keep(i) of `sv` into slot i of `dv`
+      def copy(put: (Int, Int) => Unit): Unit = {
+        var i = 0
+        while (i < keep.length) {
+          val r = keep(i)
+          if (sv.isNullAt(r)) dv.putNull(i) else put(i, r)
+          i += 1
+        }
+      }
       required.fields(c).dataType match {
         case LongType | TimestampType | TimestampNTZType =>
-          var i = 0; while (i < n) {
-            val r = keep(i)
-            if (sv.isNullAt(r)) dv.putNull(i) else dv.putLong(i, sv.getLong(r))
-            i += 1
-          }
-        case IntegerType | DateType =>
-          var i = 0; while (i < n) {
-            val r = keep(i)
-            if (sv.isNullAt(r)) dv.putNull(i) else dv.putInt(i, sv.getInt(r))
-            i += 1
-          }
-        case DoubleType =>
-          var i = 0; while (i < n) {
-            val r = keep(i)
-            if (sv.isNullAt(r)) dv.putNull(i) else dv.putDouble(i, sv.getDouble(r))
-            i += 1
-          }
-        case FloatType =>
-          var i = 0; while (i < n) {
-            val r = keep(i)
-            if (sv.isNullAt(r)) dv.putNull(i) else dv.putFloat(i, sv.getFloat(r))
-            i += 1
-          }
-        case BooleanType =>
-          var i = 0; while (i < n) {
-            val r = keep(i)
-            if (sv.isNullAt(r)) dv.putNull(i) else dv.putBoolean(i, sv.getBoolean(r))
-            i += 1
-          }
-        case ShortType =>
-          var i = 0; while (i < n) {
-            val r = keep(i)
-            if (sv.isNullAt(r)) dv.putNull(i) else dv.putShort(i, sv.getShort(r))
-            i += 1
-          }
-        case ByteType =>
-          var i = 0; while (i < n) {
-            val r = keep(i)
-            if (sv.isNullAt(r)) dv.putNull(i) else dv.putByte(i, sv.getByte(r))
-            i += 1
-          }
-        case StringType | BinaryType =>
-          var i = 0; while (i < n) {
-            val r = keep(i)
-            if (sv.isNullAt(r)) dv.putNull(i)
-            else { val b = sv.getBinary(r); dv.putByteArray(i, b, 0, b.length): Unit }
-            i += 1
-          }
-        case d: DecimalType =>
-          var i = 0; while (i < n) {
-            val r = keep(i)
-            if (sv.isNullAt(r)) dv.putNull(i)
-            else dv.putDecimal(i, sv.getDecimal(r, d.precision, d.scale), d.precision)
-            i += 1
-          }
+          copy((i, r) => dv.putLong(i, sv.getLong(r)))
+        case IntegerType | DateType => copy((i, r) => dv.putInt(i, sv.getInt(r)))
+        case DoubleType => copy((i, r) => dv.putDouble(i, sv.getDouble(r)))
+        case FloatType => copy((i, r) => dv.putFloat(i, sv.getFloat(r)))
+        case BooleanType => copy((i, r) => dv.putBoolean(i, sv.getBoolean(r)))
+        case ShortType => copy((i, r) => dv.putShort(i, sv.getShort(r)))
+        case ByteType => copy((i, r) => dv.putByte(i, sv.getByte(r)))
+        case StringType | BinaryType => copy { (i, r) =>
+          val b = sv.getBinary(r); dv.putByteArray(i, b, 0, b.length): Unit }
+        case d: DecimalType => copy((i, r) =>
+          dv.putDecimal(i, sv.getDecimal(r, d.precision, d.scale), d.precision))
         case other => throw new IllegalStateException(
           s"snapshotlog: vectorized copy unsupported for $other")
       }
@@ -2154,23 +2207,17 @@ private[sources] class SnapshotFileReader(file: String, required: StructType,
   private val absentFill: Array[Any] =
     required.fields.map(f => existenceDefaults.getOrElse(f.name, null))
 
-  // fresh copy per reader: the projection set below must not leak into
-  // the shared session conf the factory captured
-  private val conf =
-    hadoopConf.map(new Configuration(_)).getOrElse(new Configuration())
+  // delete files read under the session conf; the data file under a
+  // fresh copy, so the projection set below does not leak into the
+  // shared session conf the factory captured
+  private val deleteConf = hadoopConf.getOrElse(new Configuration())
+  private val conf = new Configuration(deleteConf)
   private val path = new Path(file)
 
-  /** Physical column name to read for required column `n` in THIS file:
-    * None = forced null-fill (field-id says the file predates the
-    * column); identity unless the planner supplied a rename remap. */
-  private def phys(n: String): Option[String] = physMap.get(n) match {
-    case Some("") => None
-    case Some(p) => Some(p)
-    case None => Some(n)
-  }
+  private def phys(n: String) = SnapshotLogReaderFactory.phys(physMap, n)
 
   private def deleteSchemaOf(df: String): Seq[String] =
-    SnapshotDeletes.schemaOf(df, hadoopConf.getOrElse(new Configuration()))
+    SnapshotDeletes.schemaOf(df, deleteConf)
   private val (posDeleteFiles, eqDeleteFiles) = deleteFiles.partition(df =>
     SnapshotDeletes.isVector(df) ||
       SnapshotDeletes.isPositional(deleteSchemaOf(df)))
@@ -2238,7 +2285,7 @@ private[sources] class SnapshotFileReader(file: String, required: StructType,
       val physPos = projPhys.zipWithIndex.toMap
       eqSets = eqApplicable.map { case (df, keyCols) =>
         val idxs = keyCols.map(k => physPos(phys(k).get)).toArray
-        (idxs, loadEqKeys(df))
+        (idxs, SnapshotDeletes.loadEqKeys(df, deleteConf))
       }
       val b = ParquetReader.builder(new GroupReadSupport(), path)
         .withConf(conf)
@@ -2247,20 +2294,12 @@ private[sources] class SnapshotFileReader(file: String, required: StructType,
     SnapshotLogReaderFactory.setInputFile(file, range)
   }
 
-  /** Canonical value space shared by data rows and delete keys (both
-    * sides conform at write time): integrals → Long, floats → Double,
-    * UTF8 binary → String, boolean → Boolean. */
-  private def canonAt(g: Group, idx: Int, t: org.apache.parquet.schema.Type): Any =
-    SnapshotDeletes.canonGroup(g, idx, t)
-
-  private def loadEqKeys(df: String): java.util.HashSet[Vector[Any]] =
-    SnapshotDeletes.loadEqKeys(df, hadoopConf.getOrElse(new Configuration()))
-
   /** True iff the current data row's key tuple appears in ANY equality
-    * delete set (null key components never match — SQL equality). */
+    * delete set (null key components never match — SQL equality), in the
+    * canonical value space of [[SnapshotDeletes.canonGroup]]. */
   private def eqMatched(g: Group): Boolean =
     eqSets.exists { case (idxs, set) =>
-      val tuple = idxs.map(i => canonAt(g, i, projType.getType(i))).toVector
+      val tuple = idxs.map(i => SnapshotDeletes.canonGroup(g, i, projType.getType(i))).toVector
       !tuple.contains(null) && set.contains(tuple)
     }
 
@@ -2271,8 +2310,8 @@ private[sources] class SnapshotFileReader(file: String, required: StructType,
     * file_path — opened once per task, filtered to this data file. The
     * scan walks data rows sequentially, so membership is a merge-walk
     * pointer, O(1) per row. */
-  private val deletedPos: Array[Long] = SnapshotDeletes.loadPositions(
-    posDeleteFiles, file, hadoopConf.getOrElse(new Configuration()))
+  private val deletedPos: Array[Long] =
+    SnapshotDeletes.loadPositions(posDeleteFiles, file, deleteConf)
   private var delPtr = 0
   // current row's ordinal within the data FILE (not the range): ranged
   // splits start past the skipped row groups so positional deletes keep

@@ -22,6 +22,10 @@ object GraftSqlShim {
   def unsetInputFile(): Unit =
     org.apache.spark.rdd.InputFileBlockHolder.unset()
 
+  /** `dt` with every nested field, element and map value nullable
+    * (Catalyst's `private[spark]` `asNullable`). */
+  def asNullable(dt: types.DataType): types.DataType = dt.asNullable
+
   /** `c`, declared non-nullable: Catalyst's own `AssertNotNull`, for a
     * value the caller knows is never null but whose expression (a map
     * lookup, say) Catalyst types as nullable. Fails the task if a null

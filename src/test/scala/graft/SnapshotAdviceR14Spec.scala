@@ -7,8 +7,9 @@ import graft.TestSpark.spark
 import graft.sources.{SnapshotLog, SnapshotPartition}
 
 /** Regressions for the r13→r14 advisory findings: exactness of the
-  * metadata-answered aggregate path, dropped-column containment in the
-  * bulk read, mainline isolation of the CDC upsert, and writer/pruner
+  * metadata-answered aggregate path, dropped-column containment in
+  * `SnapshotLog.read` (the programmatic read, once a separate bulk path
+  * and now the DSv2 scan), mainline isolation of the CDC upsert, and writer/pruner
   * agreement of the day transform in far-range long arithmetic.
   */
 class SnapshotAdviceR14Spec extends AnyFunSuite {

@@ -16,8 +16,8 @@ import graft.sources.SnapshotLog
   * `columnarOk` only covered REQUIRED columns, a scan that pruned the
   * renamed key away stayed columnar and returned the wrong answer.
   * Fixed by resolving eq-delete key columns through the snapshot's
-  * field-id map alongside the projection (physMapFor), which both remaps
-  * the row reader's probe and refuses columnar for affected files.
+  * field-id map alongside the projection (physMapFor), which remaps the
+  * probe of both readers.
   */
 class SnapshotAdviceR15Spec extends AnyFunSuite {
   import spark.implicits._
@@ -54,10 +54,10 @@ class SnapshotAdviceR15Spec extends AnyFunSuite {
     assert(pruned.count() === expected.size,
       "deleted rows resurrected under a pruned projection")
     assert(pruned.select("k").as[Long].collect().sorted === expected.toArray)
-    // a remapped eq key must refuse columnar (the row reader honors the
-    // field-id remap; the vector reader is name-based)
-    assert(!columnar(pruned),
-      "scan over a renamed eq-delete key must take the row reader")
+    // both readers honor the field-id remap of an eq key, so the scan
+    // stays on the vectorized reader
+    assert(columnar(pruned),
+      "scan over a renamed eq-delete key must stay vectorized")
 
     // projecting the renamed key works too, served under the new name
     val full = t.select("k", "label")

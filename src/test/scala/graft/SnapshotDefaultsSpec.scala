@@ -56,11 +56,16 @@ class SnapshotDefaultsSpec extends AnyFunSuite {
     SnapshotLog.commit(
       spark.range(50, 60).selectExpr("id AS k", "'real' AS tag"),
       root, overwrite = false, 3000L)
+    // read() is the DSv2 scan on the vectorized reader; with `_file`
+    // projected it takes the row reader, which must serve the same rows
     val bulk = SnapshotLog.read(spark, root)
     assert(bulk.filter(col("k") < 50).select("tag").distinct()
       .as[String].collect().toSeq === Seq("unknown"))
     assert(bulk.filter(col("k") >= 50).select("tag").distinct()
       .as[String].collect().toSeq === Seq("real"))
+    assert(bulk.select("k", "tag").as[(Long, String)].collect().sorted ===
+      bulk.select("k", "tag", "_file").as[(Long, String, String)].collect()
+        .map(t => (t._1, t._2)).sorted)
   }
 
   test("SQL DDL end-to-end: ALTER ADD COLUMN DEFAULT + INSERT omitting " +

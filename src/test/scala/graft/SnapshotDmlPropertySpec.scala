@@ -10,8 +10,9 @@ import graft.sources.SnapshotLog
   * random (but seeded-deterministic) sequence of appends, positional
   * deletes, equality deletes, merge-on-read updates, upserts and
   * compactions is applied BOTH to the real table and to an in-memory
-  * model; after every operation, both read paths (bulk and DSv2) must
-  * equal the model exactly. This is the net that catches interplay
+  * model; after every operation, both snapshot readers (the vectorized
+  * one and the row reader, which a `_file` projection forces) must equal
+  * the model exactly. This is the net that catches interplay
   * orderings no hand-written scenario covers — stacked delete flavors,
   * update-after-delete, compaction mid-sequence, expiry at the end.
   * The branch rows run the same DML on a branch forked after the seed
@@ -25,16 +26,18 @@ class SnapshotDmlPropertySpec extends AnyFunSuite {
     spark.read.format("snapshotlog").load(root)
       .as[(Long, Long)].collect().toMap
 
-  private def bulkStateOf(root: String): Map[Long, Long] =
-    SnapshotLog.read(spark, root).as[(Long, Long)].collect().toMap
+  private def rowStateOf(root: String): Map[Long, Long] =
+    SnapshotLog.read(spark, root).select("k", "v", "_file")
+      .as[(Long, Long, String)].collect().map(t => t._1 -> t._2).toMap
 
   private def branchStateOf(root: String, b: String): Map[Long, Long] =
     spark.read.format("snapshotlog").option("branch", b).load(root)
       .as[(Long, Long)].collect().toMap
 
-  private def branchBulkStateOf(root: String, b: String): Map[Long, Long] =
+  private def branchRowStateOf(root: String, b: String): Map[Long, Long] =
     SnapshotLog.read(spark, root, asOfVersion = Some(SnapshotLog.refs(spark, root)(b)))
-      .as[(Long, Long)].collect().toMap
+      .select("k", "v", "_file")
+      .as[(Long, Long, String)].collect().map(t => t._1 -> t._2).toMap
 
   // (seed, shard threshold, ref): the None-shard rows run the legacy
   // single-manifest layout; the Some(4) rows force MANIFEST-LIST
@@ -176,12 +179,12 @@ class SnapshotDmlPropertySpec extends AnyFunSuite {
           sawShards = true
         val ctx = s"seed=$seed step=$step ops=${opNames.mkString(",")}"
         assert(stateOf(root) === mainNow, s"DSv2 read diverged ($ctx)")
-        assert(bulkStateOf(root) === mainNow, s"bulk read diverged ($ctx)")
+        assert(rowStateOf(root) === mainNow, s"row reader diverged ($ctx)")
         branch.foreach { b =>
           assert(branchStateOf(root, b) === model,
             s"DSv2 branch read diverged ($ctx)")
-          assert(branchBulkStateOf(root, b) === model,
-            s"bulk branch read diverged ($ctx)")
+          assert(branchRowStateOf(root, b) === model,
+            s"row reader diverged on the branch ($ctx)")
         }
         // refresh the incremental MV mid-run at a couple of random points
         // (multi-version catch-up ranges), not just at the end

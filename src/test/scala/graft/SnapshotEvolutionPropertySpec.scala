@@ -59,13 +59,15 @@ class SnapshotEvolutionPropertySpec extends AnyFunSuite {
           spark.read.format("snapshotlog").load(root)
             .as[(Long, Long, Long)].collect().map(t => t._1 -> (t._2, t._3)).toMap
 
-      def bulkStateOf: Map[Long, (Long, Long)] =
+      // the same state through the row reader (`_file` forces it)
+      def rowStateOf: Map[Long, (Long, Long)] =
         if (!evolved)
-          SnapshotLog.read(spark, root)
-            .as[(Long, Long)].collect().map(t => t._1 -> (t._2, Default)).toMap
+          SnapshotLog.read(spark, root).select("k", "v", "_file")
+            .as[(Long, Long, String)].collect().map(t => t._1 -> (t._2, Default)).toMap
         else
-          SnapshotLog.read(spark, root).select("k", "v", "flag")
-            .as[(Long, Long, Long)].collect().map(t => t._1 -> (t._2, t._3)).toMap
+          SnapshotLog.read(spark, root).select("k", "v", "flag", "_file")
+            .as[(Long, Long, Long, String)].collect()
+            .map(t => t._1 -> (t._2, t._3)).toMap
 
       appendBatch(25)
       val evolveAt = 3 + rnd.nextInt(5)
@@ -132,7 +134,7 @@ class SnapshotEvolutionPropertySpec extends AnyFunSuite {
         }
         val ctx = s"seed=$seed step=$step ops=${opNames.mkString(",")}"
         assert(stateOf === model, s"DSv2 read diverged ($ctx)")
-        assert(bulkStateOf === model, s"bulk read diverged ($ctx)")
+        assert(rowStateOf === model, s"row reader diverged ($ctx)")
       }
 
       // end: fold + expire, the defaults must SURVIVE physically

@@ -206,16 +206,17 @@ class SnapshotLogCatalogSpec extends AnyFunSuite {
     assert(scanExec.supportsColumnar,
       "DSv2 snapshot scan should take the vectorized (ColumnarBatch) path")
     assert(df.count() === 100)
-    // schema evolution demotes to the row reader for safety (pre-evolution
-    // files lack the new column), result still correct
+    // schema evolution stays vectorized: the reader serves the column
+    // pre-evolution files lack as null
     spark.sql("ALTER TABLE snap.spec8.t ADD COLUMN tag STRING")
     val evolved = spark.sql("SELECT k, tag FROM snap.spec8.t WHERE k < 10")
     val scan2 = evolved.queryExecution.executedPlan.collect {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
     }.head
-    assert(!scan2.supportsColumnar)
+    assert(scan2.supportsColumnar)
     assert(evolved.count() === 10)
-    // the _file projection takes the row reader too
+    assert(evolved.where("tag IS NULL").count() === 10)
+    // the _file projection takes the row reader
     val withFile = spark.sql("SELECT k, _file FROM snap.spec8.t WHERE k < 10")
     assert(withFile.count() === 10)
   }

@@ -177,9 +177,12 @@ class SnapshotSpjSpec extends AnyFunSuite {
     val leaf = single.queryExecution.executedPlan.collectLeaves().head
     assert(leaf.outputPartitioning.toString.startsWith("UnknownPartitioning"),
       s"truncate spec must not key-group the scan: ${leaf.outputPartitioning}")
-    // one task per FILE (20 tuples × 1 file), not one per tuple-group
-    assert(single.rdd.getNumPartitions >= 20,
-      "per-file scan parallelism must survive a truncate spec")
+    // one task per FILE (20 tuples × 1 file), not one per tuple-group;
+    // a 1-byte task size keeps small files from sharing a task
+    withConfs("spark.sql.files.maxPartitionBytes" -> "1") {
+      assert(spark.table("snap.spj.tr_l").rdd.getNumPartitions >= 20,
+        "per-file scan parallelism must survive a truncate spec")
+    }
     noBroadcast {
       val j = spark.table("snap.spj.tr_l")
         .join(spark.table("snap.spj.tr_r"), "k")

@@ -111,7 +111,9 @@ class SnapshotVectorDeleteSpec extends AnyFunSuite {
     val q = t.select("k", "v")
     assert(columnar(q))
     val dsv2 = q.select("k").as[Long].collect().sorted
-    val bulk = SnapshotLog.read(spark, root).select("k").as[Long].collect().sorted
+    // `SnapshotLog.read` with `_file` projected: the row reader
+    val bulk = SnapshotLog.read(spark, root).select("k", "_file")
+      .as[(Long, String)].collect().map(_._1).sorted
     assert(dsv2 === bulk)
     val expected = (0L until 8000L)
       .filterNot(k => k % 31 == 0 || Set(3L, 17L, 44L).contains(k % 50)).toArray

@@ -13,7 +13,8 @@ import graft.TestSpark.spark
   * `readIncremental`, `changes`, compaction input — goes through the DSv2
   * scan, so merge-on-read deletes, field-id renames and dropped columns
   * apply the same way on each, no read plans a delete join, and
-  * `input_file_name()` names the file a row came from.
+  * `input_file_name()` names the file a row came from. Evolved tables stay
+  * on the vectorized reader, and small files share a task.
   */
 class SnapshotOneScanSpec extends AnyFunSuite {
   import spark.implicits._
@@ -30,6 +31,82 @@ class SnapshotOneScanSpec extends AnyFunSuite {
 
   private def keys(df: DataFrame): Seq[Long] =
     df.select("k").as[Long].collect().sorted.toSeq
+
+  private def batchScan(df: DataFrame) =
+    df.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.head
+
+  /** Rows as strings, sorted: one value space for any schema. */
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("evolved tables read vectorized, with the row reader's answers") {
+    import org.apache.spark.sql.types._
+    val root = freshRoot("evolved")
+    SnapshotLog.commit(spark.range(0, 30).selectExpr("id AS k",
+      "concat('s', CAST(id AS STRING)) AS s", "id * 2 AS gone",
+      "named_struct('a', id, 'b', CAST(id AS STRING)) AS st"),
+      root, overwrite = true, 100L, 2)
+    SnapshotLog.addColumn(spark, root, "x", LongType, None, 200L)
+    SnapshotLog.addColumn(spark, root, "d", IntegerType, Some("7"), 300L)
+    SnapshotLog.renameColumn(spark, root, "s", "label", 400L)
+    // dropped then re-added: the old files' `gone` is another column
+    SnapshotLog.dropColumn(spark, root, "gone", 500L)
+    SnapshotLog.addColumn(spark, root, "gone", LongType, None, 600L)
+    SnapshotLog.commit(spark.range(30, 40).selectExpr("id AS k",
+      "concat('s', CAST(id AS STRING)) AS label",
+      "named_struct('a', id, 'b', CAST(id AS STRING)) AS st",
+      "id AS x", "CAST(NULL AS INT) AS d", "id AS gone"),
+      root, overwrite = false, 700L, 1)
+    val t = spark.read.format("snapshotlog").load(root)
+    for (cols <- Seq(Seq("k", "label", "x", "d", "gone"), Seq("k", "st"),
+                     Seq("d", "label"), Seq("x", "d"))) {
+      val vec = t.select(cols.map(col): _*)
+      assert(batchScan(vec).supportsColumnar, cols.mkString(","))
+      // `_file` forces the row reader; dropped after the read
+      val row = t.select((cols :+ "_file").map(col): _*)
+      assert(!batchScan(row).supportsColumnar)
+      assert(rows(vec) === row.collect().map(r =>
+        org.apache.spark.sql.Row.fromSeq(r.toSeq.init).toString).sorted.toSeq,
+        cols.mkString(","))
+    }
+    val got = t.select("k", "label", "x", "d", "gone", "st.a")
+      .as[(Long, String, Option[Long], Option[Int], Option[Long], Long)]
+      .collect().sortBy(_._1)
+    assert(got.toSeq === (0L until 40L).map(k =>
+      if (k < 30) (k, s"s$k", None, Some(7), None, k)
+      else (k, s"s$k", Some(k), None, Some(k), k)))
+    // the compaction input takes the same reader and answers
+    SnapshotLog.rewriteDataFiles(spark, root, 800L)
+    assert(rows(SnapshotLog.read(spark, root).select("k", "label", "x", "d", "gone"))
+      === rows(t.select("k", "label", "x", "d", "gone")))
+  }
+
+  test("small files share a task; deletes, renames and input_file_name() " +
+       "stay per file") {
+    val root = freshRoot("packed")
+    SnapshotLog.commit(spark.range(0, 600).selectExpr("id AS k", "id % 7 AS g"),
+      root, overwrite = true, 100L, 60)
+    SnapshotLog.renameColumn(spark, root, "g", "grp", 200L)
+    SnapshotLog.deleteWhereMoR(spark, root, col("k") % 5 === 0, 300L)
+    SnapshotLog.deleteEqualityMoR(spark, root, Seq(3L).toDF("grp"), 400L)
+    def norm(p: String) = p.replaceFirst("^file:/*", "/")
+    val files = SnapshotLog.snapshots(spark, root).last.files.map(norm).toSet
+    assert(files.size === 60)
+    val expected = (0L until 600L).filterNot(k => k % 5 == 0 || k % 7 == 3)
+    val t = spark.read.format("snapshotlog").load(root)
+    for (df <- Seq(t, t.select("k", "grp", "_file"), SnapshotLog.read(spark, root))) {
+      val tasks = batchScan(df).inputRDD.getNumPartitions
+      assert(tasks < 60, s"$tasks tasks for 60 small files")
+      assert(keys(df) === expected)
+      val perFile = df.groupBy(input_file_name().as("f")).count()
+        .as[(String, Long)].collect()
+      assert(perFile.map(p => norm(p._1)).toSet === files)
+    }
+    assert(t.select(col("_file"), input_file_name().as("f")).as[(String, String)]
+      .collect().forall { case (a, b) => norm(a) == norm(b) })
+  }
 
   test("input_file_name() names each row's data file on snapshot scans") {
     val root = freshRoot("ifn")
